@@ -203,7 +203,11 @@ def lsh_candidate_pairs(
         sizes = exploded.groupBy("band", "key").agg(
             F.count(F.lit(1)).alias("__bn")
         ).where(F.col("__bn") <= F.lit(max_bucket_size))
-        exploded = exploded.join(sizes.select("band", "key"), ["band", "key"])
+        # shuffle_hash: both sides are the corpus-sized band table,
+        # whose explode-derived size estimate reads small (see below)
+        exploded = exploded.join(
+            sizes.select("band", "key").hint("shuffle_hash"), ["band", "key"]
+        )
     a = exploded.alias("a")
     b = exploded.alias("b")
     # shuffle_hash (guide §3.1): BOTH sides of the bucket self-join

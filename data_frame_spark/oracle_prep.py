@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from data_frame_spark.operators.drift import PSI_VALUE_SCALE
 from data_frame_spark.operators.text import TOKEN_PATTERN
+from data_frame_spark.session import build_parallel
 
 CUSUM_TARGET_MICRO = 500_000
 CUSUM_THRESHOLD_MICRO = 5_000_000
@@ -838,24 +839,13 @@ def kcore_spark(spark, sf_dir, cooccur_und=None):
     return k_core(_part_cooccur_pairs(spark, sf_dir), k=5, rounds=4)
 
 
-def lpa_oracle_sql(iterations: int = 4) -> str:
-    """DuckDB twin of ``operators/graph.py:label_propagation`` on the
-    bidirectional part<->supplier graph (the pagerank fixture): the
-    synchronous min-tie-break rounds unrolled into chained CTE pairs
-    — count (node, label) in-neighbor votes, then the deterministic
-    (count DESC, label ASC) argmax via ROW_NUMBER (the single-node
-    equivalent of the Spark side's map-combinable MAX(struct))."""
-    if iterations < 1:
-        raise ValueError("lpa_oracle_sql needs >= 1 iteration")
-    body = ",\n    ".join(
-        ["WITH " + pagerank_edges_sql().strip().rstrip()] + _lpa_ctes(iterations)
-    )
-    return f"{body}\n    SELECT node, label FROM l{iterations}"
-
-
 def _lpa_ctes(iterations: int) -> list[str]:
-    """The LPA round chain (assumes the pagerank ``e`` CTE is in
-    scope) — shared by lpa_oracle_sql and the graph_suite family."""
+    """The LPA round chain of the graph_suite family (assumes the
+    pagerank ``e`` CTE is in scope): synchronous min-tie-break rounds
+    unrolled into chained CTE pairs — count (node, label) in-neighbor
+    votes, then the deterministic (count DESC, label ASC) argmax via
+    ROW_NUMBER (the single-node equivalent of the Spark side's
+    MAX(struct))."""
     parts = [
         """nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM e
                UNION SELECT DISTINCT dst FROM e),
@@ -881,7 +871,7 @@ def _lpa_ctes(iterations: int) -> list[str]:
 
 def _part_supplier_edges(spark, sf_dir):
     """The bidirectional part<->supplier fixture edges — ONE
-    definition shared by the LPA/BFS twins and the graph_suite family
+    definition shared by the graph_suite family and the PPR twin
     (identical construction to pagerank_part_supplier; round-13
     review: three inline copies had crept in)."""
     from pyspark.sql import functions as F
@@ -895,8 +885,7 @@ def _part_supplier_edges(spark, sf_dir):
 
 
 def _part_seeds(spark, sf_dir):
-    """The every-100th-part BFS seed set (mirrors bfs_oracle_sql's
-    d0)."""
+    """The every-100th-part seed set (mirrors _bfs_ctes' d0)."""
     from pyspark.sql import functions as F
 
     return (
@@ -905,14 +894,6 @@ def _part_seeds(spark, sf_dir):
         .select(F.col("l_partkey").cast("long").alias("node"))
         .distinct()
     )
-
-
-def lpa_spark(spark, sf_dir):
-    """The Spark side the future registry row will use verbatim —
-    identical edge construction to pagerank_part_supplier."""
-    from data_frame_spark.operators.graph import label_propagation
-
-    return label_propagation(_part_supplier_edges(spark, sf_dir), iterations=4)
 
 
 def _prep_tmp_dir(name: str, sf_dir: str, clean: bool = False) -> str:
@@ -1088,23 +1069,12 @@ def format_roundtrip_family_spark(spark, sf_dir):
     return o.unionByName(j)
 
 
-def bfs_oracle_sql(max_hops: int = 4) -> str:
-    """DuckDB twin of ``operators/graph.py:hop_distances`` on the
-    bidirectional part<->supplier graph, seeds = parts with
-    partkey % 100 = 0: the min-plus relaxation unrolled into chained
-    CTE pairs (propagate one hop with a MIN groupBy, then min-merge
-    with the running table) — the integer-loop replay recipe."""
-    if max_hops < 0:
-        raise ValueError("bfs_oracle_sql needs max_hops >= 0")
-    body = ",\n    ".join(
-        ["WITH " + pagerank_edges_sql().strip().rstrip()] + _bfs_ctes(max_hops)
-    )
-    return f"{body}\n    SELECT node, hops FROM d{max_hops}"
-
-
 def _bfs_ctes(max_hops: int) -> list[str]:
-    """The BFS relaxation chain (assumes the pagerank ``e`` CTE is in
-    scope) — shared by bfs_oracle_sql and the graph_suite family."""
+    """The BFS relaxation chain of the graph_suite family (assumes
+    the pagerank ``e`` CTE is in scope): seeds = parts with
+    partkey % 100 = 0, then the min-plus relaxation unrolled into
+    chained CTE pairs (propagate one hop with a MIN groupBy, then
+    min-merge with the running table)."""
     parts = [
         """d0 AS MATERIALIZED (
       SELECT DISTINCT CAST(l_partkey AS BIGINT) AS node,
@@ -1123,100 +1093,6 @@ def _bfs_ctes(max_hops: int) -> list[str]:
       GROUP BY node)"""
         )
     return parts
-
-
-def bfs_spark(spark, sf_dir):
-    """The Spark side the future registry row will use verbatim —
-    same edge construction as pagerank_part_supplier; seeds are the
-    every-100th parts."""
-    from data_frame_spark.operators.graph import hop_distances
-
-    return hop_distances(
-        _part_supplier_edges(spark, sf_dir), _part_seeds(spark, sf_dir), max_hops=4
-    )
-
-
-def graph_suite_family_oracle_sql(iterations: int = 3, max_hops: int = 3) -> str:
-    """Facet union of the three prepped graph twins on their shared
-    (node, value) shape — the r14 single-slot registration candidate:
-    'triangles' (parts-co-ordered graph), 'lpa_label' and 'bfs_hops'
-    (both on the pagerank part<->supplier edges, whose CTEs appear
-    ONCE). The triangle chain is the SHARED _tri_ctes() — the
-    standalone twin and this family can never pin different graphs;
-    its CTE names (pe/tn/tri/pern/tfin) are disjoint from the
-    LPA (nodes/l*/c*) and BFS (d*/r*) chains."""
-    body = ",\n    ".join(
-        ["WITH " + pagerank_edges_sql().strip().rstrip()]
-        + _lpa_ctes(iterations)
-        + _bfs_ctes(max_hops)
-        + [_tri_ctes()]
-    )
-    return f"""{body}
-    SELECT 'triangles' AS facet, node, triangles AS value FROM tfin
-    UNION ALL
-    SELECT 'lpa_label', node, label FROM l{iterations}
-    UNION ALL
-    SELECT 'bfs_hops', node, hops FROM d{max_hops}
-    """
-
-
-def graph_suite_family_spark(spark, sf_dir, cooccur_und=None):
-    """Spark side of the r14 graph_suite_family candidate: the
-    part<->supplier edge list is MATERIALIZED once (eager checkpoint
-    here; the LPA/BFS facets take it with prepared=True — distinct by
-    construction, so per-facet re-canonicalization would be waste);
-    the triangle facet runs on its own parts-co-ordered graph. All
-    three outputs share (node, BIGINT value).
-
-    The three facets are INDEPENDENT subtrees built from three driver
-    threads. The original r14 rationale (overlapping eager per-round
-    checkpoint JOBS) is gone since r18 — LPA/BFS rounds now chain
-    into the single materializing action and construction is mostly
-    plan-side — but the threads still overlap the remaining
-    construction-time jobs (the eager edge checkpoint, the lazy-
-    checkpoint materializations inside the triangle facet) and cost
-    nothing when there is nothing to overlap. Determinism is
-    untouched: each facet's result is integer-exact under any
-    partitioning/ordering, and the threads build disjoint DataFrames
-    (r14 measurement: ~11 s sequential -> ~7 s overlapped; r18: the
-    family is LPA-facet-bound, threading neutral)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import functions as F
-
-    from data_frame_spark.operators.graph import hop_distances, label_propagation
-
-    edges = _part_supplier_edges(spark, sf_dir).localCheckpoint(eager=True)
-    seeds = _part_seeds(spark, sf_dir)
-
-    # 3 rounds/hops (vs the standalone twins' 4): per-round latency is
-    # job-barrier-bound on the tiny vertex tables, and three rounds
-    # already demonstrate multi-hop propagation — a ~20% row-cost trim
-    # measured at sf0.1
-    def tri_facet():
-        return triangle_spark(spark, sf_dir, cooccur_und=cooccur_und).select(
-            F.lit("triangles").alias("facet"), "node",
-            F.col("triangles").alias("value"),
-        )
-
-    def lpa_facet():
-        return label_propagation(edges, iterations=3, prepared=True).select(
-            F.lit("lpa_label").alias("facet"), "node",
-            F.col("label").alias("value"),
-        )
-
-    def bfs_facet():
-        return hop_distances(edges, seeds, max_hops=3, prepared=True).select(
-            F.lit("bfs_hops").alias("facet"), "node",
-            F.col("hops").alias("value"),
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        tri, lpa, bfs = (
-            f.result()
-            for f in [pool.submit(fn) for fn in (tri_facet, lpa_facet, bfs_facet)]
-        )
-    return tri.unionByName(lpa).unionByName(bfs)
 
 
 GAPFILL_BUCKET_US = 86400 * 1000000  # daily buckets
@@ -1638,8 +1514,6 @@ def decontamination_family_spark(spark, sf_dir):
     overlaps the g13 checkpoint's synchronous stage materialization
     instead of waiting behind it — disjoint subtrees, identical
     output."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import functions as F
 
     from data_frame_spark.operators.dedup import (
@@ -1650,10 +1524,7 @@ def decontamination_family_spark(spark, sf_dir):
     from data_frame_spark.operators.distributed import ensure_parallelism
     from data_frame_spark.queries import t
 
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        audit_future = pool.submit(decontamination_leg, spark, sf_dir, "audit")
-
+    def shared_g13_legs():
         docs = ensure_parallelism(t(spark, sf_dir, "documents"))
         # the ONE shared-builder definition (never an inline rebuild —
         # the legs' contract is "exactly what _hashed_ngrams would build")
@@ -1662,7 +1533,7 @@ def decontamination_family_spark(spark, sf_dir):
         )
         bench_g = g13.where(F.col("doc_id") % 50 == 0)
         bench = docs.where(F.col("doc_id") % 50 == 0)
-        legs = {
+        return {
             "bloom": bloom_contamination(
                 docs, bench, "text", "doc_id", n=13, m_bits=_DECON_BLOOM_M,
                 corpus_grams=g13, bench_grams=bench_g,
@@ -1671,10 +1542,12 @@ def decontamination_family_spark(spark, sf_dir):
                 docs, bench, "text", "doc_id", n=13,
                 corpus_grams=g13, bench_grams=bench_g,
             ),
-            "audit": audit_future.result(),
         }
-    finally:
-        pool.shutdown()
+
+    legs, audit = build_parallel(
+        spark, shared_g13_legs, lambda: decontamination_leg(spark, sf_dir, "audit")
+    )
+    legs["audit"] = audit
 
     def pad(leg: str):
         return legs[leg].select(
@@ -1918,144 +1791,6 @@ def pivot_melt_spark(spark, sf_dir):
     )
 
 
-#: the dq_verify_orders candidate's rule set — EXPLICIT bounded rule
-#: list (code, never data): three rules that FIRE on the fixture
-#: (range, accepted domain, and the uniqueness rule on the repeating
-#: o_custkey — the latter exercising the surplus arithmetic
-#: non-vacuously) and three that pass (completeness, o_orderkey
-#: uniqueness, FK integrity).
-DQ_RULES = [
-    ("not_null", "custkey_not_null", "o_custkey"),
-    ("unique", "orderkey_unique", ["o_orderkey"]),
-    ("unique", "custkey_unique", ["o_custkey"]),
-    ("in_range", "totalprice_range", "o_totalprice", 0.0, 250000.0),
-    ("accepted_values", "status_domain", "o_orderstatus", ["O", "F"]),
-]
-
-
-def dq_oracle_sql() -> str:
-    """DuckDB twin of the dq_verify_orders candidate
-    (operators/dq.py:verify over orders + the customer FK): each rule
-    is the straightforward aggregate replay — row-local rules one
-    shared scan, uniqueness COUNT(*) − COUNT(DISTINCT-tuple) via a
-    null-safe DISTINCT subquery, FK a LEFT-join miss count over
-    non-NULL keys. CTE names (dq*) disjoint from every other chain."""
-    return """
-    WITH dqb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                        CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v_nn,
-                        CAST(SUM(CASE WHEN o_totalprice IS NOT NULL
-                                       AND (o_totalprice < 0.0 OR o_totalprice > 250000.0)
-                                      THEN 1 ELSE 0 END) AS BIGINT) AS v_rng,
-                        CAST(SUM(CASE WHEN o_orderstatus IS NOT NULL
-                                       AND o_orderstatus NOT IN ('O', 'F')
-                                      THEN 1 ELSE 0 END) AS BIGINT) AS v_dom
-                 FROM orders),
-    dqu1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                    CAST(COUNT(*) - (SELECT COUNT(*) FROM
-                          (SELECT DISTINCT o_orderkey FROM orders)) AS BIGINT) AS v
-             FROM orders),
-    dqu2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                    CAST(COUNT(*) - (SELECT COUNT(*) FROM
-                          (SELECT DISTINCT o_custkey FROM orders)) AS BIGINT) AS v
-             FROM orders),
-    dqf AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v
-            FROM (SELECT o_custkey FROM orders WHERE o_custkey IS NOT NULL) o
-            LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
-              ON o.o_custkey = c.c_custkey)
-    SELECT 'custkey_not_null' AS rule_id, 'not_null' AS rule,
-           'o_custkey' AS "column", n AS n_rows, v_nn AS n_violations,
-           v_nn = 0 AS passed
-    FROM dqb
-    UNION ALL
-    SELECT 'totalprice_range', 'in_range', 'o_totalprice', n, v_rng,
-           v_rng = 0 FROM dqb
-    UNION ALL
-    SELECT 'status_domain', 'accepted_values', 'o_orderstatus', n,
-           v_dom, v_dom = 0 FROM dqb
-    UNION ALL
-    SELECT 'orderkey_unique', 'unique', 'o_orderkey', n, v, v = 0 FROM dqu1
-    UNION ALL
-    SELECT 'custkey_unique', 'unique', 'o_custkey', n, v, v = 0 FROM dqu2
-    UNION ALL
-    SELECT 'custkey_fk', 'ref_integrity', 'o_custkey', n, v, v = 0 FROM dqf
-    """
-
-
-def dq_verify_spark(spark, sf_dir):
-    """The Spark side the future dq_verify_orders row would use
-    verbatim — the DQ_RULES set over orders plus the customer FK
-    integrity rule."""
-    from data_frame_spark.operators import dq
-    from data_frame_spark.queries import t
-
-    orders = t(spark, sf_dir, "orders")
-    customer = t(spark, sf_dir, "customer")
-    rules = list(DQ_RULES) + [
-        ("ref_integrity", "custkey_fk", "o_custkey", customer, "c_custkey"),
-    ]
-    return dq.verify(orders, rules)
-
-
-def _lookup_family_leg_sqls() -> dict[str, str]:
-    """The two standalone lookup oracles, lazy-imported while the
-    rows exist (the drift-free contract)."""
-    from data_frame_spark.queries import ORACLE
-
-    return {
-        "asof": ORACLE["asof_multi_value_lookup"],
-        "interpolated": ORACLE["interpolated_lookup_value"],
-    }
-
-
-def lookup_family_oracle_sql() -> str:
-    """Facet union of the as-of and interpolated lookup rows — the
-    r19 funding-merge candidate pre-specced at r17 close (net −1
-    WITHIN r19's due set: both parents are r17-checked, so the merge
-    frees exactly the slot dq_verify_orders needs; neither is in the
-    bench HEADLINE). `user_id` is the SHARED column; the as-of leg's
-    event ids / view values are NULL on the interpolated leg and the
-    probe/interpolated columns NULL on the as-of leg. CTE names
-    (lk*) disjoint from every other chain."""
-    legs = _lookup_family_leg_sqls()
-    return f"""
-    WITH lk_a AS (SELECT * FROM ({legs["asof"]})),
-    lk_i AS (SELECT * FROM ({legs["interpolated"]}))
-    SELECT 'asof' AS facet, user_id, event_id, view_event_id,
-           view_value, CAST(NULL AS DOUBLE) AS probe_k,
-           CAST(NULL AS DOUBLE) AS value
-    FROM lk_a
-    UNION ALL
-    SELECT 'interpolated', user_id, CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE), probe_k, value
-    FROM lk_i
-    """
-
-
-def lookup_family_spark(spark, sf_dir):
-    """Spark side of the r19 candidate: the registered pipelines
-    reused pre-registration (the binary_features stance — at
-    registration the bodies move into a per-leg helper)."""
-    from pyspark.sql import functions as F
-
-    from data_frame_spark.queries import QUERIES
-
-    asof = QUERIES["asof_multi_value_lookup"](spark, sf_dir).select(
-        F.lit("asof").alias("facet"), "user_id", "event_id",
-        "view_event_id", "view_value",
-        F.lit(None).cast("double").alias("probe_k"),
-        F.lit(None).cast("double").alias("value"),
-    )
-    interp = QUERIES["interpolated_lookup_value"](spark, sf_dir).select(
-        F.lit("interpolated").alias("facet"), "user_id",
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast("long").alias("view_event_id"),
-        F.lit(None).cast("double").alias("view_value"),
-        "probe_k", "value",
-    )
-    return asof.unionByName(interp)
-
-
 #: Literal snapshot (the binary_features/decontamination registration
 #: motion) of the facet union of the two standalone fit oracles,
 #: printed from the lazy composition while the rows (fits_family v1 /
@@ -2064,7 +1799,7 @@ def lookup_family_spark(spark, sf_dir):
 #: single source. The moment-vocabulary SQL inside is GENERATED text
 #: (queries._fits_sql / _fit_residuals_sql at their final form) --
 #: frozen verbatim so the registered oracle can never drift.
-FITS_FAMILY_V2_ORACLE = """
+FITS_FAMILY_ORACLE = """
     WITH fits_leg AS (SELECT * FROM (
     WITH d AS (SELECT CAST(l_quantity AS DOUBLE) AS x,
                       CAST(l_extendedprice AS DOUBLE) AS y
@@ -2118,7 +1853,7 @@ FITS_FAMILY_V2_ORACLE = """
     """
 
 
-def fits_family_v2_oracle_sql() -> str:
+def fits_family_oracle_sql() -> str:
     """Facet union of the former fits_family v1 and
     fit_residuals_price_qty rows — the r18 slot-funding merge
     pre-specced at r17 close (net −1: both parents r16-checked and
@@ -2128,10 +1863,10 @@ def fits_family_v2_oracle_sql() -> str:
     emit per-fit-kind rows); the coefficient columns c0..c3/r are
     NULL on the residuals leg and sse/n_points NULL on the fits leg.
     Returns the FROZEN snapshot (registered r18)."""
-    return FITS_FAMILY_V2_ORACLE
+    return FITS_FAMILY_ORACLE
 
 
-def fits_family_v2_spark(spark, sf_dir):
+def fits_family_spark(spark, sf_dir):
     """Spark side of the r18 candidate — the SHARED-MOMENT form (the
     meanmax shared-ladder precedent): ONE 13-moment scale-4 quantized
     lineitem aggregate feeds BOTH the seven fit rows and the residual
@@ -2151,7 +1886,6 @@ def fits_family_v2_spark(spark, sf_dir):
     the exp fit concurrently. Both are exact quantized aggregates —
     scheduling cannot affect any value."""
     import math
-    from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import functions as F
 
@@ -2185,8 +1919,10 @@ def fits_family_v2_spark(spark, sf_dir):
         "slny": dsum(F.log(Y), 4),
     }
     # the events exp fit shares nothing with the lineitem moments —
-    # run its collect on a second driver thread while this one does
-    # the moment + residual chain
+    # its collect runs beside the moment collect
+    def moments():
+        return d.agg(*[e.alias(k) for k, e in sparkexpr.items()]).collect()[0].asDict()
+
     def exp_fit():
         ev = t(spark, sf_dir, "events").select(
             (F.col("ts_us") / F.lit(1000000.0) / F.lit(86400.0)).alias("x"),
@@ -2194,14 +1930,7 @@ def fits_family_v2_spark(spark, sf_dir):
         )
         return OpFit.least_squares_fit(ev, "x", "y", mode="exp")
 
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        efit_future = pool.submit(exp_fit)
-
-        m = d.agg(*[e.alias(k) for k, e in sparkexpr.items()]).collect()[0].asDict()
-        efit = efit_future.result()
-    finally:
-        pool.shutdown()
+    m, efit = build_parallel(spark, moments, exp_fit)
     mv = [m["n"]] + [m[f"sx{k}"] for k in range(1, 7)]
     rhs = [m["sy"], m["sxy1"], m["sxy2"], m["sxy3"]]
     lin = [num / den for num, den in _cramer(mv[:3], rhs[:2], 1)]
@@ -2269,17 +1998,17 @@ def fits_family_v2_spark(spark, sf_dir):
     return fits_p.unionByName(res_p)
 
 
-def graph_suite_v2_oracle_sql(
+def graph_suite_family_oracle_sql(
     iterations: int = 3, max_hops: int = 3, k: int = 5, rounds: int = 4
 ) -> str:
-    """r16 slot-funding candidate (pre-proven r15): graph_suite_family
-    plus the kcore row as a fourth 'kcore_degree' facet — the merge
-    the name-disjoint CTE chains (pe/tn/tri/pern/tfin vs ke*/kd*/kfin
-    vs nodes/l*/c* vs d*/r*) were written for in r14. The ``pe``
-    parts-co-ordered edge CTE appears ONCE (via _tri_ctes) and feeds
-    both the triangle and the peeling chains; kcore keeps the
-    registered row's k=5/rounds=4 contract while LPA/BFS keep the
-    family's 3-round trim."""
+    """Facet union of the four graph twins on their shared (node,
+    value) shape: 'triangles' and 'kcore_degree' on the
+    parts-co-ordered graph (the ``pe`` CTE appears ONCE, via
+    _tri_ctes, and feeds both the triangle and the peeling chains),
+    'lpa_label' and 'bfs_hops' on the pagerank part<->supplier edges.
+    The CTE chains' names are disjoint (pe/tn/tri/pern/tfin vs
+    ke*/kd*/kfin vs nodes/l*/c* vs d*/r*). k-core keeps the retired
+    kcore row's k=5/rounds=4 contract; LPA/BFS run 3 rounds/hops."""
     body = ",\n    ".join(
         ["WITH " + pagerank_edges_sql().strip().rstrip()]
         + _lpa_ctes(iterations)
@@ -2298,24 +2027,49 @@ def graph_suite_v2_oracle_sql(
     """
 
 
-def graph_suite_v2_spark(spark, sf_dir):
-    """Spark side of the r16 graph_suite v2 candidate: the r14 family
-    (three concurrent facets, shared materialized part<->supplier
-    edges, parts-co-ordered triangle graph) plus k-core as a FOURTH
-    concurrent facet on the SAME _part_cooccur_pairs fixture
-    (k=5/rounds=4 — the registered kcore row's exact contract, so
-    the merge only re-labels proven work)."""
-    from concurrent.futures import ThreadPoolExecutor
+def graph_suite_family_spark(spark, sf_dir):
+    """Spark side of the registered graph_suite_family row: four
+    independent facets built concurrently. The triangle and k-core
+    facets share ONE canonicalized co-occurrence relation (r19,
+    guide §2.3: before, each re-ran the lineitem scan + orderkey
+    self-join + distinct internally); the LPA and BFS facets share
+    the part<->supplier edge list, MATERIALIZED once (eager
+    checkpoint; distinct by construction, so they take it with
+    prepared=True). All four outputs share (node, BIGINT value).
 
+    The threads overlap the construction-time jobs (the lazy-
+    checkpoint materializations inside the triangle and k-core
+    facets) and cost nothing when there is nothing to overlap. Each
+    facet's result is integer-exact under any partitioning or
+    ordering, and the threads build disjoint DataFrames."""
     from pyspark.sql import functions as F
 
-    # ONE canonicalized co-occurrence relation for the triangle and
-    # k-core facets (r19, guide §2.3): before, each facet re-ran the
-    # lineitem scan + orderkey self-join + distinct internally
-    und = _part_cooccur_und(spark, sf_dir)
+    from data_frame_spark.operators.graph import hop_distances, label_propagation
 
-    def suite_facets():
-        return graph_suite_family_spark(spark, sf_dir, cooccur_und=und)
+    und = _part_cooccur_und(spark, sf_dir)
+    edges = _part_supplier_edges(spark, sf_dir).localCheckpoint(eager=True)
+    seeds = _part_seeds(spark, sf_dir)
+
+    # 3 rounds/hops: per-round latency is job-barrier-bound on the
+    # tiny vertex tables, and three rounds already demonstrate
+    # multi-hop propagation — a ~20% row-cost trim measured at sf0.1
+    def tri_facet():
+        return triangle_spark(spark, sf_dir, cooccur_und=und).select(
+            F.lit("triangles").alias("facet"), "node",
+            F.col("triangles").alias("value"),
+        )
+
+    def lpa_facet():
+        return label_propagation(edges, iterations=3, prepared=True).select(
+            F.lit("lpa_label").alias("facet"), "node",
+            F.col("label").alias("value"),
+        )
+
+    def bfs_facet():
+        return hop_distances(edges, seeds, max_hops=3, prepared=True).select(
+            F.lit("bfs_hops").alias("facet"), "node",
+            F.col("hops").alias("value"),
+        )
 
     def kcore_facet():
         return kcore_spark(spark, sf_dir, cooccur_und=und).select(
@@ -2323,12 +2077,10 @@ def graph_suite_v2_spark(spark, sf_dir):
             F.col("degree").alias("value"),
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        suite, kc = (
-            f.result()
-            for f in [pool.submit(fn) for fn in (suite_facets, kcore_facet)]
-        )
-    return suite.unionByName(kc)
+    tri, lpa, bfs, kc = build_parallel(
+        spark, tri_facet, lpa_facet, bfs_facet, kcore_facet
+    )
+    return tri.unionByName(lpa).unionByName(bfs).unionByName(kc)
 
 
 # ---------------------------------------------------------------------------

@@ -44,6 +44,7 @@ from data_frame_spark.operators import core as OpCore
 from data_frame_spark.sources import csv as CSVSrc
 from data_frame_spark.operators import lookup as OpLookup
 from data_frame_spark.operators import window as OpWindow
+from data_frame_spark.session import build_parallel
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -86,12 +87,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     from data_frame_spark.session import load_table
 
-    # the driver runs these under ITS OWN session: pin the two confs
-    # the results depend on (timestamp-literal parsing, NULL-on-
-    # invalid arithmetic) so behavior matches the oracle regardless
-    # of the host session's defaults
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
     return load_table(spark, sf_dir, name)
 
 
@@ -448,7 +443,6 @@ def quantiles_price_and_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver round-trips. The facets are independent subtrees with
     integer-exact results, so construction order cannot affect the
     output."""
-    from concurrent.futures import ThreadPoolExecutor
 
     def uq_facet():
         li = t(spark, sf_dir, "lineitem")
@@ -462,10 +456,7 @@ def quantiles_price_and_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev, "value", "w", order_by=["ts_ns", "event_id"]
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        uq, wq = (
-            f.result() for f in [pool.submit(fn) for fn in (uq_facet, wq_facet)]
-        )
+    uq, wq = build_parallel(spark, uq_facet, wq_facet)
     return uq.withColumn("weighted", F.lit(False)).unionByName(
         wq.withColumn("weighted", F.lit(True))
     )
@@ -585,8 +576,6 @@ def histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     during each other's driver round-trips. The facets are
     independent subtrees with exact integer counts, so construction
     order cannot affect the output."""
-    from concurrent.futures import ThreadPoolExecutor
-
     _dnull = F.lit(None).cast("double")
     li = t(spark, sf_dir, "lineitem")
     # ONE lineitem bucket aggregate feeds the plain, normalized and
@@ -684,16 +673,9 @@ def histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("boolean").alias("in_trim"),
         )
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        numeric, weighted, strings, combined = (
-            f.result()
-            for f in [
-                pool.submit(fn)
-                for fn in (
-                    numeric_facet, weighted_facet, strings_facet, combined_facet
-                )
-            ]
-        )
+    numeric, weighted, strings, combined = build_parallel(
+        spark, numeric_facet, weighted_facet, strings_facet, combined_facet
+    )
     return (
         numeric.unionByName(weighted).unionByName(strings).unionByName(combined)
     )
@@ -5019,7 +5001,7 @@ def binary_corpus_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _OP.binary_corpus_family_spark(spark, sf_dir)
 
 
-@query("graph_suite_family", oracle=_OP.graph_suite_v2_oracle_sql())
+@query("graph_suite_family", oracle=_OP.graph_suite_family_oracle_sql())
 def graph_suite_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The graph operator suite on ONE row (v2 since r16) — facets
     'triangles' (degree-ordered triangle counting on the
@@ -5050,7 +5032,7 @@ def graph_suite_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts (pinned pre-checkpoint on
     _oriented_edges/_lpa_round/_bfs_round/_kcore_round in
     tests/test_plans.py)."""
-    return _OP.graph_suite_v2_spark(spark, sf_dir)
+    return _OP.graph_suite_family_spark(spark, sf_dir)
 
 
 @query("format_roundtrip_family", oracle=_OP.format_roundtrip_family_oracle_sql())
@@ -5554,12 +5536,12 @@ def pivot_melt_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@query("fits_family", oracle=_OP.fits_family_v2_oracle_sql())
+@query("fits_family", oracle=_OP.fits_family_oracle_sql())
 def fits_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-least-squares-fit family + simple-linear-regression +
     the fit RESIDUAL pass on ONE row (r18 slot-funding merge, net −1,
     absorbing the former fit_residuals_price_qty row; frozen oracle
-    snapshot oracle_prep.FITS_FAMILY_V2_ORACLE) — facets 'fits'
+    snapshot oracle_prep.FITS_FAMILY_ORACLE) — facets 'fits'
     (least-squares-fit.rkt:34-41,96-121,156-196; slr.rkt:32-39: kinds
     linear/log/poly2/poly3/power/slr over lineitem + the 'exp kind
     over events with the reference's miny<0.1 shift) and 'residuals'
@@ -5578,7 +5560,7 @@ def fits_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: three map-combinable whole-frame aggregates (no
     shuffle wider than one row at any row count) + driver-side
     closed-form coefficient math on the collected moment row."""
-    return _OP.fits_family_v2_spark(spark, sf_dir)
+    return _OP.fits_family_spark(spark, sf_dir)
 
 
 @query("binary_file_ingest", oracle=_OP.wav_corpus_oracle_sql())

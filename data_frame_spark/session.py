@@ -11,8 +11,21 @@ local core count; on a real cluster it should be ~2-3x total cores
 from __future__ import annotations
 
 import os
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+#: Session confs that query results depend on.
+SESSION_PINS = {
+    # oracle comparability: timestamp-literal parsing and epoch math
+    "spark.sql.session.timeZone": "UTC",
+    # non-ANSI: invalid arithmetic (x/0, bad casts) yields NULL —
+    # matches the reference's NA-propagation model (SURVEY §1.3)
+    "spark.sql.ansi.enabled": "false",
+    # events.ts shipped as TIMESTAMP(NANOS) scans as a raw long
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
 
 
 def get_spark(
@@ -37,10 +50,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.session.timeZone", "UTC")
-        # non-ANSI: invalid arithmetic (x/0, bad casts) yields NULL —
-        # matches the reference's NA-propagation model (SURVEY §1.3)
-        .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -52,7 +61,42 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    pin_session(spark)
+    return spark
+
+
+def pin_session(spark: SparkSession) -> None:
+    """Set each :data:`SESSION_PINS` conf that differs. Queries may
+    run under a session built elsewhere; once pinned, the session is
+    only read."""
+    for key, value in SESSION_PINS.items():
+        if spark.conf.get(key, None) != value:
+            spark.conf.set(key, value)
+
+
+def build_parallel(spark: SparkSession, *thunks):
+    """Run each zero-argument ``thunk`` on its own driver thread and
+    return their results in argument order.
+
+    Builders only read session state: the session is pinned here, on
+    the calling thread, before any thunk starts. Each thunk carries
+    the caller's job group, description and tags. The first failure
+    is raised as soon as it happens; siblings still running are left
+    to finish on their own.
+    """
+    pin_session(spark)
+    pool = ThreadPoolExecutor(max_workers=len(thunks))
+    try:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(thunk)) for thunk in thunks
+        ]
+        done, _ = wait(futures, return_when=FIRST_EXCEPTION)
+        for f in done:
+            f.result()  # re-raises a failure
+        return [f.result() for f in futures]
+    finally:
+        pool.shutdown(wait=False, cancel_futures=True)
 
 
 TPCH_TABLES = (
@@ -82,13 +126,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
+    # epoch extraction below must not depend on the caller's session
+    # timezone (TIMESTAMP_NTZ -> epoch goes through a wall-clock
+    # interpretation; the stored values are UTC)
+    pin_session(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # epoch extraction below must not depend on the caller's
-        # session timezone (TIMESTAMP_NTZ -> epoch goes through a
-        # wall-clock interpretation; the stored values are UTC).
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         df = spark.read.parquet(path)
         if isinstance(df.schema["ts"].dataType, LongType):
             return (

@@ -21,14 +21,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_frame_spark.session import pin_session
+
+
 def stream_events(spark: SparkSession, sf_dir: str, watermark: str = "1 hour") -> DataFrame:
     """Streaming source over the events parquet (file stream; in
     production the same code points at Kafka/queue sources).
     Normalizes the timestamp like the batch loader (both the
     TIMESTAMP(NANOS)-as-long and timestamp[us] forms) and applies the
     event-time watermark."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_session(spark)
     # a file stream needs an explicit schema: take it from the batch
     # footer so the same code handles either shipped ts encoding
     schema = (

@@ -253,19 +253,6 @@ def test_triangle_oracle_matches_spark(spark, sf_dir, con):
     assert got == want
 
 
-def test_lpa_oracle_matches_spark(spark, sf_dir, con):
-    got = {
-        r["node"]: r["label"]
-        for r in OP.lpa_spark(spark, sf_dir).collect()
-    }
-    want = dict(con.execute(OP.lpa_oracle_sql(iterations=4)).fetchall())
-    assert len(got) > 100
-    # propagation actually happened: most nodes no longer self-label
-    moved = sum(1 for n, l in got.items() if n != l)
-    assert moved > len(got) // 2
-    assert got == want
-
-
 def test_orc_roundtrip_oracle_matches_spark(spark, sf_dir, con):
     out = OP.orc_roundtrip_spark(spark, sf_dir)
     cols = out.columns
@@ -321,30 +308,6 @@ def test_format_roundtrip_family_oracle_matches_spark(spark, sf_dir, con):
     assert got == want
 
 
-def test_bfs_oracle_matches_spark(spark, sf_dir, con):
-    got = {
-        r["node"]: r["hops"] for r in OP.bfs_spark(spark, sf_dir).collect()
-    }
-    want = dict(con.execute(OP.bfs_oracle_sql(max_hops=4)).fetchall())
-    assert len(got) > 100
-    # distances must actually spread (seeds at 0, suppliers at odd hops)
-    assert {0, 1, 2}.issubset(set(got.values()))
-    assert got == want
-
-
-def test_graph_suite_family_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.graph_suite_family_spark(spark, sf_dir)
-    got = {
-        (r["facet"], r["node"]): r["value"] for r in out.collect()
-    }
-    want = {
-        (f, n): v
-        for f, n, v in con.execute(OP.graph_suite_family_oracle_sql()).fetchall()
-    }
-    assert len(got) > 300 and len({f for f, _ in got}) == 3
-    assert got == want
-
-
 def test_kcore_oracle_matches_spark(spark, sf_dir, con):
     got = {
         r["node"]: r["degree"]
@@ -386,7 +349,7 @@ def test_family_registrations_use_the_snapshot_oracles():
     assert ORACLE["binary_features_family"] == OP.BINARY_FEATURES_FAMILY_ORACLE
     # r18: frozen byte-identically from the lazy composition while
     # the fits v1 + fit_residuals rows still existed
-    assert ORACLE["fits_family"] == OP.FITS_FAMILY_V2_ORACLE
+    assert ORACLE["fits_family"] == OP.FITS_FAMILY_ORACLE
     # the registration returns the constant itself, so the equality
     # above is circular post-retirement (r18 review finding); this
     # checksum is the independent byte-identity link — computed from
@@ -395,7 +358,7 @@ def test_family_registrations_use_the_snapshot_oracles():
     import hashlib
 
     assert (
-        hashlib.md5(OP.FITS_FAMILY_V2_ORACLE.encode()).hexdigest()
+        hashlib.md5(OP.FITS_FAMILY_ORACLE.encode()).hexdigest()
         == "ef0493a1c14e2f38e6e0a6a41ffc6159"
     )
 
@@ -490,10 +453,10 @@ def test_graph_suite_v2_oracle_matches_spark(spark, sf_dir, con):
     # kcore facet folded into the suite, kcore row retired — the
     # composition pin v2 == parents retired with it after holding
     # through the r15 pre-proof)
-    out = OP.graph_suite_v2_spark(spark, sf_dir)
+    out = OP.graph_suite_family_spark(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(con.execute(OP.graph_suite_v2_oracle_sql()).fetchall())
+    want = sorted(con.execute(OP.graph_suite_family_oracle_sql()).fetchall())
     assert len({row[0] for row in got}) == 4
     assert got == want
 
@@ -565,58 +528,17 @@ def test_binary_features_leg_guard():
         OP.binary_features_leg(None, "", "nope")
 
 
-def test_lookup_family_oracle_matches_spark(spark, sf_dir, con):
-    # r19 funding-merge candidate (pre-proven r17): asof +
-    # interpolated lookup on one NULL-superset row
-    out = OP.lookup_family_spark(spark, sf_dir)
-    cols = [f.name for f in out.schema.fields]
-    got = sorted(
-        tuple(r[c] for c in cols) for r in out.collect()
-    )
-    want = sorted(
-        tuple(row) for row in con.execute(
-            OP.lookup_family_oracle_sql()
-        ).fetchall()
-    )
-    assert len(got) > 20 and len({row[0] for row in got}) == 2
-    assert got == want
-
-
-def test_lookup_family_leg_sqls_are_the_registered_oracles():
-    from data_frame_spark.queries import ORACLE
-
-    legs = OP._lookup_family_leg_sqls()
-    assert legs["asof"] == ORACLE["asof_multi_value_lookup"]
-    assert legs["interpolated"] == ORACLE["interpolated_lookup_value"]
-
-
-def test_dq_verify_oracle_matches_spark(spark, sf_dir, con):
-    # r19+ new-surface candidate (pre-proven r17): Deequ-style
-    # declarative data-quality verification over orders + the
-    # customer FK — three rules fire on the fixture, three pass
-    out = OP.dq_verify_spark(spark, sf_dir)
-    cols = [f.name for f in out.schema.fields]
-    got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(
-        tuple(row) for row in con.execute(OP.dq_oracle_sql()).fetchall()
-    )
-    assert len(got) == 6
-    fired = {row[0] for row in got if not row[-1]}
-    assert fired == {"totalprice_range", "status_domain", "custkey_unique"}
-    assert got == want
-
-
 def test_fits_family_v2_oracle_matches_spark(spark, sf_dir, con):
     # registered r18 (slot-funding merge, net -1; funded
     # binary_file_ingest + psi_value_drift)
-    out = OP.fits_family_v2_spark(spark, sf_dir)
+    out = OP.fits_family_spark(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(
         tuple(r[c] for c in cols) for r in out.collect()
     )
     want = sorted(
         tuple(row) for row in con.execute(
-            OP.fits_family_v2_oracle_sql()
+            OP.fits_family_oracle_sql()
         ).fetchall()
     )
     # 7 fit kinds + 2 residual kinds, facet-disjoint

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from data_frame_spark.operators import text as T
 from data_frame_spark.operators import dedup as D
 from data_frame_spark.operators import similarity as SIM
+from data_frame_spark.plans import checks as C
 
 
 @pytest.fixture(scope="module")
@@ -502,10 +504,16 @@ def test_lsh_bucket_size_cap(spark):
     rows = [(i, "common boilerplate template text repeated everywhere") for i in range(20)]
     rows += [(100, "a unique document about spark physical plans and shuffles"),
              (101, "a unique document about spark physical plans and shuffles")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    # built through Arrow: the local relation carries an exact (tiny)
+    # size estimate, as a checkpointed corpus relation does, so the
+    # planner would broadcast-elect an unpinned join
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
     sigs = D.minhash_signatures(df, "text", "doc_id", num_hashes=8)
     uncapped = D.lsh_candidate_pairs(sigs, "doc_id", 8, 4).count()
     capped = D.lsh_candidate_pairs(sigs, "doc_id", 8, 4, max_bucket_size=5)
+    # the guard join's sides are both explode-derived and corpus-sized:
+    # no broadcast election, whatever the estimate says
+    assert "BroadcastHashJoin" not in C.simple_plan(capped)
     got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
     # the 20-document template bucket (190 pairs x bands) is dropped...
     assert uncapped >= 190
