@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from data_frame_spark.operators.text import TOKEN_PATTERN
+from data_frame_spark.session import local_frame
 
 END_OF_WORD = "</w>"
 
@@ -141,8 +142,8 @@ def bpe_fit(
         words = words.select(
             _merge_pair(F.col("syms"), l, r).alias("syms"), "n"
         ).localCheckpoint(eager=False)
-    return spark.createDataFrame(
-        merges, schema="rank long, left string, right string, pair_n long"
+    return local_frame(
+        spark, merges, "rank long, left string, right string, pair_n long"
     )
 
 

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_frame_spark.operators.colnames import quoted as _qc
+from data_frame_spark.session import local_frame
 from pyspark.sql import types as T
 
 
@@ -145,4 +146,4 @@ def describe(df: DataFrame) -> DataFrame:
             T.StructField("stddev", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(out_rows, schema)
+    return local_frame(spark, out_rows, schema)

@@ -35,6 +35,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_frame_spark.session import local_frame
+
 
 def sample_key(id_col, salt: str = "") -> F.Column:
     """Deterministic per-row ordering key: md5 of the row id plus a
@@ -197,9 +199,10 @@ def mixture_sample(
     if any(int(v) < 0 for v in targets.values()):
         raise ValueError("mixture_sample targets must be >= 0")
     spark = df.sparkSession
-    tgt = spark.createDataFrame(
+    tgt = local_frame(
+        spark,
         [(k, int(v)) for k, v in targets.items()],
-        schema=df.select(
+        df.select(
             F.col(stratum_col).alias("__s"), F.lit(0).cast("long").alias("__n")
         ).schema,
     )

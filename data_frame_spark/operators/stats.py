@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from data_frame_spark.operators.colnames import quoted as _qc
 
 from data_frame_spark.exact import dsum
+from data_frame_spark.session import local_frame
 from data_frame_spark.operators.distributed import (
     with_global_rank,
     with_lag,
@@ -155,7 +156,7 @@ def quantiles(
         if bv is not None and (not bs or bv > bs[-1]):
             bs.append(float(bv))
     ranked = with_global_rank(d, ["__x"], out="__rn", boundaries=bs)  # 1-based
-    pdf = spark.createDataFrame([(float(p),) for p in probs], ["p"])
+    pdf = local_frame(spark, [(float(p),) for p in probs], "p double")
     targets = pdf.withColumn(
         "__target",
         (F.greatest(F.ceil(F.col("p") * F.lit(n)) - 1, F.lit(0)) + 1).cast("long"),
@@ -257,7 +258,7 @@ def weighted_quantiles(
     cum = ck.join(F.broadcast(offs), "__bucket").withColumn(
         "__cw", F.col("__off") + F.col("__rel")
     )
-    pdf = spark.createDataFrame([(float(p),) for p in probs], ["p"]).crossJoin(
+    pdf = local_frame(spark, [(float(p),) for p in probs], "p double").crossJoin(
         F.broadcast(wtot)
     )
     probs_w = F.broadcast(pdf)

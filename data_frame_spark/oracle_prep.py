@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from data_frame_spark.operators.drift import PSI_VALUE_SCALE
 from data_frame_spark.operators.text import TOKEN_PATTERN
-from data_frame_spark.session import build_parallel
+from data_frame_spark.session import build_parallel, load_table, local_frame
 
 CUSUM_TARGET_MICRO = 500_000
 CUSUM_THRESHOLD_MICRO = 5_000_000
@@ -745,7 +745,7 @@ def _part_cooccur_pairs(spark, sf_dir):
     from pyspark.sql import functions as F
 
     li = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        load_table(spark, sf_dir, "lineitem")
         .where(F.col("l_orderkey") % 10 == 0)
         .select("l_orderkey", F.col("l_partkey").cast("long").alias("p"))
     )
@@ -876,7 +876,7 @@ def _part_supplier_edges(spark, sf_dir):
     review: three inline copies had crept in)."""
     from pyspark.sql import functions as F
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     b = li.select(
         F.col("l_partkey").cast("long").alias("src"),
         (F.col("l_suppkey") + PAGERANK_SUPP_OFFSET).cast("long").alias("dst"),
@@ -889,7 +889,7 @@ def _part_seeds(spark, sf_dir):
     from pyspark.sql import functions as F
 
     return (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        load_table(spark, sf_dir, "lineitem")
         .where(F.col("l_partkey") % 100 == 0)
         .select(F.col("l_partkey").cast("long").alias("node"))
         .distinct()
@@ -963,7 +963,7 @@ def orc_roundtrip_spark(spark, sf_dir):
         "l_discount", "l_returnflag", "l_linestatus",
     ]
     sl = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        load_table(spark, sf_dir, "lineitem")
         .where(F.col("l_orderkey") % 32 == 1)
         .select(cols)
     )
@@ -1003,7 +1003,7 @@ def jsonl_roundtrip_spark(spark, sf_dir):
 
     path = _prep_tmp_dir("jsonl_roundtrip", sf_dir)
     sl = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        load_table(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 7 == 3)
         .select("doc_id", "text", "lang", "source", "n_chars")
     )
@@ -1963,7 +1963,8 @@ def fits_family_spark(spark, sf_dir):
     rows.append(
         ("exp", _round6(ea), _round6(eb), _round6(float(ec)), None, None)
     )
-    fits = spark.createDataFrame(
+    fits = local_frame(
+        spark,
         rows,
         "kind string, c0 double, c1 double, c2 double, c3 double, r double",
     )
@@ -1977,7 +1978,8 @@ def fits_family_spark(spark, sf_dir):
         dsum(rq * rq, 4).alias("sq"),
         F.count(F.lit(1)).alias("np"),
     ).collect()[0]
-    res = spark.createDataFrame(
+    res = local_frame(
+        spark,
         [("linear", row["sl"], row["np"]), ("poly2", row["sq"], row["np"])],
         "kind string, sse double, n_points long",
     )
@@ -2561,7 +2563,7 @@ def meanmax_curve_family_spark(spark, sf_dir):
         & F.col("duration").isin([float(x) for x in _SPLINE_KNOTS])
     )
     sp = OpSpline.fit_spline(knots, "duration", "best_mean")
-    probes = spark.createDataFrame([(s,) for s in _SPLINE_PROBES], ["duration"])
+    probes = local_frame(spark, [(s,) for s in _SPLINE_PROBES], "duration double")
     spline = probes.select(
         F.lit("spline").alias("facet"), "duration",
         F.lit(None).cast("double").alias("best_mean"),
@@ -2633,7 +2635,7 @@ def sssp_spark(spark, sf_dir):
 
     from data_frame_spark.operators.graph import shortest_paths
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load_table(spark, sf_dir, "lineitem")
     sw = (
         li.groupBy(
             F.col("l_partkey").cast("long").alias("src"),
@@ -2942,7 +2944,7 @@ def table_diff_spark(spark, sf_dir):
 
     from data_frame_spark.operators.scd import table_diff
 
-    old = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    old = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("long").alias("c_custkey"), "c_mktsegment"
     )
     new = old.where(F.col("c_custkey") % 11 != 0).select(
@@ -2951,7 +2953,7 @@ def table_diff_spark(spark, sf_dir):
         .otherwise(F.col("c_mktsegment"))
         .alias("c_mktsegment"),
     ).unionByName(
-        spark.read.parquet(f"{sf_dir}/supplier.parquet").select(
+        load_table(spark, sf_dir, "supplier").select(
             (F.col("s_suppkey") + 10_000_000).cast("long").alias("c_custkey"),
             F.lit("SUPPLIER").alias("c_mktsegment"),
         )

@@ -360,12 +360,14 @@ DECLARED_BROADCAST_OK: dict[str, list[tuple[str, str]]] = {
         ),
     ],
     # ------------------------------------------------------------------
-    # localCheckpoint/createDataFrame relations plan as RDDScanExec,
-    # which the bounded-leaf classifier deliberately does NOT bless
-    # blanket-style (round-13 review: a checkpointed corpus-sized
-    # relation is physically indistinguishable from a parallelized
-    # literal). Every RDD-backed broadcast below is bounded by an
-    # OPERATIONAL constant and declared individually.
+    # localCheckpoint relations plan as RDDScanExec, which the
+    # bounded-leaf classifier deliberately does NOT bless blanket-style
+    # (round-13 review: a checkpointed corpus-sized relation is
+    # physically indistinguishable from a parallelized literal).
+    # Driver literals built with session.local_frame plan as
+    # LocalTableScan and need no entry. Every RDD-backed broadcast
+    # below is bounded by an OPERATIONAL constant and declared
+    # individually.
     # ------------------------------------------------------------------
     # bpe_encode's word→symbols lookup: broadcast only when the
     # runtime size gate passes (auto = count on the checkpointed
@@ -388,15 +390,6 @@ DECLARED_BROADCAST_OK: dict[str, list[tuple[str, str]]] = {
         (r"Scan ExistingRDD\[__term#\d+,__c#\d+L?\]",
          "LM vocab = top-vocab_size term table (limit-bounded)"),
     ],
-    # the exact-quantile probe fraction tables: len(fractions)-row
-    # driver literals (one per facet)
-    "quantiles_price_and_value": [
-        (r"Scan ExistingRDD\[p#\d+\]", "probe fractions are a constant literal"),
-        (r"Scan ExistingRDD\[p#\d+\]", "probe fractions are a constant literal"),
-    ],
-    "curriculum_buckets_docs": [
-        (r"Scan ExistingRDD\[p#\d+\]", "bucket fractions are a constant literal"),
-    ],
     # per-stratum/source/scope threshold tables: one row per stratum
     # (a bounded label domain), collected like the quantile boundaries
     "stratified_sample_docs": [
@@ -414,12 +407,6 @@ DECLARED_BROADCAST_OK: dict[str, list[tuple[str, str]]] = {
     "robust_outliers_value": [
         (r"Scan ExistingRDD\[scope#\d+,__med#\d+",
          "per-scope median/MAD: one row per scope"),
-    ],
-    # the CMS sketch relation is depth×width counters — a plan-time
-    # constant shape regardless of corpus size
-    "cms_token_counts": [
-        (r"Scan ExistingRDD\[row#\d+,bucket#\d+L?,cnt#\d+L?\]",
-         "CMS sketch = depth×width counter table (constant shape)"),
     ],
     # the r18 scan-share checkpoints the numeric facet's gap-filled
     # bucket table ONCE and broadcast-joins the normalized and
@@ -580,7 +567,7 @@ def _bounded_first_aggregates(
             ("LocalTableScan", "OneRowRelation", "EmptyRelation")
         ):
             # driver-side literal relation (offset lookup tables,
-            # createDataFrame constants) — constant-sized
+            # local_frame constants) — constant-sized
             found_any = True
             return
         # RDDScanExec is deliberately NOT in the bounded tuple: it is

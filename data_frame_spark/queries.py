@@ -44,7 +44,7 @@ from data_frame_spark.operators import core as OpCore
 from data_frame_spark.sources import csv as CSVSrc
 from data_frame_spark.operators import lookup as OpLookup
 from data_frame_spark.operators import window as OpWindow
-from data_frame_spark.session import build_parallel
+from data_frame_spark.session import build_parallel, local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -341,7 +341,7 @@ def interpolated_lookup_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     offs = [0.0, 86400.0, 2592000.0]
     probes = (
         ev.select("user_id").distinct()
-        .crossJoin(spark.createDataFrame([(o,) for o in offs], ["off"]))
+        .crossJoin(local_frame(spark, [(o,) for o in offs], "off double"))
         .select("user_id", (F.lit(t0) + F.col("off")).alias("k"))
     )
     out = OpLookup.interpolated_lookup(
@@ -1669,8 +1669,8 @@ def zipf_fit_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fit = OpFit.least_squares_fit(d, "x", "y", mode="power")
     a, b = fit.coefficients
-    return spark.createDataFrame(
-        [(_round6(a), _round6(b))], ["a", "zipf_exponent"]
+    return local_frame(
+        spark, [(_round6(a), _round6(b))], "a double, zipf_exponent double"
     )
 
 
@@ -3568,7 +3568,7 @@ def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         tok, "token", min_div=30, width=16, depth=3, counters=ctr_rows
     )
     est = OpSketch2.cms_estimate(
-        spark.createDataFrame(ctr_rows, ctr.schema),
+        local_frame(spark, ctr_rows, ctr.schema),
         hh.select("token"),
         "token",
         width=16,
@@ -4075,7 +4075,7 @@ def ivf_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cid, row in enumerate(cent_micro)
         for d, v in enumerate(row)
     ]
-    cent_df = spark.createDataFrame(rows, "cid int, dim int, val_micro bigint")
+    cent_df = local_frame(spark, rows, "cid int, dim int, val_micro bigint")
     probe = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )

@@ -14,7 +14,8 @@ import os
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Session confs that query results depend on.
 SESSION_PINS = {
@@ -99,6 +100,32 @@ def build_parallel(spark: SparkSession, *thunks):
         pool.shutdown(wait=False, cancel_futures=True)
 
 
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A small driver-side relation from ``rows`` (tuples in ``schema``
+    order), built as an Arrow table so it plans as a
+    ``LocalTableScan``: no RDD, and no tasks to ship it at action time.
+
+    ``schema`` is a DDL string or a StructType. Columns go straight to
+    Arrow, not through pandas, so a float ``NaN`` stays ``NaN`` and
+    ``None`` stays NULL.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=field.type)
+            for i, field in enumerate(arrow)
+        ],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -113,6 +140,30 @@ TPCH_TABLES = (
 )
 
 
+#: (abspath, st_mtime_ns, st_size) of a ``.parquet`` path -> the
+#: StructType Spark inferred on its first load. A rewritten file gets a
+#: new key, so a stale schema is never reused.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str):
+    """``spark.read.parquet(path)``, inferring the schema (one Spark
+    job) only on the first read of each file version. Each call returns
+    a fresh relation; only the schema is shared. Paths ``os.stat``
+    cannot see (cluster URIs) are inferred every time."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Load one driver table.
 
@@ -122,17 +173,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     ``ts_ns`` (exact nanos, BIGINT), ``ts_us`` (exact micros, BIGINT)
     and ``ts`` (micro-precision TimestampType). Oracle SQL uses
     DuckDB ``epoch_ns(ts)``, which equals ``ts_ns`` either way.
+
+    The parquet schema is inferred (a Spark job) on the first load of
+    each file version and cached by path, mtime and size; later loads
+    pass it to the reader and start no job. Every call still returns a
+    new relation, so two loads of one table can be self-joined.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
     # epoch extraction below must not depend on the caller's session
     # timezone (TIMESTAMP_NTZ -> epoch goes through a wall-clock
-    # interpretation; the stored values are UTC)
+    # interpretation; the stored values are UTC); nanosAsLong is
+    # pinned before the schema is inferred
     pin_session(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
-        df = spark.read.parquet(path)
         if isinstance(df.schema["ts"].dataType, LongType):
             return (
                 df.withColumnRenamed("ts", "ts_ns")
@@ -144,7 +200,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
             .withColumn("ts_ns", F.col("ts_us") * F.lit(1000))
             .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
         )
-    return spark.read.parquet(path)
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, register: bool = True):

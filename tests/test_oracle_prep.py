@@ -1,8 +1,8 @@
-"""Round-12 wiring prep: prove the DuckDB oracle twins in
-``data_frame_spark/oracle_prep.py`` are bit-identical to the Spark
-operators on the REAL sf0.001 tables, before any registry slot opens.
-These are the exact SQL strings a future ``@query`` row will carry —
-registration becomes pure wiring once the `_FIRST` window rotates."""
+"""Parity of the builders and DuckDB oracle SQL that registered
+``@query`` rows take from ``data_frame_spark/oracle_prep.py``: each
+Spark builder (or the operator under it) matches its oracle twin
+bit for bit on the sf0.001 tables, and the family rows register the
+snapshot oracles kept there."""
 
 from __future__ import annotations
 
