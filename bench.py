@@ -56,8 +56,8 @@ CANONICAL_CPUS = 32
 # verbatim), so the HEADLINE subset swaps those two names for the
 # family row. The family's OUTPUT is the two legs' rows verbatim,
 # but its EXECUTION is not the sum of the standalone pipelines: both
-# facets share ONE checkpointed mean-max ladder (oracle_prep
-# meanmax_curve_family_spark; same-session A/B 5.36 s vs 8.92 s for
+# facets share ONE checkpointed mean-max ladder (queries
+# meanmax_curve_family; same-session A/B 5.36 s vs 8.92 s for
 # two ladder builds, outputs bit-identical — docs/PLANS.md). So the
 # r14→r15 headline delta embeds a real ~3.5 s composition speedup;
 # use the r15-start same-session control (the two standalone rows

@@ -101,7 +101,8 @@ def bpe_fit(
 
     ``strict=True`` raises instead when the corpus stops early — the
     contract an exactly-``n_merges``-row oracle replay needs (the
-    DuckDB twin in oracle_prep.py always emits n_merges rows).
+    DuckDB twin in queries.bpe_family_oracle_sql always emits n_merges
+    rows).
 
     Scale shape: ``word_counts`` is the only corpus-sized stage; each
     iteration is one explode+groupBy and one TakeOrdered(1) on the

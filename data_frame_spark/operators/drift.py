@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from data_frame_spark.operators.colnames import quoted as _q
 
 #: default micro-nat quantization scale (1e-6 per term). The DuckDB
-#: twin (oracle_prep.psi_oracle_sql) derives its multiplier from THIS
+#: twin (queries.psi_oracle_sql) derives its multiplier from THIS
 #: constant — r16 ADVICE: a hardcoded 1000000.0 on the oracle side
 #: would silently disagree if a registration ever picked a
 #: non-default ``value_scale``.

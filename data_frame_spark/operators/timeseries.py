@@ -56,10 +56,19 @@ def floor_div_expr(num: str, den: str) -> str:
     """SQL-expression string for FLOOR division of ``num`` by a
     POSITIVE ``den`` — Spark's ``div`` truncates toward zero, so
     negative non-exact quotients need the −1 correction. ONE
-    definition for every Spark call site; oracle_prep.sql_floor_div
-    is the DuckDB-dialect mirror (kept textually in sync by the
+    definition for every Spark call site; :func:`sql_floor_div` is
+    the DuckDB-dialect mirror (kept textually in sync by the
     negative-input parity test)."""
     return f"({num}) div ({den}) - IF(({num}) % ({den}) != 0 AND ({num}) < 0, 1, 0)"
+
+
+def sql_floor_div(num: str, den: str) -> str:
+    """DuckDB-dialect twin of :func:`floor_div_expr` (DuckDB's ``//``
+    also truncates toward zero: (-7)//2 = -3), for oracle SQL."""
+    return (
+        f"({num}) // ({den}) - CASE WHEN ({num}) % ({den}) <> 0 "
+        f"AND ({num}) < 0 THEN 1 ELSE 0 END"
+    )
 
 
 def time_bucket_gapfill(

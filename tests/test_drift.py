@@ -157,13 +157,13 @@ def test_psi_plan_one_data_shuffle_no_hazards(spark, sf_dir):
     # THE one data-sized exchange is the (group, bucket) count; the
     # totals/grid/final-sum run on its bounded output. No window at
     # all, no forced broadcast under the 100 TB planner.
-    from data_frame_spark.oracle_prep import psi_spark
+    from data_frame_spark.queries import psi_value_drift
 
-    df = psi_spark(spark, sf_dir)
+    df = psi_value_drift(spark, sf_dir)
     plan = C.simple_plan(df)
     assert "WindowExec" not in plan and "Window" not in plan
     assert not C.data_sized_partitionless_windows(df)
     assert "partial_sum" in plan  # map-side combine on the count
     with C.scale_planner(spark):
-        sdf = psi_spark(spark, sf_dir)
+        sdf = psi_value_drift(spark, sf_dir)
         assert C.broadcasts_for_query("psi_value_drift", sdf) == []

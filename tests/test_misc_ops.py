@@ -261,7 +261,7 @@ def test_funnel_single_entity_exchange(spark, sf_dir):
     # adds a second — 2 facets ('all' + '7d') x 2 shuffles. Pinned on
     # the pre-union funnel leg of event_funnel_family (the r15 merge
     # of funnel_conversion_events) so the budget stays per-leg.
-    from data_frame_spark.oracle_prep import event_funnel_leg
+    from data_frame_spark.queries import event_funnel_leg
     from data_frame_spark.plans import checks as C
 
     df = event_funnel_leg(spark, sf_dir, "funnel")
@@ -313,7 +313,7 @@ def test_retention_single_user_pass(spark, sf_dir):
     # pinned on the pre-union retention leg of event_funnel_family
     # (the r15 merge of retention_cohorts_events) so the budget
     # stays per-leg
-    from data_frame_spark.oracle_prep import event_funnel_leg
+    from data_frame_spark.queries import event_funnel_leg
     from data_frame_spark.plans import checks as C
 
     df = event_funnel_leg(spark, sf_dir, "retention")

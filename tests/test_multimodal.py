@@ -188,7 +188,7 @@ def test_mp4_bytes_builder_switches_to_mvhd_v1_past_32_bits(spark):
     import pytest
 
     from data_frame_spark.operators.multimodal import video_metadata
-    from data_frame_spark.oracle_prep import mp4_bytes
+    from data_frame_spark.queries import mp4_bytes
 
     big = (1 << 32) + 12_345  # overflows the v0 4-byte duration
     # timescale 600 (not 1_000_000, which made the µs assertion a
@@ -287,7 +287,7 @@ def test_extractors_quarantine_null_id(spark):
 
 def test_image_metadata_parses_png_jpeg_and_quarantines(spark):
     from data_frame_spark.operators.multimodal import image_metadata
-    from data_frame_spark.oracle_prep import jpeg_bytes, png_bytes
+    from data_frame_spark.queries import jpeg_bytes, png_bytes
 
     rows = [
         (1, png_bytes(320, 200)),
@@ -313,7 +313,7 @@ def test_image_metadata_parses_png_jpeg_and_quarantines(spark):
 def test_image_builders_reject_contract_violations(spark):
     import pytest
 
-    from data_frame_spark.oracle_prep import jpeg_bytes, png_bytes
+    from data_frame_spark.queries import jpeg_bytes, png_bytes
 
     for bad in (0, 65536, -1):
         with pytest.raises(ValueError):
@@ -329,7 +329,7 @@ def test_png_builder_emits_decodable_bytes():
     # header: re-walk the chunks and inflate the IDAT
     import zlib
 
-    from data_frame_spark.oracle_prep import png_bytes
+    from data_frame_spark.queries import png_bytes
 
     data = png_bytes(20, 5)
     assert data[:8] == b"\x89PNG\r\n\x1a\n"

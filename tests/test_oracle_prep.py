@@ -1,8 +1,8 @@
-"""Parity of the builders and DuckDB oracle SQL that registered
-``@query`` rows take from ``data_frame_spark/oracle_prep.py``: each
-Spark builder (or the operator under it) matches its oracle twin
-bit for bit on the sf0.001 tables, and the family rows register the
-snapshot oracles kept there."""
+"""Parity of registry rows (and the legs and operators under them)
+with their DuckDB oracle twins in ``data_frame_spark/queries.py``:
+each Spark side matches its oracle bit for bit on the sf0.001
+tables, and the family rows' frozen snapshot oracles keep their
+byte-identity checksums."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from data_frame_spark import oracle_prep as OP
+from data_frame_spark import queries as Q
 
 
 @pytest.fixture(scope="module")
@@ -43,8 +43,8 @@ def test_cusum_oracle_matches_spark(spark, sf_dir, con):
         "v_micro",
         order_by=["ts", "event_id"],
         partition_by=["user_id"],
-        target_micro=OP.CUSUM_TARGET_MICRO,
-        threshold_micro=OP.CUSUM_THRESHOLD_MICRO,
+        target_micro=Q.CUSUM_TARGET_MICRO,
+        threshold_micro=Q.CUSUM_THRESHOLD_MICRO,
     ).select("event_id", "user_id", "cusum_micro", "alarm")
     got = {
         r["event_id"]: (r["user_id"], r["cusum_micro"], r["alarm"])
@@ -52,7 +52,7 @@ def test_cusum_oracle_matches_spark(spark, sf_dir, con):
     }
     want = {
         eid: (uid, cs, al)
-        for eid, uid, cs, al in con.execute(OP.cusum_oracle_sql()).fetchall()
+        for eid, uid, cs, al in con.execute(Q.ORACLE["cusum_drift_events"]).fetchall()
     }
     assert len(got) > 100
     assert got == want
@@ -64,13 +64,13 @@ def test_pagerank_oracle_matches_spark(spark, sf_dir, con):
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     b = li.select(
         F.col("l_partkey").cast("long").alias("src"),
-        (F.col("l_suppkey") + OP.PAGERANK_SUPP_OFFSET).cast("long").alias("dst"),
+        (F.col("l_suppkey") + Q.PAGERANK_SUPP_OFFSET).cast("long").alias("dst"),
     ).distinct()
     edges = b.unionAll(b.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     got = {
         r["node"]: r["rank_micro"] for r in pagerank(edges, iterations=4).collect()
     }
-    want = dict(con.execute(OP.pagerank_oracle_sql(iterations=4)).fetchall())
+    want = dict(con.execute(Q.ORACLE["pagerank_part_supplier"]).fetchall())
     assert len(got) > 100
     assert got == want
 
@@ -83,7 +83,13 @@ def test_bpe_oracle_matches_spark(spark, sf_dir, con):
         (r["rank"], r["left"], r["right"], r["pair_n"])
         for r in bpe_fit(docs, n_merges=12).orderBy("rank").collect()
     ]
-    want = sorted(con.execute(OP.bpe_oracle_sql(n_merges=12)).fetchall())
+    # the 'fit' facet of the registered bpe_family oracle replays the
+    # same merge loop in DuckDB
+    want = sorted(
+        row[1:5]
+        for row in con.execute(Q.ORACLE["bpe_family"]).fetchall()
+        if row[0] == "fit"
+    )
     assert len(got) == 12  # corpus sustains every merge (oracle contract)
     assert got == want
 
@@ -96,9 +102,9 @@ def test_classifier_oracle_matches_spark(spark, sf_dir, con):
         docs,
         "text",
         "doc_id",
-        OP.CLASSIFIER_WEIGHTS_MICRO,
-        bias_micro=OP.CLASSIFIER_BIAS_MICRO,
-        threshold_micro=OP.CLASSIFIER_THRESHOLD_MICRO,
+        Q.CLASSIFIER_WEIGHTS_MICRO,
+        bias_micro=Q.CLASSIFIER_BIAS_MICRO,
+        threshold_micro=Q.CLASSIFIER_THRESHOLD_MICRO,
     )
     got = {
         r["doc_id"]: (r["n_tokens"], r["score_sum_micro"], r["keep"])
@@ -106,7 +112,7 @@ def test_classifier_oracle_matches_spark(spark, sf_dir, con):
     }
     want = {
         did: (n, s, k)
-        for did, n, s, k in con.execute(OP.classifier_oracle_sql()).fetchall()
+        for did, n, s, k in con.execute(Q.ORACLE["classifier_quality_docs"]).fetchall()
     }
     assert len(got) > 50
     # the verdict must discriminate (not all-keep / all-drop)
@@ -129,7 +135,9 @@ def test_containment_oracle_matches_spark(spark, sf_dir, con):
     }
     want = {
         (d, b): (s, t, c)
-        for d, b, s, t, c in con.execute(OP.containment_oracle_sql()).fetchall()
+        for d, b, s, t, c in con.execute(
+            Q.ORACLE["containment_decontamination_docs"]
+        ).fetchall()
     }
     assert len(got) > 5
     # the benchmark docs themselves contain 100% of their own n-grams
@@ -151,8 +159,6 @@ def test_corpus_row_oracles_are_integer_through_pandas(con):
     # now applies to the columns that are NON-NULL in both facets.
     # tools/check_dtypes.py runs the full dtype-parity gate
     # registry-wide.
-    from data_frame_spark import queries as Q
-
     df = con.execute(Q.ORACLE["xml_corpus_family"]).df()
     both_facets_non_null = [
         "user_id", "n_points", "lat_micro_sum", "lon_micro_sum",
@@ -165,7 +171,7 @@ def test_corpus_row_oracles_are_integer_through_pandas(con):
 
 
 def test_wav_corpus_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.wav_corpus_spark(spark, sf_dir)
+    out = Q.wav_corpus_spark(spark, sf_dir)
     got = {
         r["doc_id"]: (
             r["n_samples"], r["sample_sum"], r["abs_sum"],
@@ -176,7 +182,7 @@ def test_wav_corpus_oracle_matches_spark(spark, sf_dir, con):
     want = {
         d: (n, ss, ab, pk, zc, ok)
         for d, n, ss, ab, pk, zc, ok in con.execute(
-            OP.wav_corpus_oracle_sql()
+            Q.wav_corpus_oracle_sql()
         ).fetchall()
     }
     assert len(got) > 10
@@ -186,7 +192,7 @@ def test_wav_corpus_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_video_corpus_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.video_corpus_spark(spark, sf_dir)
+    out = Q.video_corpus_spark(spark, sf_dir)
     got = {
         r["doc_id"]: (
             r["format"], r["major_brand"], r["timescale"],
@@ -197,7 +203,7 @@ def test_video_corpus_oracle_matches_spark(spark, sf_dir, con):
     want = {
         d: (f, b, ts, du, us, nt, ok)
         for d, f, b, ts, du, us, nt, ok in con.execute(
-            OP.video_corpus_oracle_sql()
+            Q.video_corpus_oracle_sql()
         ).fetchall()
     }
     assert len(got) > 10
@@ -207,7 +213,7 @@ def test_video_corpus_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_binary_corpus_family_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.binary_corpus_family_spark(spark, sf_dir)
+    out = Q.binary_corpus_family(spark, sf_dir)
     cols = out.columns
     got = {
         (r["facet"], r["doc_id"]): tuple(r[c] for c in cols[2:])
@@ -215,17 +221,14 @@ def test_binary_corpus_family_oracle_matches_spark(spark, sf_dir, con):
     }
     want = {
         (row[0], row[1]): tuple(row[2:])
-        for row in con.execute(OP.binary_corpus_family_oracle_sql()).fetchall()
+        for row in con.execute(Q.ORACLE["binary_corpus_family"]).fetchall()
     }
     assert len(got) > 20 and len({f for f, _ in got}) == 2
     assert got == want
 
 
 def test_xml_corpus_family_oracle_matches_spark(spark, sf_dir, con):
-    # pins the REGISTERED row (lifted here from oracle_prep in round
-    # 13) — Spark facet union vs the DuckDB facet-union oracle
-    from data_frame_spark import queries as Q
-
+    # Spark facet union vs the DuckDB facet-union oracle
     out = Q.QUERIES["xml_corpus_family"](spark, sf_dir)
     cols = out.columns
     got = {
@@ -240,24 +243,11 @@ def test_xml_corpus_family_oracle_matches_spark(spark, sf_dir, con):
     assert got == want
 
 
-def test_triangle_oracle_matches_spark(spark, sf_dir, con):
-    got = {
-        r["node"]: r["triangles"]
-        for r in OP.triangle_spark(spark, sf_dir).collect()
-    }
-    want = dict(con.execute(OP.triangle_oracle_sql()).fetchall())
-    assert len(got) > 100
-    assert any(v > 0 for v in got.values())  # the graph closes triangles
-    # counts must discriminate (per-order cliques of different sizes)
-    assert len(set(got.values())) > 3
-    assert got == want
-
-
 def test_orc_roundtrip_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.orc_roundtrip_spark(spark, sf_dir)
+    out = Q.orc_roundtrip_spark(spark, sf_dir)
     cols = out.columns
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(con.execute(OP.orc_roundtrip_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.orc_roundtrip_oracle_sql()).fetchall())
     assert len(got) > 50
     assert got == want
 
@@ -266,7 +256,7 @@ def test_binary_ingest_oracle_matches_spark(spark, sf_dir, con):
     # the binaryFile directory-ingest surface end-to-end: executor-written
     # WAV files -> planning-time glob -> whole-file rows -> real decode;
     # same aggregates as the in-plan wav corpus, so the twin is shared
-    out = OP.binary_ingest_spark(spark, sf_dir)
+    out = Q.binary_file_ingest(spark, sf_dir)
     got = {
         r["doc_id"]: (
             r["n_samples"], r["sample_sum"], r["abs_sum"],
@@ -277,7 +267,7 @@ def test_binary_ingest_oracle_matches_spark(spark, sf_dir, con):
     want = {
         d: (n, ss, ab, pk, zc, ok)
         for d, n, ss, ab, pk, zc, ok in con.execute(
-            OP.wav_corpus_oracle_sql()
+            Q.ORACLE["binary_file_ingest"]
         ).fetchall()
     }
     assert len(got) > 10
@@ -286,99 +276,74 @@ def test_binary_ingest_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_jsonl_roundtrip_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.jsonl_roundtrip_spark(spark, sf_dir)
+    out = Q.jsonl_roundtrip_spark(spark, sf_dir)
     cols = out.columns
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(con.execute(OP.jsonl_roundtrip_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.jsonl_roundtrip_oracle_sql()).fetchall())
     assert len(got) > 30
     assert got == want
 
 
 def test_format_roundtrip_family_oracle_matches_spark(spark, sf_dir, con):
     # documents view needed alongside lineitem — `con` has both
-    out = OP.format_roundtrip_family_spark(spark, sf_dir)
+    out = Q.format_roundtrip_family(spark, sf_dir)
     cols = out.columns
     got = sorted(
         tuple(r[c] for c in cols) for r in out.collect()
     )
     want = sorted(
-        con.execute(OP.format_roundtrip_family_oracle_sql()).fetchall()
+        con.execute(Q.ORACLE["format_roundtrip_family"]).fetchall()
     )
     assert len(got) > 80 and len({row[0] for row in got}) == 2
     assert got == want
 
 
-def test_kcore_oracle_matches_spark(spark, sf_dir, con):
-    got = {
-        r["node"]: r["degree"]
-        for r in OP.kcore_spark(spark, sf_dir).collect()
-    }
-    want = dict(con.execute(OP.kcore_oracle_sql()).fetchall())
-    assert len(got) > 100  # a real surviving core, not a trivial wipeout
-    assert got == want
-
-
 def test_event_funnel_family_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.event_funnel_family_spark(spark, sf_dir)
+    out = Q.event_funnel_family(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(
         tuple(r[c] for c in cols) for r in out.collect()
     )
-    want = sorted(con.execute(OP.event_funnel_family_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.ORACLE["event_funnel_family"]).fetchall())
     assert len(got) > 20 and len({row[0] for row in got}) == 4
     assert got == want
 
 
 def test_family_registrations_use_the_snapshot_oracles():
-    # r15 registration: the standalone parents retired, so the old
-    # verbatim-copy drift pins retired with them. What remains to
-    # pin: the REGISTERED family oracles are exactly the literal
-    # snapshot constants frozen from the parents' r13-green SQL (if
-    # someone inlines or regenerates an oracle, this catches the
-    # registration drifting from the proven snapshot).
-    from data_frame_spark.queries import ORACLE
-
-    assert ORACLE["event_funnel_family"] == OP.EVENT_FUNNEL_FAMILY_ORACLE
-    assert ORACLE["meanmax_curve_family"] == OP.MEANMAX_CURVE_FAMILY_ORACLE
-    assert ORACLE["index_ops_family"] == OP.INDEX_OPS_FAMILY_ORACLE
-    # r16: frozen byte-identically from the lazy composition while
-    # the three standalone decontamination rows still existed
-    assert ORACLE["decontamination_family"] == OP.DECONTAMINATION_FAMILY_ORACLE
-    # r17: frozen byte-identically from the lazy composition while
-    # the two standalone binary doc-level rows still existed
-    assert ORACLE["binary_features_family"] == OP.BINARY_FEATURES_FAMILY_ORACLE
-    # r18: frozen byte-identically from the lazy composition while
-    # the fits v1 + fit_residuals rows still existed
-    assert ORACLE["fits_family"] == OP.FITS_FAMILY_ORACLE
-    # the registration returns the constant itself, so the equality
-    # above is circular post-retirement (r18 review finding); this
-    # checksum is the independent byte-identity link — computed from
-    # the live generator composition in the freeze session. An edit
-    # to the 13 KB literal fails HERE, not first in DuckDB parity.
+    # the family rows register FROZEN literal oracles (snapshots of
+    # their retired parents' verified SQL); each checksum is the
+    # independent byte-identity link to the frozen text, so an edit
+    # to a literal fails HERE, not first in DuckDB parity
     import hashlib
 
-    assert (
-        hashlib.md5(OP.FITS_FAMILY_ORACLE.encode()).hexdigest()
-        == "ef0493a1c14e2f38e6e0a6a41ffc6159"
-    )
+    frozen = {
+        "event_funnel_family": "5623806f4132a4f9cfc3d399248588cc",
+        "meanmax_curve_family": "a651f4c721c0a4efc41f228834db0eaf",
+        "index_ops_family": "f94e018edee970ba754d03cf3189c301",
+        "decontamination_family": "daa696eeb586761515746d58e8f9ee21",
+        "binary_features_family": "fc1487ea204796da71291485d20fe345",
+        "fits_family": "ef0493a1c14e2f38e6e0a6a41ffc6159",
+    }
+    for name, digest in frozen.items():
+        assert hashlib.md5(Q.ORACLE[name].encode()).hexdigest() == digest, name
 
 
 def test_meanmax_curve_family_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.meanmax_curve_family_spark(spark, sf_dir)
+    out = Q.meanmax_curve_family(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(
         tuple(r[c] for c in cols) for r in out.collect()
     )
-    want = sorted(con.execute(OP.meanmax_curve_family_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.ORACLE["meanmax_curve_family"]).fetchall())
     assert len(got) > 8 and len({row[0] for row in got}) == 2
     assert got == want
 
 
 def test_sssp_oracle_matches_spark(spark, sf_dir, con):
     got = {
-        r["node"]: r["dist"] for r in OP.sssp_spark(spark, sf_dir).collect()
+        r["node"]: r["dist"] for r in Q.sssp_cheapest_route(spark, sf_dir).collect()
     }
-    want = dict(con.execute(OP.sssp_oracle_sql(max_rounds=4)).fetchall())
+    want = dict(con.execute(Q.ORACLE["sssp_cheapest_route"]).fetchall())
     assert len(got) > 100
     # seeds at 0; weighted costs actually accumulate over multi-hop paths
     assert 0 in set(got.values()) and max(got.values()) > 0
@@ -386,10 +351,10 @@ def test_sssp_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_scd2_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.scd2_spark(spark, sf_dir)
+    out = Q.scd2_customer_dim(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(con.execute(OP.scd2_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.ORACLE["scd2_customer_dim"]).fetchall())
     assert len(got) > 100
     assert got == want
     # real SCD2 structure: exactly one current row per key, and the
@@ -402,29 +367,29 @@ def test_scd2_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_index_ops_family_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.index_ops_family_spark(spark, sf_dir)
+    out = Q.index_ops_family(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(con.execute(OP.index_ops_family_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.ORACLE["index_ops_family"]).fetchall())
     assert len(got) > 20 and len({row[0] for row in got}) == 2
     assert got == want
 
 
 def test_image_corpus_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.image_corpus_spark(spark, sf_dir)
+    out = Q.image_corpus_features(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(con.execute(OP.image_corpus_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.ORACLE["image_corpus_features"]).fetchall())
     assert len(got) > 10 and len({row[1] for row in got}) == 2
     assert all(row[-1] for row in got)  # every payload parsed ok
     assert got == want
 
 
 def test_table_diff_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.table_diff_spark(spark, sf_dir)
+    out = Q.table_diff_customers(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(con.execute(OP.table_diff_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.ORACLE["table_diff_customers"]).fetchall())
     kinds = {row[1] for row in got}
     assert kinds == {"added", "removed", "changed"}
     assert got == want
@@ -433,9 +398,9 @@ def test_table_diff_oracle_matches_spark(spark, sf_dir, con):
 def test_ppr_oracle_matches_spark(spark, sf_dir, con):
     got = {
         r["node"]: r["rank_micro"]
-        for r in OP.ppr_spark(spark, sf_dir).collect()
+        for r in Q.ppr_part_seeds(spark, sf_dir).collect()
     }
-    want = dict(con.execute(OP.ppr_oracle_sql(iterations=4)).fetchall())
+    want = dict(con.execute(Q.ORACLE["ppr_part_seeds"]).fetchall())
     assert len(got) > 100
     # personalization is real: non-seed-reachable mass stays 0 only if
     # disconnected — on this connected fixture every node ends > 0 by
@@ -449,25 +414,27 @@ def test_ppr_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_graph_suite_v2_oracle_matches_spark(spark, sf_dir, con):
-    # REGISTERED at r16 (graph_suite_family re-pointed here; the
-    # kcore facet folded into the suite, kcore row retired — the
-    # composition pin v2 == parents retired with it after holding
-    # through the r15 pre-proof)
-    out = OP.graph_suite_family_spark(spark, sf_dir)
+    out = Q.graph_suite_family(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(con.execute(OP.graph_suite_family_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.ORACLE["graph_suite_family"]).fetchall())
     assert len({row[0] for row in got}) == 4
+    tri = {node: v for facet, node, v in got if facet == "triangles"}
+    assert len(tri) > 100
+    assert any(v > 0 for v in tri.values())  # the graph closes triangles
+    # counts must discriminate (per-order cliques of different sizes)
+    assert len(set(tri.values())) > 3
+    # a real surviving k-core, not a trivial wipeout
+    assert sum(1 for row in got if row[0] == "kcore_degree") > 100
     assert got == want
 
 
 def test_gapfill_oracle_matches_spark(spark, sf_dir, con):
-    # r16 new-surface candidate: time-bucket gap-fill (locf + linear
-    # facets) — parity pre-proof before any registry slot opens
-    out = OP.gapfill_spark(spark, sf_dir)
+    # time-bucket gap-fill, locf + linear facets
+    out = Q.gapfill_daily_value(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(con.execute(OP.gapfill_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.ORACLE["gapfill_daily_value"]).fetchall())
     assert len(got) > 100
     # real gaps exist AND get filled (locf facet: n=0 rows with a
     # non-null filled value)
@@ -476,11 +443,10 @@ def test_gapfill_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_merge_upsert_oracle_matches_spark(spark, sf_dir, con):
-    # r16 new-surface candidate: MERGE INTO / SCD1 upsert — parity
-    # pre-proof before any registry slot opens
-    out = OP.merge_upsert_spark(spark, sf_dir)
+    # MERGE INTO / SCD1 upsert
+    out = Q.merge_upsert_customers(spark, sf_dir)
     got = sorted((r["c_custkey"], r["c_mktsegment"]) for r in out.collect())
-    want = sorted(con.execute(OP.merge_upsert_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.ORACLE["merge_upsert_customers"]).fetchall())
     assert len(got) > 100
     segs = {s for _, s in got if s}
     # all three branches fire: overwrites, survivors, inserts
@@ -491,16 +457,15 @@ def test_merge_upsert_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_decontamination_family_oracle_matches_spark(spark, sf_dir, con):
-    # r16 slot-funding merge candidate (net -2): the three
-    # decontamination rows on one NULL-superset facet union
-    out = OP.decontamination_family_spark(spark, sf_dir)
+    # the three decontamination legs on one NULL-superset facet union
+    out = Q.decontamination_family(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(
         tuple(r[c] for c in cols) for r in out.collect()
     )
     want = sorted(
         tuple(row) for row in con.execute(
-            OP.decontamination_family_oracle_sql()
+            Q.ORACLE["decontamination_family"]
         ).fetchall()
     )
     assert len(got) > 20 and len({row[0] for row in got}) == 3
@@ -508,14 +473,12 @@ def test_decontamination_family_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_binary_features_family_oracle_matches_spark(spark, sf_dir, con):
-    # registered r17 (slot-funding merge, net -1; pre-proven as the
-    # spare r16 candidate)
-    out = OP.binary_features_family_spark(spark, sf_dir)
+    out = Q.binary_features_family(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
     want = sorted(
         tuple(row) for row in con.execute(
-            OP.binary_features_family_oracle_sql()
+            Q.ORACLE["binary_features_family"]
         ).fetchall()
     )
     assert len(got) > 20 and len({row[0] for row in got}) == 2
@@ -525,20 +488,18 @@ def test_binary_features_family_oracle_matches_spark(spark, sf_dir, con):
 def test_binary_features_leg_guard():
     # unknown leg names fail loudly (the decontamination_leg motion)
     with pytest.raises(ValueError, match="unknown binary_features leg"):
-        OP.binary_features_leg(None, "", "nope")
+        Q.binary_features_leg(None, "", "nope")
 
 
 def test_fits_family_v2_oracle_matches_spark(spark, sf_dir, con):
-    # registered r18 (slot-funding merge, net -1; funded
-    # binary_file_ingest + psi_value_drift)
-    out = OP.fits_family_spark(spark, sf_dir)
+    out = Q.fits_family(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(
         tuple(r[c] for c in cols) for r in out.collect()
     )
     want = sorted(
         tuple(row) for row in con.execute(
-            OP.fits_family_oracle_sql()
+            Q.ORACLE["fits_family"]
         ).fetchall()
     )
     # 7 fit kinds + 2 residual kinds, facet-disjoint
@@ -547,27 +508,28 @@ def test_fits_family_v2_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_pivot_melt_oracle_matches_spark(spark, sf_dir, con):
-    # registered r17 (the free rotation slot): bounded-domain
-    # pivot + melt round trip
-    out = OP.pivot_melt_spark(spark, sf_dir)
+    # bounded-domain pivot + melt round trip
+    out = Q.pivot_melt_orders(spark, sf_dir)
     got = sorted(
         (r["o_orderstatus"], r["o_orderpriority"], r["n"])
         for r in out.collect()
     )
-    want = sorted(con.execute(OP.pivot_melt_oracle_sql()).fetchall())
+    want = sorted(con.execute(Q.ORACLE["pivot_melt_orders"]).fetchall())
     # full grid: every (status, priority) cell exists exactly once
     assert len(got) == len({(s, p) for s, p, _ in got})
-    assert len(got) % len(OP.PIVOT_PRIORITIES) == 0
+    assert len(got) % len(Q.PIVOT_PRIORITIES) == 0
     assert got == want
 
 
 def test_psi_drift_oracle_matches_spark(spark, sf_dir, con):
-    # r17+ new-surface candidate (pre-proven r16): PSI distribution
-    # drift of even- vs odd-user value distributions per event_type
-    out = OP.psi_spark(spark, sf_dir)
+    # PSI distribution drift of even- vs odd-user value
+    # distributions per event_type
+    out = Q.psi_value_drift(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(tuple(row) for row in con.execute(OP.psi_oracle_sql()).fetchall())
+    want = sorted(
+        tuple(row) for row in con.execute(Q.ORACLE["psi_value_drift"]).fetchall()
+    )
     assert len(got) == 5  # one row per event_type
     # the parity cohorts draw from the same distribution, so PSI is
     # pure finite-sample jitter: nonzero (the arithmetic isn't

@@ -80,7 +80,7 @@ def test_no_data_sized_partitionless_windows(spark, sf_dir):
     # (r15), which truncates the lineage the walk above can see —
     # re-pin the PRE-checkpoint ladder directly (the round-10
     # mean_max_user_family recipe)
-    from data_frame_spark.oracle_prep import meanmax_curve_ladder
+    from data_frame_spark.queries import meanmax_curve_ladder
 
     ladder = meanmax_curve_ladder(spark, sf_dir)
     bad = C.partitionless_for_query("meanmax_curve_family", ladder)
@@ -188,7 +188,7 @@ def test_binary_features_legs_are_narrow(spark, sf_dir):
     # (mapInPandas) — zero exchanges on either leg, and the facet
     # union adds none (plan-level). Pinned per-leg (the
     # decontamination_leg motion) so the pins outlive the union.
-    from data_frame_spark.oracle_prep import binary_features_leg
+    from data_frame_spark.queries import binary_features_leg
 
     meta = binary_features_leg(spark, sf_dir, "meta")
     feats = binary_features_leg(spark, sf_dir, "features")
@@ -221,7 +221,7 @@ def test_bloom_gate_broadcasts_and_stays_doc_keyed(spark, sf_dir):
     # ones. Pinned on the family's bloom LEG (the standalone row
     # retired into decontamination_family at r16) so the pin sees
     # the gate itself, not the facet union.
-    from data_frame_spark.oracle_prep import decontamination_leg
+    from data_frame_spark.queries import decontamination_leg
 
     df = decontamination_leg(spark, sf_dir, "bloom")
     assert C.uses_broadcast_join(df)
@@ -444,7 +444,7 @@ def test_decontamination_broadcasts_benchmark(spark, sf_dir):
     # the benchmark n-gram set must reach the corpus via broadcast —
     # the corpus is never shuffled for the contamination join
     # (pinned on the family's ngram leg since the r16 merge)
-    from data_frame_spark.oracle_prep import decontamination_leg
+    from data_frame_spark.queries import decontamination_leg
 
     df = decontamination_leg(spark, sf_dir, "ngram")
     assert C.uses_broadcast_join(df)
@@ -459,7 +459,7 @@ def test_contamination_audit_is_broadcast_free_at_scale(spark, sf_dir):
     # roll-up join pins SHUFFLE_HASH too (r19 — the sf10 probe caught
     # the planner broadcast-electing the train split's (doc_id,
     # source) projection at 100×, so "left size-elected" was not safe)
-    from data_frame_spark.oracle_prep import decontamination_leg
+    from data_frame_spark.queries import decontamination_leg
 
     with C.scale_planner(spark):
         df = decontamination_leg(spark, sf_dir, "audit")
@@ -526,7 +526,7 @@ def test_interval_join_is_shuffle_equi_join(spark, sf_dir):
     # pre-union attrib leg of event_funnel_family (the r15 merge of
     # clicks_to_purchases_events) so the pin sees the join itself,
     # not the facet union.
-    from data_frame_spark.oracle_prep import event_funnel_leg
+    from data_frame_spark.queries import event_funnel_leg
 
     with C.scale_planner(spark):
         df = event_funnel_leg(spark, sf_dir, "attrib")
@@ -543,7 +543,7 @@ def test_broadcast_allowance_is_counted_not_blanket(spark, sf_dir):
     # on top must flag — declarations never turn the classifier off
     from pyspark.sql import functions as F
 
-    from data_frame_spark.oracle_prep import decontamination_leg
+    from data_frame_spark.queries import decontamination_leg
 
     with C.scale_planner(spark):
         base = decontamination_leg(spark, sf_dir, "ngram")
@@ -566,7 +566,7 @@ def test_broadcast_classifier_catches_forced_corpus_broadcast(spark, sf_dir):
         assert C.data_sized_broadcasts(df)
     # ...and the benchmark-suite decontamination broadcast stays
     # declared-legitimate rather than structurally blessed
-    from data_frame_spark.oracle_prep import decontamination_leg
+    from data_frame_spark.queries import decontamination_leg
 
     with C.scale_planner(spark):
         ddf = decontamination_leg(spark, sf_dir, "ngram")
@@ -1039,10 +1039,10 @@ def test_scd2_is_one_key_exchange_two_sorted_windows(spark, sf_dir):
     # both window passes (lag change-filter, lead effective dating)
     # partition by the key — ONE hash exchange, no join, no
     # partitionless window, no broadcast under the 100 TB planner
-    from data_frame_spark.oracle_prep import scd2_spark
+    from data_frame_spark.queries import scd2_customer_dim
 
     with C.scale_planner(spark):
-        df = scd2_spark(spark, sf_dir)
+        df = scd2_customer_dim(spark, sf_dir)
         assert C.broadcasts_for_query("__scd2__", df) == []
         plan = C.simple_plan(df)
     assert "Join" not in plan
@@ -1053,10 +1053,10 @@ def test_table_diff_is_one_full_outer_key_join(spark, sf_dir):
     # snapshot reconciliation must be ONE key-partitioned full-outer
     # equi-join + narrow classify — no window, and neither
     # corpus-proportional side broadcast under the 100 TB planner
-    from data_frame_spark.oracle_prep import table_diff_spark
+    from data_frame_spark.queries import table_diff_customers
 
     with C.scale_planner(spark):
-        df = table_diff_spark(spark, sf_dir)
+        df = table_diff_customers(spark, sf_dir)
         assert C.broadcasts_for_query("__table_diff__", df) == []
         plan = C.simple_plan(df)
     assert "Window" not in plan

@@ -67,6 +67,21 @@ def test_csv_round_trip(spark, tmp_path):
     assert rows[1]["b"] == 'quote"d'
 
 
+def test_csv_roundtrip_row_registers_one_cleanup(spark, sf_dir, monkeypatch):
+    # building the registered row repeatedly in one process must not
+    # stack an atexit rmtree handler per call for its temp directory
+    import atexit
+
+    from data_frame_spark.queries import csv_roundtrip_lineitem
+
+    calls = []
+    monkeypatch.setattr(atexit, "register", lambda *a, **k: calls.append(a))
+    for _ in range(2):
+        csv_roundtrip_lineitem(spark, sf_dir)
+    mine = [a for a in calls if "dfs_csv_roundtrip" in str(a[1:2])]
+    assert len(mine) <= 1
+
+
 GPX_SAMPLE = """<?xml version="1.0" encoding="UTF-8"?>
 <gpx xmlns="http://www.topografix.com/GPX/1/1" version="1.1" creator="t">
   <wpt lat="45.0" lon="25.0"><time>2020-01-01T00:01:00Z</time><name>L1</name></wpt>

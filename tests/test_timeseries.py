@@ -183,13 +183,13 @@ def test_gapfill_matches_brute_force(spark):
 def test_gapfill_plan_is_entity_keyed(spark, sf_dir):
     # the 100 TB contract: no partitionless window anywhere in the
     # fill passes, and nothing broadcastable under the scale planner
-    from data_frame_spark import oracle_prep as OP
     from data_frame_spark.plans import checks as C
+    from data_frame_spark.queries import gapfill_daily_value
 
-    df = OP.gapfill_spark(spark, sf_dir)
+    df = gapfill_daily_value(spark, sf_dir)
     assert C.data_sized_partitionless_windows(df) == []
     with C.scale_planner(spark):
-        df2 = OP.gapfill_spark(spark, sf_dir)
+        df2 = gapfill_daily_value(spark, sf_dir)
         assert C.broadcasts_for_query("gapfill_daily_value", df2) == []
 
 
@@ -201,7 +201,7 @@ def test_gapfill_oracle_corrections_on_negative_inputs(spark):
     # full Spark-vs-DuckDB parity where the corrections actually fire
     import duckdb
 
-    from data_frame_spark import oracle_prep as OP
+    from data_frame_spark import queries as Q
 
     rows = [
         # user 1: pre-epoch bucket (ts < 0 -> bucket -1, not 0) and a
@@ -225,7 +225,7 @@ def test_gapfill_oracle_corrections_on_negative_inputs(spark):
         for r in __import__("data_frame_spark.operators.timeseries",
                             fromlist=["time_bucket_gapfill"])
         .time_bucket_gapfill(
-            sdf, "tsn", "value", OP.GAPFILL_BUCKET_US, ["user_id"],
+            sdf, "tsn", "value", Q.GAPFILL_BUCKET_US, ["user_id"],
             fill="linear",
         )
         .collect()
@@ -237,7 +237,7 @@ def test_gapfill_oracle_corrections_on_negative_inputs(spark):
     # the oracle emits both facets; keep 'linear' to match
     want = sorted(
         tuple(row[1:])
-        for row in con.execute(OP.gapfill_oracle_sql()).fetchall()
+        for row in con.execute(Q.ORACLE["gapfill_daily_value"]).fetchall()
         if row[0] == "linear"
     )
     assert got == want
@@ -245,6 +245,14 @@ def test_gapfill_oracle_corrections_on_negative_inputs(spark):
     # the negative odd-sum mean floored downward
     assert any(b < 0 for _, b, _, _, _ in got)
     assert (1, 0, 2, -500_001, -500_001) in got
+    # the two floor-division twins agree with Python's floor division
+    # on negative and positive numerators, exact and inexact quotients
+    from data_frame_spark.operators.timeseries import floor_div_expr, sql_floor_div
+
+    for num, den in [(-7, 2), (7, 2), (-6, 2), (0, 3), (-1, 86400)]:
+        sq = spark.sql(f"SELECT {floor_div_expr(str(num), str(den))} AS q")
+        dq = con.execute(f"SELECT {sql_floor_div(str(num), str(den))}")
+        assert sq.first()["q"] == dq.fetchone()[0] == num // den, (num, den)
 
 
 def test_gapfill_composite_partition_keys(spark):

@@ -112,7 +112,7 @@ Reading caveats (round-12/13 advisories):
   `tests/test_plans.py` (e.g.
   `test_duplicate_spans_prechk_shuffle_semi_no_broadcast`, the
   bpe_encode two-branch pins, and the r15
-  `oracle_prep.meanmax_curve_ladder` partitionless re-pin).
+  `queries.meanmax_curve_ladder` partitionless re-pin).
 
 | query | shuffles | guard | tiny | partitionless | broadcast | bcast data-sized | row-python |
 |---|---|---|---|---|---|---|---|
