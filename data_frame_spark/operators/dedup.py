@@ -234,7 +234,6 @@ def ngram_jaccard(
     text_col: str,
     id_col: str,
     shingle_n: int = 3,
-    persist_shingles: bool = False,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs:
@@ -242,18 +241,11 @@ def ngram_jaccard(
     count intersections via join, |A∪B| = |A|+|B|-|A∩B|.
 
     The shingle table feeds three plan branches (sizes + both join
-    sides); ``persist_shingles`` materializes it once (eager
-    localCheckpoint: lineage is cut so every branch reads the stored
-    partitions, and the blocks are reclaimed by the ContextCleaner
-    when the plan is garbage-collected — no session-lifetime cache
-    leak) instead of recomputing the tokenize+md5 pipeline per
-    branch — the standard stage-checkpoint practice for production
-    dedup pipelines (at 100 TB you would write the signature/shingle
-    tables to parquet between stages).
-
-    ``shingles`` accepts a precomputed DISTINCT (__id, __shingle)
-    table (shared with :func:`minhash_signatures` upstream) so the
-    tokenize+md5 pipeline runs once per corpus, not once per stage.
+    sides). ``shingles`` accepts a precomputed DISTINCT
+    (__id, __shingle) table — materialized once by the caller and
+    shared with :func:`minhash_signatures` upstream — so the
+    tokenize+md5 pipeline runs once per corpus, not once per stage or
+    branch.
 
     Join strategy is pinned (guide §3.1): EVERY relation in this
     chain — the shingle table, the per-doc sizes, the candidate
@@ -281,8 +273,6 @@ def ngram_jaccard(
         sh = shingle_rows(df, text_col, id_col, shingle_n).withColumnRenamed(
             "__shingle", "__s"
         ).distinct()
-        if persist_shingles:
-            sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
     inter = (
         pairs.hint("shuffle_hash")

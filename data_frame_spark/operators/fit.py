@@ -17,11 +17,12 @@ Modes (least-squares-fit.rkt:297-360):
   logarithmic  Y = a + b·ln X          (ref :156-168)
   power        Y = a·X^b               (ref :183-196)
 
-Residual = Σ(y - ŷ)² (ref :226-229). Degree <= 2 coefficient math is
-expressed in Column arithmetic (Cramer's rule) so a SQL oracle can
-reproduce it bit-for-bit; higher degrees solve the (d+1)×(d+1)
-normal system driver-side with numpy from the same distributed
-moments (the matrix is tiny; the data never leaves the executors).
+Residual = Σ(y - ŷ)² (ref :226-229). least_squares_fit solves the
+(d+1)×(d+1) normal system driver-side with numpy from the
+distributed moments (the matrix is tiny; the data never leaves the
+executors). The degree-1 fit and SLR are also expressed in Column
+arithmetic (linear_fit_df: Cramer's rule; slr_df) so a SQL oracle
+can reproduce them bit-for-bit.
 
 Simulated-annealing refinement (ref :128-146, :205-221) is a
 driver-side loop whose goal function is the distributed residual
@@ -271,39 +272,3 @@ def slr_df(df: DataFrame, xcol: str, ycol: str, scale: int = 6) -> DataFrame:
     beta = r * F.sqrt(vyn / vxn)
     alpha = F.col("sy") / n - beta * F.col("sx") / n
     return agg.select(alpha.alias("alpha"), beta.alias("beta"), r.alias("r"))
-
-
-def poly2_fit_df(df: DataFrame, xcol: str, ycol: str, scale: int = 4) -> DataFrame:
-    """Degree-2 fit as a 1-row DataFrame (a0, a1, a2) via Cramer's
-    rule on the 3x3 normal equations — pure Column arithmetic so a
-    SQL oracle reproduces it bit-for-bit:
-        | n   Σx   Σx² | |a0|   |Σy  |
-        | Σx  Σx²  Σx³ | |a1| = |Σxy |
-        | Σx² Σx³  Σx⁴ | |a2|   |Σx²y|
-    """
-    d = _xy(df, xcol, ycol)
-    X, Y = F.col("__x"), F.col("__y")
-    agg = d.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dsum(X, scale).alias("sx"),
-        dsum(X * X, scale).alias("sx2"),
-        dsum(X * X * X, scale).alias("sx3"),
-        dsum(X * X * X * X, scale).alias("sx4"),
-        dsum(Y, scale).alias("sy"),
-        dsum(X * Y, scale).alias("sxy"),
-        dsum(X * X * Y, scale).alias("sx2y"),
-    )
-    n, sx, sx2 = F.col("n"), F.col("sx"), F.col("sx2")
-    sx3, sx4 = F.col("sx3"), F.col("sx4")
-    sy, sxy, sx2y = F.col("sy"), F.col("sxy"), F.col("sx2y")
-
-    def det3(a, b, c, d_, e, f, g, h, i):
-        return a * (e * i - f * h) - b * (d_ * i - f * g) + c * (d_ * h - e * g)
-
-    det = det3(n, sx, sx2, sx, sx2, sx3, sx2, sx3, sx4)
-    d0 = det3(sy, sx, sx2, sxy, sx2, sx3, sx2y, sx3, sx4)
-    d1 = det3(n, sy, sx2, sx, sxy, sx3, sx2, sx2y, sx4)
-    d2 = det3(n, sx, sy, sx, sx2, sxy, sx2, sx3, sx2y)
-    return agg.select(
-        (d0 / det).alias("a0"), (d1 / det).alias("a1"), (d2 / det).alias("a2")
-    )

@@ -7,8 +7,6 @@ physical hints:
 
 * ``join_small_dim`` broadcasts the small side explicitly — at
   100 TB the fact side never shuffles for dimension joins.
-* ``exact_dedup`` is hash-aggregation (``dropDuplicates``), the
-  baseline for the dedup family in :mod:`dedup`.
 
 Everything else (inner/left/semi/anti, union/intersect/except) is
 the native DataFrame API; queries.py registers representative
@@ -37,9 +35,3 @@ def semi_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> Dat
 
 def anti_join(left: DataFrame, right: DataFrame, on: str | Sequence[str]) -> DataFrame:
     return left.join(right, on=on, how="left_anti")
-
-
-def exact_dedup(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Exact deduplication: one hash-shuffle on the key columns
-    (map-side combine removes most duplicates before the exchange)."""
-    return df.dropDuplicates(list(subset) if subset else None)

@@ -64,7 +64,6 @@ def asof_join(
     p = (
         probes.withColumn("__k", _qc(on).cast(b.schema["__k"].dataType))
         .withColumn("__tag", F.lit(probe_tag))
-        .withColumn("__row", F.lit(None).cast(b.schema["__row"].dataType))
     )
     u = p.unionByName(b, allowMissingColumns=True)
 
@@ -115,11 +114,7 @@ def interpolated_lookup(
             *[_qc(c).cast("double").alias(c) for c in value_cols],
         ).alias("__row"),
     )
-    p = (
-        probes.withColumn("__k", F.col(on).cast("double"))
-        .withColumn("__tag", F.lit(1))
-        .withColumn("__row", F.lit(None).cast(b.schema["__row"].dataType))
-    )
+    p = probes.withColumn("__k", F.col(on).cast("double")).withColumn("__tag", F.lit(1))
     u = p.unionByName(b, allowMissingColumns=True)
 
     # backward pass: last base key/value at or before the probe

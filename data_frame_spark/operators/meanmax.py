@@ -576,26 +576,17 @@ def mean_max_probe(df, value_col, x_col, mm, partition_by=(), slice_scale=None):
     ).select(
         *pcols, "duration", "pos", F.col("__e.__k").alias("__k"), F.col("__e.__end").alias("__end")
     )
-    nd = F.lit(None).cast("double")
     base = sliced.select(
         *pcols,
         F.col("__x").alias("__k"),
         F.lit(0).alias("__tag"),
-        nd.alias("duration"),
-        nd.alias("pos"),
-        F.lit(None).cast("int").alias("__end"),
         F.col("__x").alias("__bx"),
         F.col("__A").alias("__bA"),
         F.col("__nx").cast("double").alias("__bnx"),
         F.col("__nA").cast("double").alias("__bnA"),
     )
-    u = (
-        probes.withColumn("__tag", F.lit(1))
-        .withColumn("__bx", nd)
-        .withColumn("__bA", nd)
-        .withColumn("__bnx", nd)
-        .withColumn("__bnA", nd)
-        .unionByName(base)
+    u = probes.withColumn("__tag", F.lit(1)).unionByName(
+        base, allowMissingColumns=True
     )
     # base rows carry next-pointers: the forward bracket is the
     # backward bracket's next sample — one ASC running pass with a

@@ -235,18 +235,6 @@ def probes_from_dots(pd: Column, num_planes: int, num_probes: int) -> Column:
     return F.concat(F.array(home), flips)
 
 
-def lsh_bucket(vec: Column, dim: int, num_planes: int = 8) -> Column:
-    """Sign-LSH bucket id: bit h = 1 iff vec · hyperplane_h > 0."""
-    return home_from_dots(plane_dots(vec, dim, num_planes), num_planes)
-
-
-def probe_buckets(
-    vec: Column, dim: int, num_planes: int = 8, num_probes: int = 1
-) -> Column:
-    """Multi-probe bucket list (see :func:`probes_from_dots`)."""
-    return probes_from_dots(plane_dots(vec, dim, num_planes), num_planes, num_probes)
-
-
 def lsh_ann_topk(
     base: DataFrame,
     queries: DataFrame,
@@ -936,9 +924,9 @@ def _codes_batched(vq: Column, codebooks) -> Column:
 
 def _require_micro_books(codebooks) -> tuple[int, int, int]:
     """Validate PQ codebooks and return (m, k, sub). Fails loudly on
-    the two silent-garbage inputs: float codebooks (pq_fit's DEFAULT
-    micro=False output — F.lit(int(x)) would truncate every component
-    to 0 and every code to 0) and ragged shapes."""
+    the two silent-garbage inputs: float codebooks (e.g. micro/1e6
+    components — F.lit(int(x)) would truncate every component to 0
+    and every code to 0) and ragged shapes."""
     m = len(codebooks)
     if not m or not codebooks[0]:
         raise ValueError("codebooks must be non-empty list[m][k][sub]")
@@ -952,7 +940,7 @@ def _require_micro_books(codebooks) -> tuple[int, int, int]:
                 if not isinstance(x, int) or isinstance(x, bool):
                     raise TypeError(
                         "codebooks must be the MICRO integer form "
-                        "(pq_fit(micro=True)); got "
+                        "(as pq_fit returns); got "
                         f"{type(x).__name__} component {x!r}"
                     )
     return m, ks.pop(), subs.pop()
@@ -975,8 +963,7 @@ def pq_fit(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    micro: bool = False,
-) -> list[list[list[float]]] | list[list[list[int]]]:
+) -> list[list[list[int]]]:
     """Fit m per-subspace codebooks of k centroids each (k-means with
     min-L2 assignment — the PQ objective, unlike the dot-max IVF
     coarse quantizer). Seeds are the k vectors with smallest
@@ -989,7 +976,8 @@ def pq_fit(
     groupBy((j, cid))-sum over the whole corpus, not m sequential
     re-scans (the shared _lloyd_iterations contract, min-L2 metric).
     Only m*k*(dim/m) integers ever reach the driver, so fitting
-    scales to any corpus."""
+    scales to any corpus. Returns the MICRO integer codebooks
+    list[m][k][sub] that pq_encode/pq_adc_topk/ivf_pq_topk take."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
@@ -1021,9 +1009,7 @@ def pq_fit(
         ).alias("__e")
     ).select("__e.__j", "__e.__sv")
     _lloyd_iterations(sv, books, iterations, sub, "l2")
-    if micro:
-        return books
-    return [[[c / 1e6 for c in cent] for cent in book] for book in books]
+    return books
 
 
 def pq_encode(
@@ -1039,7 +1025,7 @@ def pq_encode(
     array instead of re-evaluating the quantization per subspace
     (interpreted higher-order lambdas sit outside codegen CSE — the
     round-7 text.py lesson). ``codebooks`` must be the MICRO integer
-    form (pq_fit(micro=True)) — float codebooks raise TypeError, and
+    form (as pq_fit returns) — float codebooks raise TypeError, and
     vectors whose length differs from the fitted m*sub raise at
     execution instead of silently truncating/null-padding."""
     m, _, sub = _require_micro_books(codebooks)
@@ -1104,7 +1090,7 @@ def pq_adc_topk(
     WindowGroupLimit prunes map-side (~k rows per query reach the
     exchange). Output: (query_id, vec_id, adc_dist_micro2, rank),
     rank 1 = nearest, ties toward the smaller vec_id. ``codebooks``
-    must be the MICRO integer form (pq_fit(micro=True)) — float
+    must be the MICRO integer form (as pq_fit returns) — float
     codebooks raise TypeError; query vectors of the wrong length
     raise at execution."""
     m, _, sub = _require_micro_books(codebooks)
@@ -1156,7 +1142,7 @@ def ivf_pq_topk(
     once — interpreted lambdas sit outside codegen CSE); only the
     operational-constant query batch broadcasts; ranking is a
     per-query row_number that WindowGroupLimit prunes map-side.
-    ``codebooks`` must be the MICRO integer form (pq_fit(micro=True));
+    ``codebooks`` must be the MICRO integer form (as pq_fit returns);
     ``centroids`` (float micro/1e6 form) skips the coarse fit when the
     caller already holds one."""
     m, _, sub = _require_micro_books(codebooks)

@@ -28,6 +28,15 @@ Oracle-authoring pitfalls (learned the hard way):
 * **Bare decimal literals type as DECIMAL, not DOUBLE** — wrap
   literal arrays in ``CAST([...] AS DOUBLE[])`` when the Spark side
   computes in doubles (see the LSH hyperplanes).
+
+Facet unions: a ``*_family`` row unions its facet legs into one
+table whose columns are the superset of the legs' columns. Each leg
+selects only the columns it computes, plus ``facet``; the legs are
+joined with ``unionByName(other, allowMissingColumns=True)``, which
+fills a column a leg lacks with a NULL of the type the other leg
+gives it. Columns come out in first-appearance order; where the
+oracle orders them otherwise, the row picks its leg order or ends
+in one ``select`` of names.
 """
 
 from __future__ import annotations
@@ -576,7 +585,6 @@ def histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     during each other's driver round-trips. The facets are
     independent subtrees with exact integer counts, so construction
     order cannot affect the output."""
-    _dnull = F.lit(None).cast("double")
     li = t(spark, sf_dir, "lineitem")
     # ONE lineitem bucket aggregate feeds the plain, normalized and
     # trimmed-percentage views (r18, guide §2.3/§2.4: the three views
@@ -605,7 +613,6 @@ def histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("bucket").cast("string").alias("bucket"),
                 "bucket_start",
                 F.col("count").cast("double").alias("count"),
-                _dnull.alias("count_2"),
                 "norm_count",
                 "pct",
                 F.col("pct").isNotNull().alias("in_trim"),
@@ -623,10 +630,6 @@ def histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("bucket").cast("string").alias("bucket"),
             "bucket_start",
             F.col("count").cast("double").alias("count"),
-            _dnull.alias("count_2"),
-            _dnull.alias("norm_count"),
-            _dnull.alias("pct"),
-            F.lit(None).cast("boolean").alias("in_trim"),
         )
 
     def strings_facet():
@@ -634,12 +637,7 @@ def histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         return OpHist.string_histogram(ev, "event_type").select(
             F.lit("string").alias("facet"),
             "bucket",
-            _dnull.alias("bucket_start"),
             F.col("count").cast("double").alias("count"),
-            _dnull.alias("count_2"),
-            _dnull.alias("norm_count"),
-            _dnull.alias("pct"),
-            F.lit(None).cast("boolean").alias("in_trim"),
         )
 
     def combined_facet():
@@ -668,16 +666,17 @@ def histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bucket_start",
             F.col("count_1").cast("double").alias("count"),
             F.col("count_2").cast("double").alias("count_2"),
-            _dnull.alias("norm_count"),
-            _dnull.alias("pct"),
-            F.lit(None).cast("boolean").alias("in_trim"),
         )
 
     numeric, weighted, strings, combined = build_parallel(
         spark, numeric_facet, weighted_facet, strings_facet, combined_facet
     )
+    # combined first: count_2 precedes norm_count/pct/in_trim in the
+    # oracle's column order
     return (
-        numeric.unionByName(weighted).unionByName(strings).unionByName(combined)
+        combined.unionByName(numeric, allowMissingColumns=True)
+        .unionByName(weighted, allowMissingColumns=True)
+        .unionByName(strings, allowMissingColumns=True)
     )
 
 
@@ -905,10 +904,11 @@ def top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ONE driver-checked query covers the whole lineitem fit family
 # (linear / slr / log / poly2 / poly3 / power): one distributed
 # moment aggregate (map-side combinable, exact quantized sums), then
-# O(1) coefficient arithmetic. The Cramer determinants are generated
-# by the SAME cofactor-expansion code for the Python floats (Spark
-# side) and the SQL text (oracle side), so both engines execute an
-# identical IEEE expression tree — bit-equal without rounding.
+# O(1) coefficient arithmetic. The frozen oracle SQL's Cramer
+# determinants were generated from the cofactor-expansion tree of
+# _det/_cramer below; the float side must keep that same tree, so
+# both engines execute an identical IEEE expression tree — bit-equal
+# without rounding.
 # Log/power rows stay ROUND(...,6): their moments contain per-row
 # LN() whose last ulp may differ between engines.
 # ---------------------------------------------------------------------------
@@ -916,26 +916,11 @@ def top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 from data_frame_spark.operators import fit as OpFit
 
 
-class _S:
-    """Symbolic scalar: mirrors float arithmetic as parenthesized SQL."""
-
-    def __init__(self, s):
-        self.s = str(s)
-
-    def __add__(self, o):
-        return _S(f"({self.s} + {o.s})")
-
-    def __sub__(self, o):
-        return _S(f"({self.s} - {o.s})")
-
-    def __mul__(self, o):
-        return _S(f"({self.s} * {o.s})")
-
-
 def _det(m):
-    """Determinant by cofactor expansion along the first row — used
-    with floats (Spark/driver side) AND _S symbols (oracle SQL side)
-    so both engines evaluate the identical expression tree."""
+    """Determinant by cofactor expansion along the first row. The
+    frozen fits oracle SQL was generated from this same tree, so the
+    float evaluation here matches the oracle's expression order
+    exactly — do not reorder it."""
     n = len(m)
     if n == 1:
         return m[0][0]
@@ -967,8 +952,8 @@ def _round6(x: float) -> float:
 
 def _cramer(mom, rhs, degree):
     """Solve the (degree+1)² Vandermonde normal system by Cramer.
-    mom[k] = Σx^k (mom[0] = n), rhs[i] = Σx^i·y. Works on floats or
-    _S symbols."""
+    mom[k] = Σx^k (mom[0] = n), rhs[i] = Σx^i·y. Same cofactor tree
+    as the frozen oracle SQL (see :func:`_det`)."""
     size = degree + 1
     A = [[mom[i + j] for j in range(size)] for i in range(size)]
     det = _det(A)
@@ -2049,31 +2034,33 @@ def kmv_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = OpSketch.kmv_set_ops(
         ev, "user_id", "event_type", "click", "view", k=64
     ).localCheckpoint(eager=False)
-    nl = F.lit(None).cast("long")
-    nd = F.lit(None).cast("double")
     pair = F.concat_ws("|", "scope_a", "scope_b")
     scope_rows = d.select(
         F.lit("scope").alias("facet"), "scope", "kmv_k", "estimate",
-        F.col("exact_distinct").alias("exact"), nl.alias("metric_micro"),
+        F.col("exact_distinct").alias("exact"),
     )
     union_rows = s.select(
         F.lit("union").alias("facet"), pair.alias("scope"),
         F.col("union_k").alias("kmv_k"),
         F.col("union_estimate").alias("estimate"),
-        F.col("exact_union").alias("exact"), nl.alias("metric_micro"),
+        F.col("exact_union").alias("exact"),
     )
     jacc_rows = s.select(
         F.lit("jaccard").alias("facet"), pair.alias("scope"),
-        F.col("union_k").alias("kmv_k"), nd.alias("estimate"),
-        nl.alias("exact"), F.col("jaccard_micro").alias("metric_micro"),
+        F.col("union_k").alias("kmv_k"),
+        F.col("jaccard_micro").alias("metric_micro"),
     )
     inter_rows = s.select(
         F.lit("intersection").alias("facet"), pair.alias("scope"),
-        F.col("union_k").alias("kmv_k"), nd.alias("estimate"),
+        F.col("union_k").alias("kmv_k"),
         F.col("exact_inter").alias("exact"),
         F.col("inter_estimate_micro").alias("metric_micro"),
     )
-    return scope_rows.unionAll(union_rows).unionAll(jacc_rows).unionAll(inter_rows)
+    return (
+        scope_rows.unionByName(union_rows, allowMissingColumns=True)
+        .unionByName(jacc_rows, allowMissingColumns=True)
+        .unionByName(inter_rows, allowMissingColumns=True)
+    )
 
 
 @query(
@@ -2680,24 +2667,21 @@ def spans_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = OpDedup.duplicate_spans(
         docs, "text", "doc_id", k=5, keep_first=True, wins_rows=wins
     )
-    nb = F.lit(None).cast("long")
-    ns = F.lit(None).cast("string")
     s_leg = spans.select(
         F.lit("spans").alias("facet"), "doc_id", "span_start", "span_end",
         F.col("n_windows").cast("long").alias("n_windows"),
-        nb.alias("n_tokens"), nb.alias("n_kept"), ns.alias("kept_text_md5"),
     )
     c_leg = scrub.select(
-        F.lit("scrub").alias("facet"), "doc_id", nb.alias("span_start"),
-        nb.alias("span_end"), nb.alias("n_windows"), "n_tokens", "n_kept",
+        F.lit("scrub").alias("facet"), "doc_id", "n_tokens", "n_kept",
         F.md5("kept_text").alias("kept_text_md5"),
     )
     k_leg = keep.select(
         F.lit("keep_first").alias("facet"), "doc_id", "span_start", "span_end",
         F.col("n_windows").cast("long").alias("n_windows"),
-        nb.alias("n_tokens"), nb.alias("n_kept"), ns.alias("kept_text_md5"),
     )
-    return s_leg.unionByName(c_leg).unionByName(k_leg)
+    return s_leg.unionByName(c_leg, allowMissingColumns=True).unionByName(
+        k_leg, allowMissingColumns=True
+    )
 
 
 @query(
@@ -2812,7 +2796,7 @@ def _lsh_cte(num_planes: int = 4, dim: int = 64, n_flips: int = 2) -> str:
     the exact doubles), plane dots and norms use the same quantized
     integer accumulation as :func:`OpSim.dot`, and multi-probe picks
     the ``n_flips`` smallest-|margin| bit flips with the same
-    (margin, flipped-bucket) tie-break as ``probe_buckets``. Margins
+    (margin, flipped-bucket) tie-break as ``probes_from_dots``. Margins
     compare as integers — same order as Spark's /1e9 doubles."""
     rows = []
     for h in range(num_planes):
@@ -2963,16 +2947,14 @@ def embedding_dedup_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a",
         "id_b",
         "cosine",
-        F.lit(None).cast("long").alias("cluster_size"),
     )
     cluster_facet = OpGraph.cluster_documents(pairs).select(
         F.lit("cluster").alias("facet"),
         F.col("id").alias("id_a"),
         F.col("cluster_id").alias("id_b"),
-        F.lit(None).cast("double").alias("cosine"),
         "cluster_size",
     )
-    return pair_facet.unionByName(cluster_facet)
+    return pair_facet.unionByName(cluster_facet, allowMissingColumns=True)
 
 
 @query(
@@ -4082,30 +4064,25 @@ def ivf_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = OpSim.ivf_topk(
         emb, probe, dim=64, k=5, n_cells=8, n_probe=2, centroids=cent_float
     )
-    books = OpSim.pq_fit(emb, dim=64, m=2, k=8, iterations=1, micro=True)
+    books = OpSim.pq_fit(emb, dim=64, m=2, k=8, iterations=1)
     pq = OpSim.ivf_pq_topk(
         emb, probe, dim=64, codebooks=books, k=5, n_cells=8, n_probe=2,
         centroids=cent_float,
     )
-    ni = F.lit(None).cast("int")
-    nb = F.lit(None).cast("long")
-    nd = F.lit(None).cast("double")
     c_leg = cent_df.select(
-        F.lit("centroids").alias("facet"), "cid", "dim", "val_micro",
-        nb.alias("query_id"), nb.alias("vec_id"), nd.alias("cosine"),
-        nb.alias("rank"), nb.alias("adc_dist_micro2"),
+        F.lit("centroids").alias("facet"), "cid", "dim", "val_micro"
     )
     a_leg = ann.select(
-        F.lit("ann").alias("facet"), ni.alias("cid"), ni.alias("dim"),
-        nb.alias("val_micro"), "query_id", "vec_id", "cosine",
-        F.col("rank").cast("long").alias("rank"), nb.alias("adc_dist_micro2"),
+        F.lit("ann").alias("facet"), "query_id", "vec_id", "cosine",
+        F.col("rank").cast("long").alias("rank"),
     )
     p_leg = pq.select(
-        F.lit("pq").alias("facet"), ni.alias("cid"), ni.alias("dim"),
-        nb.alias("val_micro"), "query_id", "vec_id", nd.alias("cosine"),
+        F.lit("pq").alias("facet"), "query_id", "vec_id",
         F.col("rank").cast("long").alias("rank"), "adc_dist_micro2",
     )
-    return c_leg.unionByName(a_leg).unionByName(p_leg)
+    return c_leg.unionByName(a_leg, allowMissingColumns=True).unionByName(
+        p_leg, allowMissingColumns=True
+    )
 
 
 @query(
@@ -4243,7 +4220,7 @@ def pq_adc_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     same md5-ordered seeds, min-(d2, cid) assignments, floor means,
     and integer ADC sums."""
     emb = t(spark, sf_dir, "embeddings")
-    books = OpSim.pq_fit(emb, dim=64, m=2, k=8, iterations=1, micro=True)
+    books = OpSim.pq_fit(emb, dim=64, m=2, k=8, iterations=1)
     codes = OpSim.pq_encode(emb, books)
     probe = emb.where(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -4421,29 +4398,30 @@ def roundtrip_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tback = TCXSrc.read_tcx(spark, txml)
 
-    def widen(df: DataFrame, facet: str, cols: tuple) -> DataFrame:
-        # the readers drop never-present series (an all-NULL alt
-        # slice, or every column on an empty slice) — reinstate them
-        # as NULL so the facet schemas line up regardless of fixture.
-        # Columns NOT in ``cols`` are forced NULL even when the reader
+    track = ("timestamp", "lat", "lon", "alt", "hr", "dst")
+
+    def leg(df: DataFrame, facet: str, cols: tuple) -> DataFrame:
+        # Columns NOT in ``cols`` stay out even when the reader
         # produced them: read_gpx derives a cumulative-haversine dst
         # when absent — real reader behavior, but it is the
         # haversine_track_events row's job, not this format-fidelity
         # row's (trig would reintroduce the libm ULP hazard here).
         return df.select(
-            F.lit(facet).alias("facet"),
-            *[
-                (
-                    F.col(c)
-                    if c in cols and c in df.columns
-                    else F.lit(None).cast("double")
-                ).alias(c)
-                for c in ("timestamp", "lat", "lon", "alt", "hr", "dst")
-            ],
+            F.lit(facet).alias("facet"), *[c for c in cols if c in df.columns]
         )
 
-    return widen(gback.df, "gpx", ("timestamp", "lat", "lon", "alt")).unionAll(
-        widen(tback.df, "tcx", ("timestamp", "lat", "lon", "alt", "hr", "dst"))
+    out = leg(gback.df, "gpx", track[:4]).unionByName(
+        leg(tback.df, "tcx", track), allowMissingColumns=True
+    )
+    # the readers drop never-present series (an all-NULL alt slice,
+    # or every column on an empty slice) — reinstate them as NULL so
+    # the schema holds regardless of fixture
+    return out.select(
+        "facet",
+        *[
+            F.col(c) if c in out.columns else F.lit(None).cast("double").alias(c)
+            for c in track
+        ],
     )
 
 
@@ -4799,27 +4777,25 @@ def xml_corpus_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     - 'tcx': the mirror on the disjoint %3==1 slice through tcx_xml /
       sources/tcx.py parse_many, with the extra HR/Distance channels.
 
-    NULL-superset facet union: each leg's absent channels are typed
-    NULL columns, nullable on BOTH engines (the kmv_family dtype
-    pattern — both sides pandas-coerce together). At 100 TB each leg
-    is serialize + parse as two narrow passes; only the final
-    users-sized aggregates shuffle, and the union is plan-level (no
-    extra exchange)."""
-    nb = F.lit(None).cast("long")
+    Each leg's absent channels are NULL, nullable on BOTH engines
+    (the kmv_family dtype pattern — both sides pandas-coerce
+    together). At 100 TB each leg is serialize + parse as two narrow
+    passes; only the final users-sized aggregates shuffle, and the
+    union is plan-level (no extra exchange)."""
     g = gpx_corpus_read_docs(spark, sf_dir).select(
         F.lit("gpx").alias("facet"), "user_id", "n_points",
         "lat_micro_sum", "lon_micro_sum", "n_ele", "ele_micro_sum",
-        nb.alias("n_alt"), nb.alias("alt_micro_sum"),
-        nb.alias("hr_micro_sum"), nb.alias("dst_micro_sum"),
         "t_min", "t_max",
     )
     x = tcx_corpus_read_docs(spark, sf_dir).select(
         F.lit("tcx").alias("facet"), "user_id", "n_points",
-        "lat_micro_sum", "lon_micro_sum", nb.alias("n_ele"),
-        nb.alias("ele_micro_sum"), "n_alt", "alt_micro_sum",
+        "lat_micro_sum", "lon_micro_sum", "n_alt", "alt_micro_sum",
         "hr_micro_sum", "dst_micro_sum", "t_min", "t_max",
     )
-    return g.unionByName(x)
+    u = g.unionByName(x, allowMissingColumns=True)
+    # t_min/t_max last, as in the oracle
+    last = ("t_min", "t_max")
+    return u.select(*[c for c in u.columns if c not in last], *last)
 
 
 CUSUM_TARGET_MICRO = 500_000
@@ -5095,19 +5071,15 @@ def bpe_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     merges = bpe_fit(docs, n_merges=12, strict=True)
     enc = bpe_encode(docs, merges, "text", "doc_id")
-    nb = F.lit(None).cast("long")
-    ns = F.lit(None).cast("string")
     fit_leg = merges.select(
-        F.lit("fit").alias("facet"), "rank", "left", "right", "pair_n",
-        nb.alias("doc_id"), nb.alias("n_subwords"), ns.alias("tokens_md5"),
+        F.lit("fit").alias("facet"), "rank", "left", "right", "pair_n"
     )
     enc_leg = enc.select(
-        F.lit("encode").alias("facet"), nb.alias("rank"), ns.alias("left"),
-        ns.alias("right"), nb.alias("pair_n"), "doc_id",
+        F.lit("encode").alias("facet"), "doc_id",
         F.size("bpe_tokens").cast("long").alias("n_subwords"),
         F.md5(F.array_join("bpe_tokens", " ")).alias("tokens_md5"),
     )
-    return fit_leg.unionByName(enc_leg)
+    return fit_leg.unionByName(enc_leg, allowMissingColumns=True)
 
 
 # The classifier weights are a DETERMINISTIC operational constant
@@ -5478,27 +5450,23 @@ def binary_corpus_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle computes identical aggregates straight from the events
     slices (disjoint %3 slices from the XML corpus rows), so any loss
-    in pack -> decode breaks the hash. NULL-superset facet union,
-    nullable on both engines. At 100 TB each leg is one narrow
+    in pack -> decode breaks the hash. Each leg's absent columns are
+    NULL, nullable on both engines. At 100 TB each leg is one narrow
     mapInPandas pass over pre-partitioned payloads; only the
     users-sized aggregates shuffle."""
-    nb = F.lit(None).cast("long")
-    ns = F.lit(None).cast("string")
     wav = wav_corpus_spark(spark, sf_dir).select(
         F.lit("wav").alias("facet"), "doc_id",
         "n_samples", "sample_sum", "abs_sum", "peak_abs", "zero_crossings",
-        ns.alias("format"), ns.alias("major_brand"), nb.alias("timescale"),
-        nb.alias("duration_units"), nb.alias("duration_us"),
-        nb.alias("n_tracks"), "ok",
+        "ok",
     )
     vid = video_corpus_spark(spark, sf_dir).select(
         F.lit("video").alias("facet"), "doc_id",
-        nb.alias("n_samples"), nb.alias("sample_sum"), nb.alias("abs_sum"),
-        nb.alias("peak_abs"), nb.alias("zero_crossings"),
         "format", "major_brand", "timescale", "duration_units",
         "duration_us", "n_tracks", "ok",
     )
-    return wav.unionByName(vid)
+    u = wav.unionByName(vid, allowMissingColumns=True)
+    # ok last, as in the oracle
+    return u.select(*[c for c in u.columns if c != "ok"], "ok")
 
 
 def triangle_edges_sql() -> str:
@@ -5898,8 +5866,8 @@ def format_roundtrip_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     table through sources/orc.py and read back, partition columns
     reconstructed) and 'jsonl' (a documents slice through the
     schema-first JSONL writer/reader in sources/jsonl.py, corrupt-row
-    quarantine column verified NULL). NULL-superset facet union,
-    nullable on both engines. The oracles read the SAME slices
+    quarantine column verified NULL). Each leg's absent columns are
+    NULL, nullable on both engines. The oracles read the SAME slices
     straight from parquet, so any loss in
     write -> read (types, partition reconstruction, row coverage,
     text fidelity via md5) breaks the hash.
@@ -5909,25 +5877,11 @@ def format_roundtrip_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     columnar/JSONL formats a Spark-native corpus actually uses. At
     100 TB both legs are embarrassingly parallel file IO; only the
     ORC partition-key clustering shuffles."""
-    nb = F.lit(None).cast("long")
-    nd = F.lit(None).cast("double")
-    ns = F.lit(None).cast("string")
-    o = orc_roundtrip_spark(spark, sf_dir).select(
-        F.lit("orc").alias("facet"),
-        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
-        "l_discount", "l_returnflag", "l_linestatus",
-        nb.alias("doc_id"), ns.alias("lang"), ns.alias("source"),
-        nb.alias("n_chars"), ns.alias("text_md5"),
-    )
+    o = orc_roundtrip_spark(spark, sf_dir).select(F.lit("orc").alias("facet"), "*")
     j = jsonl_roundtrip_spark(spark, sf_dir).select(
-        F.lit("jsonl").alias("facet"),
-        nb.alias("l_orderkey"), nb.alias("l_linenumber"),
-        nd.alias("l_quantity"), nd.alias("l_extendedprice"),
-        nd.alias("l_discount"), ns.alias("l_returnflag"),
-        ns.alias("l_linestatus"),
-        "doc_id", "lang", "source", "n_chars", "text_md5",
+        F.lit("jsonl").alias("facet"), "*"
     )
-    return o.unionByName(j)
+    return o.unionByName(j, allowMissingColumns=True)
 
 
 _ROLLUP_FAMILY_ORACLE = f"""
@@ -6177,28 +6131,6 @@ _EVENT_FUNNEL_FAMILY_ORACLE = """\
     """
 
 
-#: the NULL-superset column plan: (name, producing leg). `facet` is
-#: computed; n_users is SHARED by the funnel and retention legs.
-_EVENT_FUNNEL_COLS = [
-    ("cohort", {"funnel"}),
-    ("n_users", {"funnel", "retention"}),
-    ("n_view", {"funnel"}),
-    ("n_click", {"funnel"}),
-    ("n_purchase", {"funnel"}),
-    ("view_to_click_us", {"funnel"}),
-    ("click_to_purchase_us", {"funnel"}),
-    ("cohort_week", {"retention"}),
-    ("wk_offset", {"retention"}),
-    ("cohort_size", {"retention"}),
-    ("retention_micro", {"retention"}),
-    ("user_id", {"attrib"}),
-    ("click_id", {"attrib"}),
-    ("purchase_id", {"attrib"}),
-    ("lag_seconds", {"attrib"}),
-    ("purchase_value_micro", {"attrib"}),
-]
-
-
 def event_funnel_leg(spark, sf_dir, leg: str):
     """One leg of event_funnel_family, pre-union. Exposed per-leg so
     the plan pins (tests/test_misc_ops.py) keep asserting each leg's
@@ -6305,9 +6237,9 @@ def event_funnel_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     'attrib' (every click->purchase pair within 30 minutes — the
     batch form of the stream-stream interval join,
     streaming/joins.py; the stream==batch parity test pins the
-    watermarked path to this output). NULL-superset facet union,
-    every data column BIGINT, nullable on both engines, padded by the
-    SAME owner sets (``_EVENT_FUNNEL_COLS``) the oracle projects from.
+    watermarked path to this output). Every data column is BIGINT,
+    nullable on both engines; n_users is shared by the funnel and
+    retention legs.
 
     No reference twin (the reference has no group-by/join surface —
     SURVEY §2.4/§2.7 map its fold family to Catalyst aggregation).
@@ -6323,26 +6255,8 @@ def event_funnel_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnel = event_funnel_leg(spark, sf_dir, "funnel")
     retention = event_funnel_leg(spark, sf_dir, "retention")
     attrib = event_funnel_leg(spark, sf_dir, "attrib")
-
-    nb = F.lit(None).cast("long")
-
-    def pad(df, leg):
-        # NULL-pad by the SAME owner sets the oracle projects from —
-        # padding by df.columns would let a leg accidentally carrying
-        # a same-named extra column pass real values where the oracle
-        # emits NULL
-        return df.select(
-            "facet",
-            *[
-                F.col(name) if leg in owners else nb.alias(name)
-                for name, owners in _EVENT_FUNNEL_COLS
-            ],
-        )
-
-    return (
-        pad(funnel, "funnel")
-        .unionByName(pad(retention, "retention"))
-        .unionByName(pad(attrib, "attrib"))
+    return funnel.unionByName(retention, allowMissingColumns=True).unionByName(
+        attrib, allowMissingColumns=True
     )
 
 
@@ -6480,8 +6394,7 @@ def meanmax_curve_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     judgement the reference makes."""
     mm = meanmax_curve_ladder(spark, sf_dir).localCheckpoint(eager=False)
     mm_facet = mm.select(
-        F.lit("mm").alias("facet"), "duration", "best_mean", "pos", "inverted",
-        F.lit(None).cast("double").alias("interpolated_mean"),
+        F.lit("mm").alias("facet"), "duration", "best_mean", "pos", "inverted"
     )
     knots = mm.where(
         (~F.col("inverted"))
@@ -6491,12 +6404,9 @@ def meanmax_curve_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = local_frame(spark, [(s,) for s in _SPLINE_PROBES], "duration double")
     spline = probes.select(
         F.lit("spline").alias("facet"), "duration",
-        F.lit(None).cast("double").alias("best_mean"),
-        F.lit(None).cast("double").alias("pos"),
-        F.lit(None).cast("boolean").alias("inverted"),
         F.round(sp.predict(F.col("duration")), 6).alias("interpolated_mean"),
     )
-    return mm_facet.unionByName(spline)
+    return mm_facet.unionByName(spline, allowMissingColumns=True)
 
 
 #: Frozen snapshot of the facet union of the retired row_range_slice
@@ -6533,35 +6443,26 @@ def index_ops_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, df.rkt:811-818, via operators/window.py:row_range) and
     'equal_range' (df-equal-range / df-all-indices-of,
     df.rkt:450-465: the duplicate-run of a key value as a
-    filter+group). l_quantity is the shared column; the rest
-    NULL-pad per facet.
+    filter+group). l_quantity is the shared column.
 
     At 100 TB: the slice's global ROW_NUMBER runs as range-bucketed
     two-level windows (pinned partitionless-free in
     tests/test_plans.py); the equal-range leg is a pushed-down
     IN-filter + one map-combinable aggregate."""
     li = t(spark, sf_dir, "lineitem")
-    nb = F.lit(None).cast("long")
     sl = OpWindow.row_range(
         li.select("l_orderkey", "l_linenumber", "l_quantity"),
         ["l_orderkey", "l_linenumber"], 100, 120,
     ).select(
-        F.lit("slice").alias("facet"),
-        "l_orderkey", "l_linenumber", "l_quantity",
-        nb.alias("n"), nb.alias("first_key"),
+        F.lit("slice").alias("facet"), "l_orderkey", "l_linenumber", "l_quantity"
     )
     er = (
         li.where(F.col("l_quantity").isin(1.0, 25.0, 50.0))
         .groupBy("l_quantity")
         .agg(F.count(F.lit(1)).alias("n"), F.min("l_orderkey").alias("first_key"))
-        .select(
-            F.lit("equal_range").alias("facet"),
-            nb.alias("l_orderkey"),
-            F.lit(None).cast("int").alias("l_linenumber"),
-            "l_quantity", "n", "first_key",
-        )
+        .select(F.lit("equal_range").alias("facet"), "l_quantity", "n", "first_key")
     )
-    return sl.unionByName(er)
+    return sl.unionByName(er, allowMissingColumns=True)
 
 
 _SET_OPS_FAMILY_ORACLE = """
@@ -6589,8 +6490,8 @@ def set_ops_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     'set_ops' (SQL INTERSECT distinct set semantics over order
     priorities, SURVEY §2.7). Merged from cartesian_region_nation +
     set_ops_order_priorities (both r13-green; the legs are the
-    standalone bodies verbatim). NULL-superset facet union, all
-    columns VARCHAR-nullable on both engines.
+    standalone bodies verbatim). All columns VARCHAR-nullable on both
+    engines.
 
     At 100 TB: the cartesian leg is the bounded demo of an
     explicitly-requested product (5x25 dimension rows — the only
@@ -6598,19 +6499,16 @@ def set_ops_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned distinct-aggregate join on the value key."""
     region = t(spark, sf_dir, "region").select("r_name")
     nation = t(spark, sf_dir, "nation").select("n_name")
-    ns = F.lit(None).cast("string")
     cart = region.crossJoin(nation).select(
-        F.lit("cartesian").alias("facet"), "r_name", "n_name",
-        ns.alias("o_orderpriority"),
+        F.lit("cartesian").alias("facet"), "r_name", "n_name"
     )
     orders = t(spark, sf_dir, "orders")
     fside = orders.where(F.col("o_orderstatus") == "F").select("o_orderpriority")
     oside = orders.where(F.col("o_orderstatus") == "O").select("o_orderpriority")
     so = fside.intersect(oside).select(
-        F.lit("set_ops").alias("facet"), ns.alias("r_name"),
-        ns.alias("n_name"), "o_orderpriority",
+        F.lit("set_ops").alias("facet"), "o_orderpriority"
     )
-    return cart.unionByName(so)
+    return cart.unionByName(so, allowMissingColumns=True)
 
 
 def sssp_edges_sql() -> str:
@@ -7042,24 +6940,6 @@ def ppr_part_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: decontamination_family NULL-superset column plan: (name, type,
-#: producing legs). doc_id is shared by the bloom and ngram legs.
-_DECON_COLS = [
-    ("doc_id", "BIGINT", {"bloom", "ngram"}),
-    ("n_grams", "BIGINT", {"bloom"}),
-    ("bloom_candidates", "BIGINT", {"bloom"}),
-    ("exact_hits", "BIGINT", {"bloom"}),
-    ("bloom_false_positives", "BIGINT", {"bloom"}),
-    ("bench_id", "BIGINT", {"ngram"}),
-    ("shared_ngrams", "BIGINT", {"ngram"}),
-    ("source", "VARCHAR", {"audit"}),
-    ("n_contaminated_docs", "BIGINT", {"audit"}),
-    ("n_bench_docs_hit", "BIGINT", {"audit"}),
-    ("n_pairs", "BIGINT", {"audit"}),
-    ("max_shared", "BIGINT", {"audit"}),
-]
-
-
 #: the bloom filter's bit-array width (deliberately small so the
 #: oracle exercises real false positives)
 _DECON_BLOOM_M = 4096
@@ -7262,8 +7142,7 @@ def decontamination_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontamination by 13-gram collision — hashed n-gram equi-join,
     work ∝ colliding n-grams) and 'audit' (deterministic 90/5/5
     split assignment, then cross-split 5-token leakage rolled up per
-    source). NULL-superset facet union, padded by the SAME owner sets
-    (``_DECON_COLS``) the oracle projects from.
+    source). doc_id is shared by the bloom and ngram legs.
 
     The bloom and ngram legs both consume the corpus's DISTINCT
     (doc_id, md5(13-gram)) relation, and their benchmark side (every
@@ -7314,22 +7193,13 @@ def decontamination_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, shared_g13_legs, lambda: decontamination_leg(spark, sf_dir, "audit")
     )
     legs["audit"] = audit
-
-    def pad(leg: str):
-        return legs[leg].select(
-            F.lit(leg).alias("facet"),
-            *[
-                F.col(name)
-                if leg in owners
-                else F.lit(None)
-                .cast({"VARCHAR": "string", "BIGINT": "long",
-                       "DOUBLE": "double"}[typ])
-                .alias(name)
-                for name, typ, owners in _DECON_COLS
-            ],
-        )
-
-    return pad("bloom").unionByName(pad("ngram")).unionByName(pad("audit"))
+    bloom, ngram, audit = (
+        legs[leg].select(F.lit(leg).alias("facet"), "*")
+        for leg in ("bloom", "ngram", "audit")
+    )
+    return bloom.unionByName(ngram, allowMissingColumns=True).unionByName(
+        audit, allowMissingColumns=True
+    )
 
 
 from data_frame_spark.operators.timeseries import sql_floor_div
@@ -7597,9 +7467,9 @@ def binary_features_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     well under 1e-9; +0.0 normalizes a potential -0.0. The oracle's
     features leg indexes UTF-8 BYTES (high nibble of byte i = hex
     digit 2i-1 of the hex-encoded payload), so non-ASCII documents
-    match the numpy byte histogram exactly. NULL-superset facet
-    union; n_bytes is the SHARED column, unified to BIGINT (the
-    metadata leg's INTEGER widens; values identical).
+    match the numpy byte histogram exactly. n_bytes is the SHARED
+    column, unified to BIGINT (the metadata leg's INTEGER widens;
+    values identical).
 
     At 100 TB both legs are embarrassingly parallel per-document
     scans — zero joins, zero exchanges before the union (the union
@@ -7610,13 +7480,11 @@ def binary_features_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = binary_features_leg(spark, sf_dir, "meta").select(
         F.lit("meta").alias("facet"), "doc_id",
         F.col("n_bytes").cast("long").alias("n_bytes"), "content_md5",
-        F.lit(None).cast("double").alias("entropy"),
     )
     feats = binary_features_leg(spark, sf_dir, "features").select(
-        F.lit("features").alias("facet"), "doc_id", "n_bytes",
-        F.lit(None).cast("string").alias("content_md5"), "entropy",
+        F.lit("features").alias("facet"), "doc_id", "n_bytes", "entropy"
     )
-    return meta.unionByName(feats)
+    return meta.unionByName(feats, allowMissingColumns=True)
 
 
 #: the TPC-H order-priority attribute domain — the EXPLICIT pivot
@@ -7870,21 +7738,9 @@ def fits_family(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("linear", row["sl"], row["np"]), ("poly2", row["sq"], row["np"])],
         "kind string, sse double, n_points long",
     )
-    fits_p = fits.select(
-        F.lit("fits").alias("facet"), "kind", "c0", "c1", "c2", "c3", "r",
-        F.lit(None).cast("double").alias("sse"),
-        F.lit(None).cast("long").alias("n_points"),
-    )
-    res_p = res.select(
-        F.lit("residuals").alias("facet"), "kind",
-        F.lit(None).cast("double").alias("c0"),
-        F.lit(None).cast("double").alias("c1"),
-        F.lit(None).cast("double").alias("c2"),
-        F.lit(None).cast("double").alias("c3"),
-        F.lit(None).cast("double").alias("r"),
-        "sse", "n_points",
-    )
-    return fits_p.unionByName(res_p)
+    fits_p = fits.select(F.lit("fits").alias("facet"), "*")
+    res_p = res.select(F.lit("residuals").alias("facet"), "*")
+    return fits_p.unionByName(res_p, allowMissingColumns=True)
 
 
 @query("binary_file_ingest", oracle=wav_corpus_oracle_sql())

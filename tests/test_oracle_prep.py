@@ -18,7 +18,10 @@ from data_frame_spark import queries as Q
 @pytest.fixture(scope="module")
 def con(sf_dir):
     c = duckdb.connect()
-    for t in ("events", "lineitem", "documents", "customer", "orders", "supplier"):
+    for t in (
+        "events", "lineitem", "documents", "customer", "orders", "supplier",
+        "embeddings", "region", "nation", "part",
+    ):
         p = os.path.join(sf_dir, f"{t}.parquet")
         c.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     yield c
@@ -306,6 +309,31 @@ def test_event_funnel_family_oracle_matches_spark(spark, sf_dir, con):
     )
     want = sorted(con.execute(Q.ORACLE["event_funnel_family"]).fetchall())
     assert len(got) > 20 and len({row[0] for row in got}) == 4
+    assert got == want
+
+
+def _none_safe(row):
+    return tuple((v is None, v) for v in row)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "histogram_family", "kmv_family", "spans_family",
+        "embedding_dedup_family", "ivf_family", "roundtrip_family",
+        "bpe_family", "set_ops_family",
+    ],
+)
+def test_facet_union_oracle_matches_spark(spark, sf_dir, con, name):
+    # positional: the Spark columns in schema order against the
+    # oracle's, so a facet union that reorders its columns fails here
+    out = Q.QUERIES[name](spark, sf_dir)
+    cols = [f.name for f in out.schema.fields]
+    cur = con.execute(Q.ORACLE[name])
+    assert cols == [d[0] for d in cur.description]
+    want = sorted(cur.fetchall(), key=_none_safe)
+    got = sorted((tuple(r[c] for c in cols) for r in out.collect()), key=_none_safe)
+    assert len({row[0] for row in want}) > 1
     assert got == want
 
 

@@ -860,8 +860,8 @@ def test_pq_fit_layout_independent_and_deterministic(spark):
     rng = random.Random(11)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(80)]
     base = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    b1 = SIM.pq_fit(base.coalesce(1), dim=8, m=2, k=4, iterations=2, micro=True)
-    b2 = SIM.pq_fit(base.repartition(7), dim=8, m=2, k=4, iterations=2, micro=True)
+    b1 = SIM.pq_fit(base.coalesce(1), dim=8, m=2, k=4, iterations=2)
+    b2 = SIM.pq_fit(base.repartition(7), dim=8, m=2, k=4, iterations=2)
     assert b1 == b2
     assert len(b1) == 2 and len(b1[0]) == 4 and len(b1[0][0]) == 4
     with pytest.raises(ValueError):
@@ -877,7 +877,7 @@ def test_pq_encode_matches_numpy_argmin(spark):
     dim, m, sub = 6, 3, 2
     rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(50)]
     base = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    books = SIM.pq_fit(base, dim=dim, m=m, k=4, iterations=1, micro=True)
+    books = SIM.pq_fit(base, dim=dim, m=m, k=4, iterations=1)
     got = {r["vec_id"]: list(r["codes"]) for r in
            SIM.pq_encode(base, books).collect()}
     for vid, vec in rows:
@@ -903,7 +903,7 @@ def test_pq_adc_topk_exact_integer_distances_and_recall(spark):
     queries = spark.createDataFrame(
         [(q, rows[q * 17][1]) for q in range(5)], ["query_id", "embedding"]
     )
-    books = SIM.pq_fit(base, dim=dim, m=m, k=8, iterations=2, micro=True)
+    books = SIM.pq_fit(base, dim=dim, m=m, k=8, iterations=2)
     codes = SIM.pq_encode(base, books)
     out = SIM.pq_adc_topk(codes, queries, books, k=k).collect()
     # distances must equal the numpy integer ADC exactly
@@ -936,8 +936,8 @@ def test_pq_adc_topk_exact_integer_distances_and_recall(spark):
 
 def test_pq_rejects_float_codebooks_and_wrong_dims(spark):
     # the two silent-garbage inputs must fail LOUDLY: float codebooks
-    # (pq_fit's default micro=False output would truncate every
-    # component to 0 via int()) and vectors whose length differs from
+    # (the micro/1e6 float form would truncate every component to 0
+    # via int()) and vectors whose length differs from
     # the fitted m*sub (slice would drop tail dims; zip_with would
     # null-pad short ones)
     import random
@@ -948,14 +948,14 @@ def test_pq_rejects_float_codebooks_and_wrong_dims(spark):
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
     base = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    float_books = SIM.pq_fit(base, dim=8, m=2, k=4, iterations=1)  # micro=False
+    books = SIM.pq_fit(base, dim=8, m=2, k=4, iterations=1)
+    float_books = [[[c / 1e6 for c in cent] for cent in book] for book in books]
     with pytest.raises(TypeError, match="MICRO integer form"):
         SIM.pq_encode(base, float_books)
     with pytest.raises(TypeError, match="MICRO integer form"):
         SIM.pq_adc_topk(base.select("vec_id"), base, float_books)
     with pytest.raises(ValueError, match="ragged"):
         SIM.pq_encode(base, [[[1, 2], [3, 4]], [[5, 6, 7]]])
-    books = SIM.pq_fit(base, dim=8, m=2, k=4, iterations=1, micro=True)
     short = spark.createDataFrame(
         [(0, [0.1] * 6)], ["vec_id", "embedding"]
     )
@@ -969,7 +969,7 @@ def test_pq_rejects_float_codebooks_and_wrong_dims(spark):
     # short base row would slice short and null-pad through zip_with,
     # silently corrupting codebook assignment
     with pytest.raises((SparkRuntimeException, Py4JJavaError), match="expected 8 dims, got 6"):
-        SIM.pq_fit(base.union(short), dim=8, m=2, k=4, iterations=1, micro=True)
+        SIM.pq_fit(base.union(short), dim=8, m=2, k=4, iterations=1)
 
 
 def test_ivf_pq_topk_matches_adc_on_probed_cells(spark):
@@ -987,7 +987,7 @@ def test_ivf_pq_topk_matches_adc_on_probed_cells(spark):
     queries = spark.createDataFrame(
         [(q, rows[q * 23][1]) for q in range(3)], ["query_id", "embedding"]
     )
-    books = SIM.pq_fit(base, dim=dim, m=m, k=4, iterations=2, micro=True)
+    books = SIM.pq_fit(base, dim=dim, m=m, k=4, iterations=2)
     out = SIM.ivf_pq_topk(
         base, queries, dim=dim, codebooks=books, k=k,
         n_cells=6, n_probe=2, iterations=2,
@@ -1164,7 +1164,7 @@ def test_batched_assignment_kernels_match_expression_forms(spark):
     ).collect()[0]
     assert nan_got["cell"] == 0 and nan_got["qn"] is None
 
-    books = SIM.pq_fit(base, dim=dim, m=m, k=k, iterations=1, micro=True)
+    books = SIM.pq_fit(base, dim=dim, m=m, k=k, iterations=1)
     enc = {r["vec_id"]: list(r["codes"]) for r in SIM.pq_encode(base, books).collect()}
     q = base.select(
         "vec_id",
