@@ -10,11 +10,12 @@ for very large (100 TB-class) inputs.
 Layout:
   session     — SparkSession builder with scale-appropriate defaults
   frame       — Frame: DataFrame + table properties + declared order
-  sources/    — readers/writers (CSV with reference NA semantics, parquet, GPX/TCX)
+  sources/    — readers/writers (CSV with reference NA semantics, GPX/TCX,
+                JSONL, ORC, binary files, SQL)
   operators/  — the operator library (lookup/as-of, stats, histogram,
                 mean-max, fits, RDP, dedup, similarity, text, multimodal)
   functions/  — scalar expression helpers (haversine, timestamps, ...)
-  streaming/  — Structured Streaming windowed aggregates over events
+  streaming/  — Structured Streaming windows and interval joins over events
   plans/      — plan-inspection helpers (pushdown/codegen assertions)
 """
 

@@ -305,25 +305,6 @@ def ngram_jaccard(
     )
 
 
-def minhash_dedup(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    jaccard_threshold: float | None = None,
-) -> DataFrame:
-    """Full near-dup pipeline: shingle -> minhash -> band -> bucket
-    join [-> exact Jaccard verify]. Returns (id_a, id_b[, jaccard])."""
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    pairs = lsh_candidate_pairs(sigs, id_col, num_hashes, bands)
-    if jaccard_threshold is None:
-        return pairs
-    j = ngram_jaccard(df, pairs, text_col, id_col, shingle_n)
-    return j.where(F.col("jaccard") >= F.lit(jaccard_threshold))
-
-
 def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 60) -> DataFrame:
     """SimHash signature: per token, a 60-bit md5-derived hash votes
     +1/-1 on each bit position weighted by the token's count; the

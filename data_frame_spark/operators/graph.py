@@ -935,83 +935,3 @@ def _sssp_round(e: DataFrame, dists: DataFrame) -> DataFrame:
         .groupBy("node")
         .agg(F.min("dist").alias("dist"))
     )
-
-
-def cooccurrence_graph(
-    df: DataFrame,
-    group_col: str,
-    item_col: str,
-    min_count: int = 1,
-) -> DataFrame:
-    """Build an undirected co-occurrence edge list from long-format
-    (group, item) rows: an edge (u < v, weight = number of groups
-    where both appear) per item pair sharing a group — the
-    graph-construction primitive feeding :func:`triangle_count`,
-    :func:`k_core`, :func:`label_propagation` etc. (items co-bought
-    in an order, terms co-occurring in a document, parts co-ordered —
-    the fixture graph the suite rows use, exposed as an operator).
-    ``min_count`` drops edges seen in fewer groups (the noise floor
-    every real co-occurrence graph needs).
-
-    Scale shape: duplicates collapse BEFORE the pair blowup (one
-    (group, item) distinct), then ONE group-keyed self-equi-join
-    bounded by the per-group item count squared — the blowup is
-    group-local, never global; AQE splits a hot group. The weight
-    aggregate is map-combinable. Integer counts: bit-identical on
-    any engine and partitioning.
-    """
-    if min_count < 1:
-        raise ValueError("cooccurrence_graph min_count must be >= 1")
-    # item ids must be orderable longs for the u < v pair form. String
-    # items (terms) hash deterministically via xxhash64 — callers keep
-    # their own id->term mapping when they need to read edges back; a
-    # silent cast('long') on terms would NULL every row out (round-14
-    # review). Non-castable NUMERIC junk raises via the folded
-    # raise_error recipe instead of vanishing.
-    from pyspark.sql.types import FractionalType, StringType
-
-    item = F.col(item_col)
-    dtype = df.schema[item_col].dataType
-    if isinstance(dtype, StringType):
-        item_id = F.xxhash64(item)
-    else:
-        _BAD = (
-            f"cooccurrence_graph: {item_col} contains values that do "
-            "not cast to long; use numeric or string item ids"
-        )
-        item_id = F.when(
-            item.isNotNull() & item.cast("long").isNull(),
-            F.raise_error(F.lit(_BAD)).cast("long"),
-        )
-        if isinstance(dtype, FractionalType):
-            # fractional ids that are not whole numbers would silently
-            # truncate via cast('long') and collapse distinct items
-            # into one id (r14 advice) — raise loudly instead
-            _BAD_FRAC = (
-                f"cooccurrence_graph: {item_col} contains non-integer "
-                "fractional values that would truncate under "
-                "cast('long'); round or re-key the item ids first"
-            )
-            item_id = item_id.when(
-                item.isNotNull() & (item.cast("long") != item),
-                F.raise_error(F.lit(_BAD_FRAC)).cast("long"),
-            )
-        item_id = item_id.otherwise(item.cast("long"))
-    base = (
-        df.select(
-            F.col(group_col).alias("__g"),
-            item_id.alias("__i"),
-        )
-        .where(F.col("__g").isNotNull() & F.col("__i").isNotNull())
-        .distinct()
-    )
-    a, b = base.alias("a"), base.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.__g") == F.col("b.__g")) & (F.col("a.__i") < F.col("b.__i")),
-    ).select(F.col("a.__i").alias("u"), F.col("b.__i").alias("v"))
-    return (
-        pairs.groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("weight"))
-        .where(F.col("weight") >= min_count)
-    )

@@ -3,19 +3,14 @@ columns with typed metadata (north-star extension, SURVEY §7 Phase 6).
 
 Schema convention: a modality is a ``binary`` payload column plus a
 ``STRUCT`` metadata column (format, dims, duration...). Everything
-that can run without codec libraries is real and tested:
+here runs without codec libraries:
 
 * format sniffing from magic bytes (pure Column ops)
 * byte statistics / byte-histogram features (Arrow-batched
   ``mapInPandas`` — the exact plumbing a real decoder uses: schema
   in, schema out, batch iterator)
-* frame/chunk sampling index plumbing
-
-Actual pixel/sample decoding requires PIL/ffmpeg (absent in this
-container): ``decode_image`` degrades to a clearly-marked
-NotImplementedError unless PIL is importable; the surrounding Spark
-plumbing (UDF signature, schema, batching, partitioning) is real
-and covered by tests with synthetic payloads.
+* WAV waveform, ISO BMFF video and PNG/JPEG header metadata parsed
+  with the standard library
 """
 
 from __future__ import annotations
@@ -131,134 +126,6 @@ def byte_features(df: DataFrame, bin_col: str, id_col: str = "doc_id") -> DataFr
     )
 
 
-DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("pixels_md5", T.StringType()),
-    ]
-)
-
-
-def decode_image(df: DataFrame, bin_col: str, id_col: str = "doc_id") -> DataFrame:
-    """Image decode via PIL when available. The container has no
-    image libraries, so without PIL each row raises a clearly-marked
-    NotImplementedError at execution time — the Spark plumbing
-    (schema, batching) is the deliverable; swap the kernel body on a
-    cluster with PIL installed."""
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image  # noqa: F401
-            import io
-            have_pil = True
-        except ImportError:
-            have_pil = False
-        for pdf in batches:
-            if not have_pil:
-                raise NotImplementedError(
-                    "decode_image requires PIL (not available in this "
-                    "container); byte_features provides the codec-free path"
-                )
-            out = []
-            for i, payload in zip(pdf[id_col], pdf[bin_col]):
-                img = Image.open(io.BytesIO(payload))
-                arr = np.asarray(img)
-                import hashlib
-
-                out.append(
-                    (
-                        int(i),
-                        img.width,
-                        img.height,
-                        arr.shape[2] if arr.ndim == 3 else 1,
-                        hashlib.md5(arr.tobytes()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "channels", "pixels_md5"]
-            )
-
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
-        decode, schema=DECODE_SCHEMA
-    )
-
-
-def sample_frames(df: DataFrame, n_frames_col: str, every_k: int = 10) -> DataFrame:
-    """Frame-sampling index plumbing: for a video row with N frames,
-    emit (row, frame_idx) for every k-th frame — the explode that
-    feeds a frame decoder. Pure Column ops."""
-    idx = F.sequence(
-        F.lit(0), F.greatest(F.col(n_frames_col) - 1, F.lit(0)), F.lit(every_k)
-    )
-    return df.withColumn("frame_idx", F.explode(idx))
-
-
-AUDIO_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("format", T.StringType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("sample_width", T.IntegerType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("duration_us", T.LongType()),
-        T.StructField("ok", T.BooleanType()),
-    ]
-)
-
-
-def audio_metadata(df: DataFrame, bin_col: str, id_col: str = "doc_id") -> DataFrame:
-    """Audio metadata extraction over an opaque binary column —
-    REAL (no codec library needed) for WAV/RIFF payloads via the
-    stdlib ``wave`` reader: channels, sample rate, sample width,
-    frame count, and exact integer-microsecond duration. Non-WAV or
-    corrupt payloads come back as ``ok=false`` rows instead of
-    failing the batch (quarantine semantics, same stance as the
-    JSONL reader). Compressed formats (mp3/ogg/flac) need a codec
-    library; their rows quarantine here and the kernel body is the
-    swap point on a cluster that ships one.
-
-    Scale shape: one narrow Arrow-batched ``mapInPandas`` pass —
-    payload bytes never shuffle; emitted metadata is a few longs per
-    row."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i, payload in zip(pdf[id_col], pdf[bin_col]):
-                row = {
-                    "doc_id": _safe_id(i), "format": None, "channels": None,
-                    "sample_rate": None, "sample_width": None,
-                    "n_frames": None, "duration_us": None, "ok": False,
-                }
-                try:
-                    if payload is not None and bytes(payload[:4]) == b"RIFF":
-                        with wave.open(io.BytesIO(bytes(payload))) as w:
-                            rate = w.getframerate()
-                            frames = w.getnframes()
-                            row.update(
-                                format="wav",
-                                channels=w.getnchannels(),
-                                sample_rate=rate,
-                                sample_width=w.getsampwidth(),
-                                n_frames=frames,
-                                duration_us=(frames * 1_000_000) // rate
-                                if rate
-                                else None,
-                                ok=True,
-                            )
-                except Exception:
-                    pass  # quarantine row stays ok=False
-                out.append(row)
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_SCHEMA.fields])
-
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
-        extract, schema=AUDIO_SCHEMA
-    )
-
-
 WAVEFORM_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -319,9 +186,9 @@ def audio_waveform_features(
     and strict zero crossings (``s[i-1] * s[i] < 0`` — zeros never
     count, so the stat is sign-sequence exact, not threshold-fuzzy).
     Non-WAV, corrupt, non-16-bit or non-mono payloads quarantine as
-    ``ok=false`` rows (same stance as audio_metadata; stereo ZCR
-    over interleaved frames would be channel-soup, so it is refused
-    rather than mis-computed).
+    ``ok=false`` rows instead of failing the batch (stereo ZCR over
+    interleaved frames would be channel-soup, so it is refused rather
+    than mis-computed).
 
     Scale shape: one narrow Arrow-batched ``mapInPandas`` pass —
     payload bytes never shuffle; a few longs per row come out."""
@@ -432,9 +299,9 @@ def video_metadata(df: DataFrame, bin_col: str, id_col: str = "doc_id") -> DataF
     box walking: the ``ftyp`` major brand, the ``moov/mvhd`` movie
     timescale + duration (version 0 and 1 layouts), the exact
     integer-microsecond duration, and the ``trak`` count. Non-BMFF
-    or malformed payloads come back ``ok=false`` (quarantine, same
-    stance as audio_metadata); actual frame decoding needs ffmpeg
-    and stays behind the sample_frames index plumbing.
+    or malformed payloads come back ``ok=false`` (quarantine, the
+    waveform stance); frame decoding needs ffmpeg and is out of
+    scope.
 
     Scale shape: one narrow Arrow-batched ``mapInPandas`` pass —
     payload bytes never shuffle; a few longs per row come out."""
@@ -449,55 +316,6 @@ def video_metadata(df: DataFrame, bin_col: str, id_col: str = "doc_id") -> DataF
 
     return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
         extract, schema=VIDEO_SCHEMA
-    )
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("png", T.BinaryType()),
-    ]
-)
-
-
-def resize_image(
-    df: DataFrame, bin_col: str, width: int, height: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Image resize via PIL when available (the standard
-    training-data normalization step: decode -> resize -> re-encode
-    PNG). The container has no image libraries, so without PIL each
-    batch raises a clearly-marked NotImplementedError — the Spark
-    plumbing (schema, Arrow batching, payload-in/payload-out shape)
-    is the deliverable, same stance as ``decode_image``."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            from PIL import Image
-            import io
-            have_pil = True
-        except ImportError:
-            have_pil = False
-        for pdf in batches:
-            if not have_pil:
-                raise NotImplementedError(
-                    "resize_image requires PIL (not available in this "
-                    "container); audio_metadata/byte_features are the "
-                    "codec-free paths"
-                )
-            out = []
-            for i, payload in zip(pdf[id_col], pdf[bin_col]):
-                img = Image.open(io.BytesIO(payload)).resize((width, height))
-                buf = io.BytesIO()
-                img.save(buf, format="PNG")
-                out.append((int(i), width, height, buf.getvalue()))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "width", "height", "png"]
-            )
-
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
-        kernel, schema=RESIZE_SCHEMA
     )
 
 
@@ -586,7 +404,7 @@ def image_metadata(df: DataFrame, bin_col: str, id_col: str = "doc_id") -> DataF
     from the color type) and JPEG (the SOF marker walk: precision,
     dimensions, component count). Non-image or malformed payloads
     come back ``ok=false`` (quarantine, the audio/video stance);
-    pixel decoding stays behind the PIL-gated ``decode_image``.
+    pixel decoding needs PIL and is out of scope.
 
     Scale shape: one narrow Arrow-batched ``mapInPandas`` pass —
     payload bytes never shuffle; a few longs per row come out."""

@@ -127,30 +127,6 @@ def cosine_topk(
     )
 
 
-def recommended_planes(n_vectors: int, target_bucket: int = 64) -> int:
-    """The sign-LSH scale discipline, executable (r18 sf10 probe):
-    with ``p`` planes the expected bucket population is n/2^p, and
-    the candidate-pair count — within-bucket pairs summed over
-    buckets, times the Hamming<=1 probe multiplier (1+p) — is
-    ~ n²·(1+p)/2^p. At FIXED p that is quadratic in corpus size: the
-    registered embedding_dedup fixture's planes=4 (3/16 of all pairs,
-    chosen for a deterministic small-sf oracle) measured 22.8 s at
-    20k vectors and DID NOT FINISH (>30 min, aborted) at 200k,
-    while planes=12 ran the same 200k pipeline end-to-end in ~37 s
-    (docs/PLANS.md §"Round-18 sf10 probes"). Keeping the bucket
-    population at a CONSTANT target (default 64) makes candidates
-    ~ n·target·(1+p)/2 — linear in n with a log-n probe factor:
-    p = ceil(log2(n / target_bucket)), clamped to [4, 24]."""
-    import math
-
-    if n_vectors <= 0:
-        raise ValueError("recommended_planes needs n_vectors > 0")
-    if target_bucket <= 0:
-        raise ValueError("recommended_planes needs target_bucket > 0")
-    p = math.ceil(math.log2(max(n_vectors / target_bucket, 1.0)))
-    return min(24, max(4, p))
-
-
 def _hyperplane(dim: int, h: int) -> list[float]:
     """Deterministic pseudo-random hyperplane: component i is an
     md5-derived value in [-1, 1] — reproducible in SQL (the oracle

@@ -45,12 +45,10 @@ def kmv_distinct(
     The exact path is gated on the SKETCH state alone (``kmv_k < k``
     — the min-set holds every hash, so |min-set| IS the distinct
     count), never on ``exact_distinct``: the estimate is computable
-    from k longs per group, and it matches the streaming sketch
-    (:mod:`streaming.sketch`) bit for bit, including the D == k
-    boundary where both sides emit (k-1)/u_k. ``exact_distinct`` is
-    carried for demonstration / verification only; a production
-    pipeline drops that column and never pays the full distinct
-    count.
+    from k longs per group (at D == k it emits (k-1)/u_k).
+    ``exact_distinct`` is carried for demonstration / verification
+    only; a production pipeline drops that column and never pays the
+    full distinct count.
 
     ``include_overall`` adds the 'ALL' scope in the SAME pipeline
     (union before the distinct), so grouped + overall sketches cost
@@ -404,93 +402,8 @@ def cms_estimate(
 
 
 # ---------------------------------------------------------------------------
-# grid-quantile sketch (mergeable distributed quantile estimation)
+# grid-quantile sketch (distributed quantile estimation)
 # ---------------------------------------------------------------------------
-
-
-def grid_bin_counts(
-    df: DataFrame,
-    value_col: str,
-    lo: float,
-    hi: float,
-    bins: int = 256,
-    group_col: str | None = None,
-) -> DataFrame:
-    """FIXED-boundary equi-width bin-count sketch — the mergeable
-    half of :func:`grid_quantiles`. Because (lo, hi, bins) are caller
-    constants rather than data-derived, sketches built over
-    independent corpus shards share boundaries and merge by ADDING
-    counts (union + groupBy sum) — the monoid property the streaming
-    monitor (streaming/sketch.py) relies on, pinned by
-    tests/test_sketch.py::test_grid_quantiles_bin_counts_merge_monoid
-    against two shards with genuinely different distributions.
-    Out-of-range values clamp into the edge bins (same rule as the
-    streaming updater). Output: (scope, __b, __c)."""
-    scope = (
-        F.lit("ALL") if group_col is None else F.col(group_col).cast("string")
-    )
-    base = df.select(
-        scope.alias("scope"), F.col(value_col).cast("double").alias("__x")
-    ).where(F.col("__x").isNotNull())
-    if hi == lo:
-        b = F.lit(0).cast("long")
-    else:
-        w = F.lit((hi - lo) / float(bins))
-        b = F.greatest(
-            F.least(
-                F.floor((F.col("__x") - F.lit(lo)) / w),
-                F.lit(bins - 1).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-        )
-    return base.groupBy("scope", b.alias("__b")).agg(
-        F.count(F.lit(1)).alias("__c")
-    )
-
-
-def grid_quantile_readout(
-    counts: DataFrame, probs: list[float], lo: float, hi: float, bins: int = 256
-) -> DataFrame:
-    """Quantile read-out over a fixed-grid bin-count table from
-    :func:`grid_bin_counts` (or a sum-merge of several): cumulative
-    counts, then linear interpolation inside the first bin whose
-    cumulative count reaches ceil(p*n) — identical IEEE double ops
-    to :func:`grid_quantiles` and the streaming updater. Runs on the
-    sketch (≤ groups x bins rows), never the data.
-    Output: (scope, prob_pct, n, bin, est_micro)."""
-    withn = counts.join(
-        counts.groupBy("scope").agg(F.sum("__c").alias("__n")), "scope"
-    )
-    cum = withn.withColumn(
-        "__cum", F.sum("__c").over(Window.partitionBy("scope").orderBy("__b"))
-    )
-    cand = cum.select(
-        "*", F.explode(F.array(*[F.lit(float(p)) for p in probs])).alias("__p")
-    ).withColumn(
-        "__target",
-        F.greatest(F.ceil(F.col("__p") * F.col("__n")).cast("long"), F.lit(1)),
-    ).where(F.col("__cum") >= F.col("__target"))
-    pick = cand.groupBy("scope", "__p").agg(
-        F.min_by(
-            F.struct("__b", "__c", "__cum", "__n", "__target"), F.col("__b")
-        ).alias("s")
-    )
-    frac = (F.col("s.__target") - (F.col("s.__cum") - F.col("s.__c"))) / F.col(
-        "s.__c"
-    )
-    if hi == lo:
-        est = F.lit(float(lo))
-    else:
-        est = F.lit(float(lo)) + F.lit((hi - lo) / float(bins)) * (
-            F.col("s.__b") + frac
-        )
-    return pick.select(
-        "scope",
-        F.floor(F.col("__p") * 100 + F.lit(0.5)).cast("long").alias("prob_pct"),
-        F.col("s.__n").alias("n"),
-        F.col("s.__b").alias("bin"),
-        F.floor(est * 1e6 + F.lit(0.5)).cast("long").alias("est_micro"),
-    )
 
 
 def grid_quantiles(
@@ -509,13 +422,12 @@ def grid_quantiles(
     Pass 1 computes (min, max, n) per group; pass 2 buckets every
     value into one of ``bins`` equal-width bins against the
     broadcast range table and counts per (group, bin). The bin-count
-    table is the SKETCH: fixed boundaries make it a merge monoid
-    (counts from independent corpus shards just add), it is
-    aggregate-sized (≤ groups x bins rows), and the quantile read-out
-    — cumulative counts, then linear interpolation inside the first
-    bin whose cumulative count reaches ceil(p*n) — runs on the
-    sketch, never the data. Estimation error is bounded by one bin
-    width (hi-lo)/bins, asserted in tests/test_sketch.py.
+    table is the SKETCH: it is aggregate-sized (≤ groups x bins
+    rows), and the quantile read-out — cumulative counts, then linear
+    interpolation inside the first bin whose cumulative count reaches
+    ceil(p*n) — runs on the sketch, never the data. Estimation error
+    is bounded by one bin width (hi-lo)/bins, asserted in
+    tests/test_sketch.py.
 
     Everything is integer counts + IEEE-reproducible double
     arithmetic on (lo, hi), so the estimate is deterministic and

@@ -510,41 +510,15 @@ def fingerprint(col: Column) -> Column:
     return md5_hash(normalize(col))
 
 
-def winnowed_fingerprints(col: Column, k: int = 5, window: int = 4) -> Column:
-    """Winnowing-style robust fingerprints: hash every k-token
-    shingle, then keep the minimum hash of each sliding window of
-    ``window`` consecutive shingle hashes (array<string>, distinct).
-    Local-change-tolerant fingerprints for plagiarism/near-dup
-    detection — standard winnowing, expressed with array ops.
-
-    NOTE: array-lambda formulation — fine for ad-hoc use on small
-    frames; the hot-path equivalent is :func:`winnowed_fingerprint_rows`
-    (codegen-friendly row windows, ~20x faster)."""
-
-    def body(hashes):
-        nwin = F.size(hashes) - F.lit(window - 1)
-        return F.when(nwin <= 0, F.array(F.array_min(hashes))).otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), nwin),
-                    lambda i: F.array_min(F.slice(hashes, i, window)),
-                )
-            )
-        )
-
-    return _bind(
-        F.transform(word_shingles(col, k), lambda s: F.md5(s)), body
-    )
-
-
 def winnowed_fingerprint_rows(
     df: "DataFrame", text_col: str, id_col: str, k: int = 5, window: int = 4
 ) -> "DataFrame":
     """Row-based winnowing: shingle rows (posexplode+lead) -> md5 ->
     MIN over a sliding row frame per document -> distinct. One
     shuffle keyed by document; everything inside codegen. Output:
-    (id, fp) distinct rows — identical fingerprint set to
-    :func:`winnowed_fingerprints`."""
+    (id, fp) distinct rows: the minimum shingle hash of each window of
+    ``window`` consecutive k-token shingles (standard winnowing; a
+    document shorter than one window keeps its single minimum)."""
     from pyspark.sql import Window
 
     sh = shingle_rows(df, text_col, id_col, k, keep_pos=True).withColumn(

@@ -15,11 +15,6 @@ whole-stage codegen, no UDFs):
   grid [0, 2^bits) against its broadcast (min, max) range.
 * :func:`zorder_key` — interleave two grid columns' bits into one
   long key.
-* :func:`cluster_write` — repartitionByRange on the key + parquet
-  write: a total ordering of files by z-value, so every file covers a
-  compact z-range (tight min/max stats on both source columns). The
-  range partitioner samples the key — one extra pass — and the write
-  itself is the only shuffle.
 """
 
 from __future__ import annotations
@@ -74,23 +69,3 @@ def zorder_key(
     return q.withColumn(
         out, interleave_bits(F.col(f"__q_{col_a}"), F.col(f"__q_{col_b}"), bits)
     ).drop(f"__q_{col_a}", f"__q_{col_b}")
-
-
-def cluster_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    bits: int = 16,
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet range-partitioned by the z-key: each output file
-    covers a compact z-range, so min/max stats are tight on BOTH
-    source columns and a predicate on either prunes most files."""
-    keyed = zorder_key(df, col_a, col_b, bits)
-    if n_files is not None:
-        parted = keyed.repartitionByRange(n_files, F.col("zkey"))
-    else:
-        parted = keyed.repartitionByRange(F.col("zkey"))
-    parted.sortWithinPartitions("zkey").write.mode(mode).parquet(path)

@@ -67,10 +67,6 @@ def count_shuffles(df: DataFrame) -> int:
     return simple_plan(df).count("Exchange")
 
 
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")
-
-
 def shuffle_census(df: DataFrame) -> tuple[int, int]:
     """(data_sized, bucket_bounded) shuffle-Exchange counts —
     see :func:`shuffle_census3`, which additionally separates the

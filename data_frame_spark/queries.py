@@ -1304,12 +1304,9 @@ def stratified_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sample_rank").cast("long").alias("sample_rank"),
     )
     uni = OpSample.uniform_sample(docs, "doc_id", 10, salt="u").select(
-        F.lit("uniform").alias("mode"),
-        "doc_id",
-        "lang",
-        F.lit(None).cast("long").alias("sample_rank"),
+        F.lit("uniform").alias("mode"), "doc_id", "lang"
     )
-    return strat.unionByName(uni)
+    return strat.unionByName(uni, allowMissingColumns=True)
 
 
 @query(
@@ -3002,7 +2999,7 @@ def lsh_ann_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Event-time windows (streaming-capable aggregations, batch-checked;
 # the identical DataFrame code runs under Structured Streaming —
-# see data_frame_spark/streaming/ and tests/test_streaming.py)
+# see data_frame_spark/streaming/windows.py and tests/test_streaming.py)
 # ---------------------------------------------------------------------------
 
 from data_frame_spark.streaming import windows as OpWin
@@ -3045,13 +3042,9 @@ def stream_windows_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     sld = OpWin.sliding_counts(ev).select(
-        F.lit("sliding").alias("kind"),
-        "window_start",
-        F.lit(None).cast("string").alias("event_type"),
-        "n",
-        F.lit(None).cast("double").alias("value_sum"),
+        F.lit("sliding").alias("kind"), "window_start", "n"
     )
-    return tum.unionByName(sld)
+    return tum.unionByName(sld, allowMissingColumns=True)
 
 
 @query(
@@ -4837,9 +4830,8 @@ def cusum_oracle_sql(
 def cusum_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user one-sided CUSUM drift statistic over the events
     stream (operators/window.py cusum — the ordered prev-aware fold
-    family, df.rkt:1056-1100, extended to change-point detection;
-    streaming twin in streaming/stateful.py with bit-exact batch
-    parity). The recurrence S_i = max(0, S_{i-1} + (x_i - target))
+    family, df.rkt:1056-1100, extended to change-point detection).
+    The recurrence S_i = max(0, S_{i-1} + (x_i - target))
     looks inherently sequential, but the closed form
     S_i = P_i - min(0, min_{j<=i} P_j) turns it into two
     ROWS-unbounded windows sharing ONE hash exchange + per-key sort —

@@ -6,8 +6,7 @@ one row ``(path, modificationTime, length, content: binary)`` with
 the content column lazily loaded per file — so a directory of images
 becomes a DataFrame whose ``content`` column feeds the
 :mod:`operators.multimodal` pipeline (format sniff → typed metadata →
-Arrow-batched byte features / decode stubs) without any driver-side
-file walking.
+Arrow-batched byte features) without any driver-side file walking.
 
 Scale notes:
 
@@ -25,8 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_frame_spark.operators.multimodal import attach_metadata
-
 
 def read_binary_dir(
     spark: SparkSession,
@@ -42,14 +39,3 @@ def read_binary_dir(
     if recursive:
         reader = reader.option("recursiveFileLookup", "true")
     return reader.load(path)
-
-
-def read_media_corpus(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-) -> DataFrame:
-    """Binary ingest + format sniff in one step: adds the typed
-    ``meta`` struct (format, width/height/duration where the header
-    carries them) next to the raw ``content`` column."""
-    return attach_metadata(read_binary_dir(spark, path, glob), "content")

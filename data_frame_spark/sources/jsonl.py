@@ -22,7 +22,6 @@ contract:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: default corpus shape — matches the `documents` table
@@ -62,26 +61,6 @@ def read_jsonl(
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
     )
-
-
-def quarantine_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined): clean rows lose the corrupt column;
-    quarantined rows keep only the raw line for replay. A frame read
-    without the corrupt column (inference path) is all-clean."""
-    if CORRUPT_COL not in df.columns:
-        return df, df.select(F.lit(None).cast("string").alias(CORRUPT_COL)).where(
-            F.lit(False)
-        )
-    # materialize the parse once (lazy localCheckpoint — computed on
-    # the first action, shared by both outputs, ContextCleaner-
-    # reclaimed): Spark refuses corrupt-column-only queries straight
-    # off a json source (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and a
-    # two-output split wants one parsing pass anyway. At 100 TB the
-    # equivalent is parse -> write clean + quarantine in one job.
-    ck = df.localCheckpoint(eager=False)
-    clean = ck.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
-    bad = ck.where(F.col(CORRUPT_COL).isNotNull())
-    return clean, bad
 
 
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:

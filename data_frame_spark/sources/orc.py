@@ -5,13 +5,12 @@ The reference ships CSV/GPX/TCX/SQL readers (``df-read/csv`` at
 the columnar formats a data-lake user already has. ORC gives the same
 contract as parquet — column pruning, predicate pushdown to the
 stripe/row-group level, hive partition pruning — through Spark's
-built-in ``orc`` data source (no extra packages), so it shares the
-partitioned-layout machinery of :mod:`sources.parquet`.
+built-in ``orc`` data source (no extra packages).
 
-Scale notes mirror the parquet sink: repartition by the hive
-partition columns before the write (avoids the tasks × partitions
-small-files explosion), split giant partitions with
-``maxRecordsPerFile``, and read back with directory-pruning filters.
+Scale notes: repartition by the hive partition columns before the
+write (avoids the tasks × partitions small-files explosion), split
+giant partitions with ``maxRecordsPerFile``, and read back with
+directory-pruning filters.
 """
 
 from __future__ import annotations

@@ -1,14 +1,11 @@
 """SQL surface (reference df-read/sql, private/sql.rkt:30-54).
 
 The reference runs a SQL query over a live DB connection and turns
-the result set into a frame. Our engine's equivalents:
+the result set into a frame. Our engine's equivalent:
 
-* ``read_sql`` — run SQL text against the session catalog (any
-  registered table/view, including every loaded parquet table);
-  ``sql-null`` -> NULL is native.
-* ``read_jdbc`` — pull an external database table/query through the
-  JDBC source with optional partitioned reads (the scale path:
-  predicate-partitioned parallel extraction).
+``read_sql`` runs SQL text against the session catalog (any
+registered table/view, including every loaded parquet table);
+``sql-null`` -> NULL is native.
 """
 
 from __future__ import annotations
@@ -19,30 +16,3 @@ from pyspark.sql import DataFrame, SparkSession
 def read_sql(spark: SparkSession, query: str) -> DataFrame:
     """Run SQL against registered tables; the result is a frame."""
     return spark.sql(query)
-
-
-def read_jdbc(
-    spark: SparkSession,
-    url: str,
-    table_or_query: str,
-    partition_column: str | None = None,
-    lower_bound=None,
-    upper_bound=None,
-    num_partitions: int | None = None,
-    **options: str,
-) -> DataFrame:
-    """JDBC extraction; with a partition column the read fans out
-    into ``num_partitions`` range-bounded queries."""
-    reader = spark.read.format("jdbc").option("url", url).option(
-        "dbtable", table_or_query
-    )
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", str(lower_bound))
-            .option("upperBound", str(upper_bound))
-            .option("numPartitions", str(num_partitions or 8))
-        )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()

@@ -1,9 +1,8 @@
 """Stream-stream time-interval joins (Structured Streaming).
 
-The remaining core Structured Streaming surface after windows/
-stateful/dedup: joining two UNBOUNDED streams on a key within an
-event-time interval — "purchases within 30 minutes of a click by the
-same user". Spark can only run this with bounded state when BOTH
+The Structured Streaming surface beside the windows: joining two
+UNBOUNDED streams on a key within an event-time interval —
+"purchases within 30 minutes of a click by the same user". Spark can only run this with bounded state when BOTH
 sides carry event-time watermarks and the join condition bounds the
 time skew; the watermark + interval together tell the engine when a
 buffered row can never match again and is safe to evict

@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from data_frame_spark.operators import core as OpCore
-from data_frame_spark.operators import dq
 from data_frame_spark.operators import histogram as OpH
 from data_frame_spark.operators import lookup as OpLook
 from data_frame_spark.operators import scatter as OpSc
@@ -117,5 +116,3 @@ def test_struct_field_shadow(spark):
     assert h[1] == 1 and h[2] == 1
     d = OpW.delta(df, "a.b", ["idx"], partition_by=[], name="d")
     assert sorted(r["d"] for r in d.collect() if r["d"] is not None) == [100.0]
-    rep = {r["rule_id"]: r for r in dq.verify(df, [("in_range", "r1", "a.b", 0.0, 150.0)]).collect()}
-    assert rep["r1"]["n_violations"] == 1  # 200.0 violates; struct's -1.0 must not count

@@ -410,40 +410,6 @@ def test_k_core_random_graphs_match_brute_peel(spark, seed):
     assert got == _brute_kcore(edges, k, rounds), (seed, k, rounds)
 
 
-def test_cooccurrence_graph_weights_and_threshold(spark):
-    from data_frame_spark.operators.graph import cooccurrence_graph
-
-    rows = [
-        ("g1", 1), ("g1", 2), ("g1", 3),
-        ("g2", 1), ("g2", 2),
-        ("g2", 2),            # duplicate (group, item): must not inflate
-        ("g3", 2), ("g3", 1),  # order within group is irrelevant
-        ("g4", 9),             # singleton group: no pairs
-        (None, 5), ("g5", None),  # null group/item dropped
-    ]
-    df = spark.createDataFrame(rows, "grp string, item long")
-    got = {
-        (r["u"], r["v"]): r["weight"]
-        for r in cooccurrence_graph(df, "grp", "item").collect()
-    }
-    assert got == {(1, 2): 3, (1, 3): 1, (2, 3): 1}
-    thr = {
-        (r["u"], r["v"]): r["weight"]
-        for r in cooccurrence_graph(df, "grp", "item", min_count=2).collect()
-    }
-    assert thr == {(1, 2): 3}
-    # composes with the suite: the thresholded graph feeds k_core etc.
-    from data_frame_spark.operators.graph import triangle_count
-
-    tri = {
-        r["node"]: r["triangles"]
-        for r in triangle_count(
-            cooccurrence_graph(df, "grp", "item"), "u", "v"
-        ).collect()
-    }
-    assert tri == {1: 1, 2: 1, 3: 1}
-
-
 def test_personalized_pagerank_brute_force(spark):
     from data_frame_spark.operators.graph import pagerank
 
@@ -477,24 +443,6 @@ def test_personalized_pagerank_brute_force(spark):
     assert set(classic) == {1, 2, 3} and all(v > 150000 for v in classic.values())
 
 
-def test_cooccurrence_graph_hashes_string_items(spark):
-    from data_frame_spark.operators.graph import cooccurrence_graph
-
-    df = spark.createDataFrame(
-        [("d1", "apple"), ("d1", "pear"), ("d2", "apple"), ("d2", "pear")],
-        "doc string, term string",
-    )
-    got = {
-        (r["u"], r["v"]): r["weight"]
-        for r in cooccurrence_graph(df, "doc", "term").collect()
-    }
-    # one (apple, pear) edge co-occurring in both docs — ids are the
-    # deterministic xxhash64 of the terms
-    assert list(got.values()) == [2]
-    (u, v), = got.keys()
-    assert u < v and u != 0
-
-
 def test_ppr_keeps_edgeless_seeds(spark):
     from data_frame_spark.operators.graph import pagerank
 
@@ -508,29 +456,6 @@ def test_ppr_keeps_edgeless_seeds(spark):
     # the edge-less seed keeps its restart base and stays in the output
     assert got[99] == 150000
     assert set(got) == {1, 2, 99}
-
-
-def test_cooccurrence_graph_raises_on_fractional_item_ids(spark):
-    # r14 advice: fractional doubles (3.2, 3.9) used to truncate via
-    # cast('long') and collapse into one item id — must raise loudly
-    import pytest
-
-    from data_frame_spark.operators.graph import cooccurrence_graph
-
-    df = spark.createDataFrame(
-        [("g", 3.2), ("g", 3.9)], "grp string, item double"
-    )
-    with pytest.raises(Exception, match="non-integer fractional"):
-        cooccurrence_graph(df, "grp", "item").collect()
-    # whole-number doubles are exact under cast('long'): still fine
-    ok = spark.createDataFrame(
-        [("g", 1.0), ("g", 2.0)], "grp string, item double"
-    )
-    got = {
-        (r["u"], r["v"]): r["weight"]
-        for r in cooccurrence_graph(ok, "grp", "item").collect()
-    }
-    assert got == {(1, 2): 1}
 
 
 def test_branching_loops_truncation_path_matches_brute_force(spark):

@@ -42,63 +42,6 @@ def test_byte_features(spark, binary_df):
     assert out[5]["n_bytes"] == 256
 
 
-def test_decode_image_stub_raises_without_pil(spark, binary_df):
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL available; stub path not applicable")
-    except ImportError:
-        pass
-    with pytest.raises(Exception) as exc:
-        MM.decode_image(binary_df, "payload").collect()
-    assert "NotImplementedError" in str(exc.value) or "decode_image" in str(exc.value)
-
-
-def test_sample_frames(spark):
-    df = spark.createDataFrame([(1, 25), (2, 5)], ["vid", "n_frames"])
-    out = MM.sample_frames(df, "n_frames", every_k=10)
-    got = {(r["vid"], r["frame_idx"]) for r in out.collect()}
-    assert got == {(1, 0), (1, 10), (1, 20), (2, 0)}
-
-
-def test_audio_metadata_real_wav_and_quarantine(spark):
-    # REAL WAV parse via the stdlib reader: synthesize a valid 16-bit
-    # stereo WAV in-memory, plus junk rows that must quarantine
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(2)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(b"\x00\x01" * 2 * 4000)  # 4000 frames = 0.5 s
-    wav_bytes = buf.getvalue()
-    rows = [(1, wav_bytes), (2, b"\x89PNG\r\n\x1a\nnotaudio"), (3, b"RIFFjunk"), (4, None)]
-    df = spark.createDataFrame(rows, ["doc_id", "payload"])
-    got = {r["doc_id"]: r.asDict() for r in MM.audio_metadata(df, "payload").collect()}
-    assert got[1]["ok"] and got[1]["format"] == "wav"
-    assert got[1]["channels"] == 2 and got[1]["sample_rate"] == 8000
-    assert got[1]["sample_width"] == 2 and got[1]["n_frames"] == 4000
-    assert got[1]["duration_us"] == 500000  # exact integer microseconds
-    for bad in (2, 3, 4):
-        assert got[bad]["ok"] is False and got[bad]["format"] is None
-
-
-def test_resize_image_stub_raises_without_pil(spark, binary_df):
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL present; stub branch not reachable")
-    except ImportError:
-        pass
-    out = MM.resize_image(binary_df, "payload", 32, 32)
-    # plumbing is real: schema resolves without execution
-    assert [f.name for f in out.schema.fields] == ["doc_id", "width", "height", "png"]
-    with pytest.raises(Exception, match="NotImplementedError|requires PIL"):
-        out.collect()
-
-
 def _wav_bytes(samples, channels=1, rate=8000):
     import io
     import wave
@@ -268,11 +211,10 @@ def test_sniff_format_riff_beats_accidental_ftyp(spark):
 
 
 def test_extractors_quarantine_null_id(spark):
-    # int(None) raised OUTSIDE the per-row try in all three binary
+    # int(None) raised OUTSIDE the per-row try in the binary
     # extractors; a NULL id must yield a quarantine row, not a task
     # failure (round-12 review finding)
     from data_frame_spark.operators.multimodal import (
-        audio_metadata,
         audio_waveform_features,
         video_metadata,
     )
@@ -280,7 +222,7 @@ def test_extractors_quarantine_null_id(spark):
     df = spark.createDataFrame(
         [(None, b"junk payload")], "doc_id long, payload binary"
     )
-    for op in (audio_metadata, audio_waveform_features, video_metadata):
+    for op in (audio_waveform_features, video_metadata):
         (r,) = op(df, "payload").collect()
         assert r["ok"] is False and r["doc_id"] is None
 

@@ -1064,23 +1064,6 @@ def test_table_diff_is_one_full_outer_key_join(spark, sf_dir):
     assert not C.data_sized_partitionless_windows(df)
 
 
-def test_cooccurrence_graph_blowup_is_group_local(spark, sf_dir):
-    # the pair blowup must ride ONE group-keyed self-equi-join (never
-    # a global cross product) with a map-combinable weight aggregate,
-    # and neither corpus-proportional side may broadcast at scale
-    from data_frame_spark.operators.graph import cooccurrence_graph
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    with C.scale_planner(spark):
-        df = cooccurrence_graph(li, "l_orderkey", "l_partkey", min_count=2)
-        assert C.broadcasts_for_query("__cooccur__", df) == []
-        plan = C.simple_plan(df)
-    assert "Window" not in plan
-    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
-    assert "partial_count" in plan  # weight combines map-side
-    assert not C.data_sized_partitionless_windows(df)
-
-
 def test_pagerank_round_is_vertex_keyed_join_shape(spark, sf_dir):
     # one power iteration (pinned PRE-checkpoint — the registered
     # rows checkpoint each round): the ranks⋈edges contribution

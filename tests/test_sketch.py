@@ -17,10 +17,8 @@ def test_kmv_exact_when_small(spark):
 
 def test_kmv_boundary_d_equals_k_uses_sketch_estimator(spark):
     # D == k: the min-set is full, so the gate (kmv_k < k) routes to
-    # the (k-1)/u_k estimator — the rule the streaming sketch applies
-    # (streaming/sketch.py), keeping stream==batch parity exact at the
-    # boundary. The estimate must come from the sketch alone, never
-    # from exact_distinct.
+    # the (k-1)/u_k estimator. The estimate must come from the sketch
+    # alone, never from exact_distinct.
     from data_frame_spark.functions.texthash import hash60
     from data_frame_spark.operators.sketch import _HASH_SPACE
 
@@ -271,44 +269,6 @@ def test_grid_quantiles_degenerate_single_value_group(spark):
             grid_quantiles(df, "v", [0.5], bins=16, group_col="g").collect()}
     assert rows[("a", 50)]["est_micro"] == 5_000_000
     assert rows[("a", 50)]["n"] == 10
-
-
-def test_grid_quantiles_bin_counts_merge_monoid(spark):
-    # fixed boundaries: sketches from independent shards merge by
-    # ADDING bin counts. Two shards with genuinely DIFFERENT
-    # distributions (a recompute-from-raw impl that ignores merging
-    # cannot pass by symmetry): materialize each shard's bin-count
-    # table, sum-merge them, read out on the merged table, and
-    # compare against the sketch built over the concatenated data.
-    from pyspark.sql import functions as F
-    from data_frame_spark.operators.sketch import (
-        grid_bin_counts,
-        grid_quantile_readout,
-    )
-
-    a = spark.createDataFrame([(float(i),) for i in range(0, 1000)], "v double")
-    b = spark.createDataFrame(
-        [(float(i),) for i in range(500, 1500)], "v double"
-    )
-    LO, HI, BINS = 0.0, 1500.0, 64
-    ca = grid_bin_counts(a, "v", LO, HI, BINS)
-    cb = grid_bin_counts(b, "v", LO, HI, BINS)
-    merged = (
-        ca.unionAll(cb).groupBy("scope", "__b").agg(F.sum("__c").alias("__c"))
-    )
-    whole = grid_bin_counts(a.unionAll(b), "v", LO, HI, BINS)
-    probs = [0.25, 0.5, 0.75, 0.99]
-    est_merged = grid_quantile_readout(merged, probs, LO, HI, BINS).collect()
-    est_whole = grid_quantile_readout(whole, probs, LO, HI, BINS).collect()
-    key = lambda rows: sorted(
-        (r["scope"], r["prob_pct"], r["n"], r["bin"], r["est_micro"])
-        for r in rows
-    )
-    assert key(est_merged) == key(est_whole)
-    # and the merged bin-count tables themselves are identical
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
 
 
 def test_kmv_set_ops_complete_sketches_are_exact(spark):

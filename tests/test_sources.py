@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import math
 import os
-import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -457,11 +456,10 @@ def test_jsonl_round_trip_documents(spark, sf_dir, tmp_path):
     docs = t(spark, sf_dir, "documents")
     out = str(tmp_path / "docs_jsonl")
     J.write_jsonl(docs, out)
-    back = J.read_jsonl(spark, out, schema=J.DOCUMENTS_SCHEMA)
-    clean, bad = J.quarantine_split(back)
-    assert bad.count() == 0
+    back = J.read_jsonl(spark, out, schema=J.DOCUMENTS_SCHEMA).collect()
+    assert all(r[J.CORRUPT_COL] is None for r in back)
     a = {r["doc_id"]: (r["text"], r["lang"], r["source"], r["n_chars"]) for r in docs.collect()}
-    b = {r["doc_id"]: (r["text"], r["lang"], r["source"], r["n_chars"]) for r in clean.collect()}
+    b = {r["doc_id"]: (r["text"], r["lang"], r["source"], r["n_chars"]) for r in back}
     assert a == b
 
 
@@ -474,89 +472,11 @@ def test_jsonl_corrupt_quarantine(spark, tmp_path):
         "{not json at all\n"
         '{"doc_id": 2, "text": null, "lang": "en", "source": "s", "n_chars": 0}\n'
     )
-    df = J.read_jsonl(spark, str(p))
-    clean, bad = J.quarantine_split(df)
-    assert bad.count() == 1
-    assert "{not json" in bad.collect()[0][J.CORRUPT_COL]
-    rows = {r["doc_id"]: r["text"] for r in clean.collect()}
-    assert rows == {1: "good line", 2: None}
-
-
-# ---------------------------------------------------------------------------
-# partitioned parquet layout (sources/parquet.py)
-# ---------------------------------------------------------------------------
-
-
-def test_partitioned_parquet_round_trip_and_pruning(spark, sf_dir, tmp_path):
-    from data_frame_spark.sources.parquet import write_partitioned, read_partitioned
-    from data_frame_spark.plans import checks as C
-    from data_frame_spark.session import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "docs_by_lang")
-    write_partitioned(docs, out, ["lang"])
-
-    back = read_partitioned(spark, out)
-    # content round-trips (partition column moves to the end, values intact)
-    a = {(r["doc_id"], r["lang"], r["text"]) for r in docs.collect()}
-    b = {(r["doc_id"], r["lang"], r["text"]) for r in back.collect()}
-    assert a == b
-
-    # a partition-key predicate prunes directories at PLANNING time
-    q = back.where(F.col("lang") == "en").select("doc_id")
-    plan = C.formatted_plan(q)
-    frag = plan.split("PartitionFilters", 1)
-    assert len(frag) == 2
-    # the equality predicate is a partition filter, NOT a data filter
-    # (data filters would mean every directory is still scanned)
-    assert re.search(r"lang#\d+ = en", frag[1][:200]), frag[1][:200]
-
-
-def test_partitioned_write_one_file_per_partition(spark, sf_dir, tmp_path):
-    from data_frame_spark.sources.parquet import write_partitioned
-    from data_frame_spark.session import load_table
-    import glob
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "docs_files")
-    write_partitioned(docs, out, ["lang"])
-    for d in glob.glob(out + "/lang=*"):
-        # repartition-by-partition-cols => a handful of files per
-        # partition, not tasks x partitions
-        assert len(glob.glob(d + "/*.parquet")) <= 2, d
-
-
-def test_partitioned_write_salted_hot_partition(spark, sf_dir, tmp_path):
-    from data_frame_spark.sources.parquet import write_partitioned
-    from data_frame_spark.session import load_table
-    import glob
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "docs_salted")
-    write_partitioned(docs, out, ["lang"], salt_files=4)
-    sizes = {d: len(glob.glob(d + "/*.parquet")) for d in glob.glob(out + "/lang=*")}
-    # the salt spreads each partition over multiple write tasks
-    assert max(sizes.values()) >= 2, sizes
-
-
-def test_partitioned_parquet_schema_evolution(spark, tmp_path):
-    # appending a shard with a NEW column must coexist with old
-    # files: mergeSchema unions the schemas, old rows read NULL
-    from data_frame_spark.sources.parquet import write_partitioned
-
-    out = str(tmp_path / "evolving")
-    v1 = spark.createDataFrame([(1, "en", "a"), (2, "de", "b")],
-                               "id long, lang string, text string")
-    write_partitioned(v1, out, ["lang"])
-    v2 = spark.createDataFrame([(3, "en", "c", 0.9)],
-                               "id long, lang string, text string, quality double")
-    write_partitioned(v2, out, ["lang"], mode="append")
-
-    back = spark.read.option("mergeSchema", "true").parquet(out)
-    assert set(back.columns) == {"id", "lang", "text", "quality"}
-    rows = {r["id"]: r for r in back.collect()}
-    assert rows[1]["quality"] is None and rows[3]["quality"] == 0.9
-    assert len(rows) == 3
+    rows = J.read_jsonl(spark, str(p)).collect()
+    bad = [r[J.CORRUPT_COL] for r in rows if r[J.CORRUPT_COL] is not None]
+    assert len(bad) == 1 and "{not json" in bad[0]
+    clean = {r["doc_id"]: r["text"] for r in rows if r[J.CORRUPT_COL] is None}
+    assert clean == {1: "good line", 2: None}
 
 
 # ---------------------------------------------------------------------------
@@ -603,7 +523,8 @@ _JPEG = bytes.fromhex("FFD8FFE000104A46") + b"\x00" * 8
 
 
 def test_binary_dir_read_and_sniff(spark, tmp_path):
-    from data_frame_spark.sources.binaryfiles import read_media_corpus
+    from data_frame_spark.operators.multimodal import attach_metadata
+    from data_frame_spark.sources.binaryfiles import read_binary_dir
 
     d = tmp_path / "media"
     (d / "sub").mkdir(parents=True)
@@ -611,7 +532,7 @@ def test_binary_dir_read_and_sniff(spark, tmp_path):
     (d / "sub" / "b.jpg").write_bytes(_JPEG)
     (d / "notes.txt").write_text("not media")
 
-    df = read_media_corpus(spark, str(d))
+    df = attach_metadata(read_binary_dir(spark, str(d)), "content")
     rows = {r["path"].rsplit("/", 1)[-1]: r for r in df.collect()}
     assert set(rows) == {"a.png", "b.jpg", "notes.txt"}
     assert rows["a.png"]["meta"]["format"] == "png"

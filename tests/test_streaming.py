@@ -76,126 +76,6 @@ def test_streaming_session_exact_gap_edge(spark, tmp_path):
     }
 
 
-def test_streaming_dedup_matches_batch(spark, sf_dir, batch_events):
-    from data_frame_spark.streaming import dedup as SD
-
-    stream = W.stream_events(spark, sf_dir)
-    got = W.run_to_memory(
-        SD.exact_dedup_stream(stream.select("user_id", "ts"), ["user_id"]),
-        "t_dedup",
-        mode="append",
-    )
-    # one surviving row per user, same user set as batch distinct
-    expect = {r["user_id"] for r in batch_events.select("user_id").distinct().collect()}
-    rows = got.collect()
-    assert {r["user_id"] for r in rows} == expect
-    assert len(rows) == len(expect)
-
-
-def test_streaming_content_dedup(spark):
-    from data_frame_spark.streaming import dedup as SD
-
-    rows = [
-        (1, "The quick brown fox"),
-        (2, "the  QUICK  brown fox"),  # same content after normalize
-        (3, "something else entirely"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = SD.content_dedup_stream(df).collect()
-    assert len(out) == 2
-    assert {r["text"] for r in out} != set()  # fp column dropped
-    assert "__fp" not in SD.content_dedup_stream(df).columns
-
-
-def test_streaming_minhash_signature_matches_batch_operator(spark, sf_dir):
-    # per-row signature (streaming-safe) == explode+groupBy batch
-    # operator for the same documents and hash family
-    from data_frame_spark.operators import dedup as OpDedup
-    from data_frame_spark.streaming import dedup as SD
-
-    docs = t(spark, sf_dir, "documents").limit(50)
-    perrow = {
-        r["doc_id"]: list(r["__sig"])
-        for r in SD.minhash_signature_col(docs).select("doc_id", "__sig").collect()
-    }
-    batch = {
-        r["doc_id"]: [r[f"mh_{k}"] for k in range(16)]
-        for r in OpDedup.minhash_signatures(docs, "text", "doc_id").collect()
-    }
-    assert perrow == batch and len(perrow) == 50
-
-
-def test_streaming_lsh_band_claims_match_batch(spark, sf_dir):
-    from data_frame_spark.streaming import dedup as SD
-
-    stream = SD.stream_documents(spark, sf_dir)
-    got = W.run_to_memory(
-        SD.lsh_band_claims_stream(stream), "t_lsh_claims", mode="append"
-    )
-    batch_docs = t(spark, sf_dir, "documents").withColumn(
-        "ts", F.timestamp_seconds(F.col("doc_id"))
-    )
-    expect = SD.lsh_band_claims_stream(batch_docs)
-    g = {r["band_key"]: r["id"] for r in got.collect()}
-    e = {r["band_key"]: r["id"] for r in expect.collect()}
-    # identical bucket sets; winners may differ on the few contested
-    # buckets (stream first-arrival is racy across input partitions —
-    # exactly production ingest semantics), but every stream winner
-    # must be a genuine claimant of its bucket
-    assert set(g) == set(e) and len(g) > 0
-    contested = {k for k in g if g[k] != e[k]}
-    if contested:
-        # bucket membership recomputed without any dedup
-        sigs = SD.minhash_signature_col(batch_docs, out="__sig")
-        rows_per_band = 16 // 4
-        band_cols = [
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.lit(b),
-                    *[
-                        F.element_at(F.col("__sig"), b * rows_per_band + i + 1)
-                        for i in range(rows_per_band)
-                    ],
-                )
-            )
-            for b in range(4)
-        ]
-        memb = sigs.select(
-            F.col("doc_id").alias("id"),
-            F.explode(F.array(*band_cols)).alias("band_key"),
-        )
-        mm: dict[str, set] = {}
-        for r in memb.collect():
-            mm.setdefault(r["band_key"], set()).add(r["id"])
-        assert all(g[k] in mm[k] for k in contested)
-        assert len(contested) < len(g) * 0.05
-
-    # admission: every document with a fully-unique band set is
-    # admitted; every admitted document claimed all 4 buckets
-    admitted = {r["id"] for r in SD.lsh_admitted_batch(expect).collect()}
-    n_docs = batch_docs.count()
-    assert 0 < len(admitted) <= n_docs
-    claims_per_admitted = (
-        expect.groupBy("id").count().where(F.col("id").isin(list(admitted)[:20]))
-    )
-    assert all(r["count"] == 4 for r in claims_per_admitted.collect())
-
-
-def test_streaming_signature_dedup(spark, sf_dir):
-    from data_frame_spark.streaming import dedup as SD
-
-    stream = SD.stream_documents(spark, sf_dir)
-    got = W.run_to_memory(
-        SD.signature_dedup_stream(stream), "t_sigdedup", mode="append"
-    )
-    rows = got.collect()
-    n_docs = t(spark, sf_dir, "documents").count()
-    # documents survive unless signature-identical to an earlier one
-    assert 0 < len(rows) <= n_docs
-    assert "__sig" not in got.columns and "__sk" not in got.columns
-
-
 def test_stream_stream_interval_join_matches_batch(spark, sf_dir, batch_events):
     # watermarked stream-stream self-join: (click, purchase) pairs by
     # user within 30 minutes — inner matches must equal the batch

@@ -43,14 +43,6 @@ def test_exact_dedup_normalized(spark, docs):
     assert len(dups) == 1 and dups[0]["keep_id"] == 1  # docs 1 and 3
 
 
-def test_minhash_lsh_finds_near_dups(spark, docs):
-    pairs = D.minhash_dedup(docs, "text", "doc_id", num_hashes=16, bands=8)
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    assert (1, 3) in got  # exact dup always collides
-    assert (1, 2) in got or (2, 3) in got  # near-dup should collide in >=1 band
-    assert (1, 4) not in got and (4, 5) not in got
-
-
 def test_ngram_jaccard_values(spark, docs):
     pairs = spark.createDataFrame([(1, 3), (1, 4)], ["id_a", "id_b"])
     j = {(r["id_a"], r["id_b"]): r["jaccard"] for r in D.ngram_jaccard(docs, pairs, "text", "doc_id").collect()}
@@ -84,14 +76,6 @@ def test_fingerprint_stability(spark, docs):
     by_id = {r["doc_id"]: r["fp"] for r in fp}
     assert by_id[1] == by_id[3]
     assert by_id[1] != by_id[2]
-
-
-def test_winnowed_fingerprints(spark, docs):
-    out = docs.select("doc_id", T.winnowed_fingerprints(F.col("text"), 3, 2).alias("w")).collect()
-    by_id = {r["doc_id"]: set(r["w"]) for r in out}
-    # near-dups share most fingerprints; unrelated docs share none
-    assert by_id[1] & by_id[2]
-    assert not (by_id[1] & by_id[4])
 
 
 def test_cosine_topk_exact(spark):
@@ -1033,34 +1017,6 @@ def test_ivf_pq_topk_matches_adc_on_probed_cells(spark):
         for r in out2.collect()
     }
     assert got2 == got
-
-
-def test_recommended_planes_scale_discipline():
-    # r18 sf10 probe: fixed planes are quadratic in corpus size; the
-    # helper keeps expected bucket population at the constant target
-    from data_frame_spark.operators.similarity import recommended_planes
-
-    import pytest
-
-    # monotone non-decreasing in n
-    ns = [10, 1_000, 20_000, 200_000, 10**7, 10**10, 10**12]
-    ps = [recommended_planes(n) for n in ns]
-    assert ps == sorted(ps)
-    # bucket population n/2^p lands within [target/2, target] once
-    # n is large enough to clear the lower clamp
-    for n, p in zip(ns, ps):
-        if 4 < p < 24:
-            assert 32 <= n / 2**p <= 64
-    # the probe's two concrete operating points
-    assert recommended_planes(20_000) == 9
-    assert recommended_planes(200_000) == 12
-    # clamps
-    assert recommended_planes(1) == 4
-    assert recommended_planes(10**12) == 24
-    with pytest.raises(ValueError):
-        recommended_planes(0)
-    with pytest.raises(ValueError):
-        recommended_planes(100, target_bucket=0)
 
 
 def test_batched_assignment_kernels_match_expression_forms(spark):

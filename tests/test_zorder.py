@@ -1,17 +1,10 @@
-"""Z-order clustering: interleave correctness + data-skipping payoff."""
+"""Z-order keys: interleave correctness and quantization."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from data_frame_spark.operators.zorder import (
-    cluster_write,
-    interleave_bits,
-    zorder_key,
-)
+from data_frame_spark.operators.zorder import interleave_bits, zorder_key
 
 
 def _py_interleave(a: int, b: int, bits: int = 16) -> int:
@@ -43,33 +36,3 @@ def test_zorder_key_quantizes_both_dims(spark):
     assert rows[(100.0, 100.0)] == _py_interleave(65535, 65535)
     assert rows[(100.0, 0.0)] == _py_interleave(65535, 0)
     assert rows[(0.0, 100.0)] == _py_interleave(0, 65535)
-
-
-def test_cluster_write_prunes_on_both_dims(spark, tmp_path):
-    # a 64x64 grid written as 16 z-ordered files: a narrow predicate
-    # on EITHER dimension must exclude most files by min/max stats
-    rows = [(float(x), float(y)) for x in range(64) for y in range(64)]
-    df = spark.createDataFrame(rows, "x double, y double")
-    out = str(tmp_path / "zclustered")
-    cluster_write(df, out, "x", "y", n_files=16)
-
-    files = glob.glob(f"{out}/*.parquet")
-    assert len(files) >= 8
-
-    def surviving(col, lo, hi):
-        n = 0
-        for f in files:
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.to_arrow_schema().get_field_index(col)
-            fmin = min(md.row_group(i).column(idx).statistics.min
-                       for i in range(md.num_row_groups))
-            fmax = max(md.row_group(i).column(idx).statistics.max
-                       for i in range(md.num_row_groups))
-            if fmax >= lo and fmin <= hi:
-                n += 1
-        return n
-
-    # an 1/8-width slab on each axis: z-clustering keeps the
-    # intersecting file count well below "all files" on BOTH axes
-    assert surviving("x", 0.0, 7.0) <= len(files) // 2
-    assert surviving("y", 0.0, 7.0) <= len(files) // 2
