@@ -148,14 +148,16 @@ def bpe_fit(
     )
 
 
+#: the largest distinct-word vocabulary :func:`bpe_encode` broadcasts
+BROADCAST_MAX_WORDS = 2_000_000
+
+
 def bpe_encode(
     df: DataFrame,
     merges: DataFrame | list[tuple[str, str]],
     text_col: str = "text",
     id_col: str = "doc_id",
     out_col: str = "bpe_tokens",
-    vocab_broadcast: bool | str = "auto",
-    broadcast_max_words: int = 2_000_000,
 ) -> DataFrame:
     """Encode the corpus with a learned merge list: (id, subword
     array) per row, empty array for token-free documents. OOV-safe:
@@ -174,22 +176,13 @@ def bpe_encode(
     The word→symbols lookup is SIZE-GATED (round-11 advisory):
     "vocabulary-bounded" is a soft bound — a web corpus's
     distinct-token table (typos, IDs, URLs surviving TOKEN_PATTERN)
-    can reach 10^8 rows, past broadcast practicality. With the
-    default ``vocab_broadcast="auto"`` the checkpointed vocab is
-    counted (one cheap job on the materialized table) and broadcast
-    only when ≤ ``broadcast_max_words``; above the gate — or with
-    ``vocab_broadcast=False`` — the lookup is a pinned SHUFFLE_HASH
-    equi-join on the word, the same no-corpus-broadcast discipline as
-    ngram_contamination. ``True`` forces the broadcast for callers
-    that know their vocabulary is small.
+    can reach 10^8 rows, past broadcast practicality. The
+    checkpointed vocab is counted (one cheap job on the materialized
+    table) and broadcast only when ≤ ``BROADCAST_MAX_WORDS``; above
+    the gate the lookup is a pinned SHUFFLE_HASH equi-join on the
+    word, the same no-corpus-broadcast discipline as
+    ngram_contamination.
     """
-    if not (vocab_broadcast is True or vocab_broadcast is False
-            or vocab_broadcast == "auto"):
-        # any other string is truthy and would silently FORCE the
-        # broadcast, bypassing the size gate this parameter exists for
-        raise ValueError(
-            f"vocab_broadcast must be True, False or 'auto', got {vocab_broadcast!r}"
-        )
     if isinstance(merges, DataFrame):
         mrows = merges.orderBy("rank").select("left", "right").collect()
         mlist = [(r["left"], r["right"]) for r in mrows]
@@ -204,12 +197,10 @@ def bpe_encode(
     vocab = wordsdf.select("word").distinct().select(
         "word", _char_split(F.col("word")).alias("syms")
     )
-    # lazy: the auto-gate count (or the final join) materializes it
+    # lazy: the size-gate count on the checkpointed table IS the job
+    # that materializes it; no rescan
     vocab = vocab.localCheckpoint(eager=False)
-    if vocab_broadcast == "auto":
-        # count on the lazily-checkpointed table: the count IS the
-        # job that materializes it; no rescan either way
-        vocab_broadcast = vocab.count() <= broadcast_max_words
+    vocab_broadcast = vocab.count() <= BROADCAST_MAX_WORDS
     for l, r in mlist:
         vocab = vocab.select(
             "word", _merge_pair(F.col("syms"), l, r).alias("syms")

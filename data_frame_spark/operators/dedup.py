@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_frame_spark.operators.text import normalize, word_shingles, shingle_rows, tokens
+from data_frame_spark.operators.text import normalize, shingle_rows, tokens
 from data_frame_spark.functions.texthash import hash60
 
 
@@ -375,23 +375,6 @@ def _require_gram_contract(df: DataFrame, id_col: str, param: str) -> None:
         )
 
 
-def _bench_join_side(b: DataFrame, broadcast: bool | str) -> DataFrame:
-    """The contamination family's tri-state join contract applied to
-    the benchmark-side relation: True broadcasts (fixed eval suite),
-    False pins a ShuffledHashJoin — not just "no broadcast hint",
-    because at small SF Catalyst's size estimate would still elect to
-    broadcast a corpus-derived side, exactly the plan shape the
-    100 TB contract forbids for split-vs-split audits — and 'auto'
-    leaves the choice to Catalyst + AQE."""
-    if broadcast not in (True, False, "auto"):
-        raise ValueError(f"broadcast must be True, False, or 'auto', got {broadcast!r}")
-    if broadcast is True:
-        return F.broadcast(b)
-    if broadcast is False:
-        return b.hint("shuffle_hash")
-    return b
-
-
 def ngram_contamination(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -399,7 +382,7 @@ def ngram_contamination(
     id_col: str = "doc_id",
     n: int = 13,
     min_overlap: int = 1,
-    broadcast: bool | str = True,
+    broadcast: bool = True,
     corpus_grams: DataFrame | None = None,
     bench_grams: DataFrame | None = None,
 ) -> DataFrame:
@@ -426,8 +409,10 @@ def ngram_contamination(
       when the "benchmark" scales with the corpus (e.g. a held-out
       test SPLIT: 5%% of 100 TB is terabytes of 5-gram hashes, far
       past any broadcast cap / executor memory). Both sides
-      hash-partition on ``__h``; work stays ∝ collisions.
-    * ``'auto'`` — no hint; Catalyst + AQE choose from size stats.
+      hash-partition on ``__h``; work stays ∝ collisions. A pinned
+      ShuffledHashJoin, not just "no broadcast hint": at small SF
+      Catalyst's size estimate would still elect to broadcast a
+      corpus-derived side.
 
     ``corpus_grams`` / ``bench_grams`` (optimization round 18, guide
     §2.3 "do fewer passes"): a caller computing several contamination
@@ -442,6 +427,8 @@ def ngram_contamination(
     per-(doc, bench) count below already counts DISTINCT shared
     hashes either way.
     """
+    if broadcast not in (True, False):
+        raise ValueError(f"broadcast must be True or False, got {broadcast!r}")
     if corpus_grams is None:
         c = shingle_rows(corpus, text_col, id_col, n=n).select(
             F.col("__id").alias("doc_id"), F.md5(F.col("__shingle")).alias("__h")
@@ -451,12 +438,12 @@ def ngram_contamination(
         c = corpus_grams.select(F.col(id_col).alias("doc_id"), "__h")
     if bench_grams is not None:
         _require_gram_contract(bench_grams, id_col, "bench_grams")
-    b = _bench_join_side(
+    b = (
         _hashed_ngrams(benchmark, text_col, id_col, n, "bench_id")
         if bench_grams is None
-        else bench_grams.select(F.col(id_col).alias("bench_id"), "__h"),
-        broadcast,
+        else bench_grams.select(F.col(id_col).alias("bench_id"), "__h")
     )
+    b = F.broadcast(b) if broadcast else b.hint("shuffle_hash")
     return (
         c.join(b, "__h")
         .select("doc_id", "bench_id", "__h")
@@ -676,7 +663,6 @@ def contamination_containment(
     id_col: str = "doc_id",
     n: int = 13,
     min_shared: int = 1,
-    broadcast: bool | str = True,
 ) -> DataFrame:
     """CONTAINMENT-scored decontamination — the graded form of
     :func:`ngram_contamination` (the public recipe behind
@@ -698,19 +684,17 @@ def contamination_containment(
     Scale shape: both sides reduce to distinct hashed-n-gram rows
     (doc-keyed shuffles); the per-document n-gram total rides a
     doc-partitioned window on the SAME distinct relation (no second
-    corpus scan); the collision equi-join obeys the same
-    ``broadcast`` tri-state contract as ngram_contamination (True =
-    fixed eval suite broadcast; False = pinned SHUFFLE_HASH for
-    corpus-proportional "benchmarks"; 'auto' = Catalyst). Work ∝
-    collisions, never |corpus|×|benchmark|.
+    corpus scan); the collision equi-join broadcasts the benchmark
+    side, which must be a fixed eval suite (use
+    :func:`ngram_contamination` with ``broadcast=False`` for
+    corpus-proportional splits). Work ∝ collisions, never
+    |corpus|×|benchmark|.
     """
     cd = _hashed_ngrams(corpus, text_col, id_col, n, "doc_id")
     cdt = cd.withColumn(
         "doc_ngrams", F.count(F.lit(1)).over(Window.partitionBy("doc_id"))
     )
-    b = _bench_join_side(
-        _hashed_ngrams(benchmark, text_col, id_col, n, "bench_id"), broadcast
-    )
+    b = F.broadcast(_hashed_ngrams(benchmark, text_col, id_col, n, "bench_id"))
     return (
         cdt.join(b, "__h")
         .groupBy("doc_id", "bench_id")

@@ -194,25 +194,19 @@ def with_running_sum(
     value_col: str | Column,
     out: str,
     n_buckets: int | None = None,
-    boundaries: Sequence[float] | None = None,
-    totals: dict[int, int | float] | None = None,
 ) -> DataFrame:
     """Inclusive global running sum of ``value_col`` over ``order_by``:
     within-bucket running sum + per-bucket total offsets (collected
     driver-side — |buckets| values — and inlined as a literal lookup).
     Offsets are exact only when the per-bucket totals are; callers
-    pass integer-quantized values (see stats.weighted_quantiles).
-    ``totals`` lets a caller that already aggregated per-bucket sums
-    (keyed by ``bucket_expr(order_by[0], boundaries)``) skip the
-    collect job here — the job-fusion hook for multi-stat queries."""
+    pass integer-quantized values (e.g. token counts)."""
     v = _qc(value_col) if isinstance(value_col, str) else value_col
-    b, w = _bucketed(df, order_by, n_buckets, boundaries)
+    b, w = _bucketed(df, order_by, n_buckets)
     b = b.withColumn("__rsv", v)
-    if totals is None:
-        totals = {
-            r["__bucket"]: r["__t"]
-            for r in b.groupBy("__bucket").agg(F.sum("__rsv").alias("__t")).collect()
-        }
+    totals = {
+        r["__bucket"]: r["__t"]
+        for r in b.groupBy("__bucket").agg(F.sum("__rsv").alias("__t")).collect()
+    }
     nmax = max(totals, default=-1)
     offs, acc = [], 0
     for i in range(nmax + 1):

@@ -34,13 +34,13 @@ from __future__ import annotations
 
 import math
 import random
-from dataclasses import dataclass, field
-from typing import Callable, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_frame_spark.exact import dsum
+from data_frame_spark.operators.annealing import annealing
 
 
 @dataclass
@@ -205,22 +205,20 @@ def fit_residual(d: DataFrame, fit: FitResult, scale: int = 6) -> float:
 
 
 def _anneal(fit: FitResult, d: DataFrame, iterations: int, scale: int) -> FitResult:
-    """Simulated-annealing refinement (ref :128-146): multiplicative
-    neighbour jitter, goal = distributed residual. Probabilistic, as
-    in the reference."""
-    best = list(fit.coefficients)
-    best_cost = fit_residual(d, FitResult(fit.type, best), scale)
-    state, cost = list(best), best_cost
-    for i in range(iterations):
-        temp = 1.0 - i / iterations
-        cand = [c * (1 + temp * (2 * random.random() - 1)) for c in state]
-        cand_cost = fit_residual(d, FitResult(fit.type, cand), scale)
-        if cand_cost < cost or random.random() < math.exp(
-            -(cand_cost - cost) / max(temp, 1e-9)
-        ):
-            state, cost = cand, cand_cost
-            if cost < best_cost:
-                best, best_cost = list(state), cost
+    """Simulated-annealing refinement (ref :128-146) through the
+    generic :func:`annealing` search: multiplicative neighbour
+    jitter, goal = distributed residual. Probabilistic, as in the
+    reference."""
+    rng = random.Random()
+    best = annealing(
+        list(fit.coefficients),
+        goal=lambda c: fit_residual(d, FitResult(fit.type, c), scale),
+        neighbour=lambda state, temp: [
+            c * (1 + temp * (2 * rng.random() - 1)) for c in state
+        ],
+        iterations=iterations,
+        rng=rng,
+    )
     return FitResult(fit.type, best)
 
 

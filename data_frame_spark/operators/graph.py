@@ -422,15 +422,7 @@ def triangle_count(
     share ONE canonicalized co-occurrence relation instead of each
     re-running the scan + self-join + distinct (guide §2.3).
     """
-    if prepared:
-        und = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    else:
-        a, b = F.col(src_col).cast("long"), F.col(dst_col).cast("long")
-        und = (
-            edges.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-            .where(F.col("u").isNotNull() & (F.col("u") != F.col("v")))
-            .distinct()
-        )
+    und = _undirected_edges(edges, src_col, dst_col, prepared)
     oriented, _nodes = _oriented_edges(und)
     # checkpoint AFTER orientation: the degree-attach/orientation plan
     # shape itself is pinned on _oriented_edges in test_plans.py (the
@@ -476,6 +468,41 @@ def triangle_count(
     return nodes.join(per_node, "node", "left").select(
         "node", F.coalesce("triangles", F.lit(0).cast("long")).alias("triangles")
     )
+
+
+def _undirected_edges(
+    edges: DataFrame, src_col: str, dst_col: str, prepared: bool
+) -> DataFrame:
+    """``(u, v)`` with ``u < v``: each undirected edge once, long-typed,
+    null endpoints and self-loops dropped. ``prepared`` edges already
+    hold that form (:func:`triangle_count`, :func:`k_core`) and are
+    only renamed."""
+    if prepared:
+        return edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+    a, b = F.col(src_col).cast("long"), F.col(dst_col).cast("long")
+    return (
+        edges.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+        .where(F.col("u").isNotNull() & (F.col("u") != F.col("v")))
+        .distinct()
+    )
+
+
+def _directed_edges(
+    edges: DataFrame, src_col: str, dst_col: str, prepared: bool
+) -> DataFrame:
+    """``(src, dst)``: distinct, long-typed, non-null directed edges
+    behind a lazy localCheckpoint. ``prepared`` edges already hold
+    that form (:func:`label_propagation`, :func:`hop_distances`) and
+    are only renamed."""
+    if prepared:
+        return edges.select(
+            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+        )
+    e = edges.select(
+        F.col(src_col).cast("long").alias("src"),
+        F.col(dst_col).cast("long").alias("dst"),
+    ).where(F.col("src").isNotNull() & F.col("dst").isNotNull()).distinct()
+    return e.localCheckpoint(eager=False)
 
 
 def _oriented_edges(und: DataFrame):
@@ -551,16 +578,7 @@ def label_propagation(
     """
     if iterations < 0:
         raise ValueError("label_propagation iterations must be >= 0")
-    if prepared:
-        e = edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-    else:
-        e = edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        ).where(F.col("src").isNotNull() & F.col("dst").isNotNull()).distinct()
-        e = e.localCheckpoint(eager=False)
+    e = _directed_edges(edges, src_col, dst_col, prepared)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionAll(e.select(F.col("dst").alias("node")))
@@ -674,16 +692,7 @@ def hop_distances(
     """
     if max_hops < 0:
         raise ValueError("hop_distances max_hops must be >= 0")
-    if prepared:
-        e = edges.select(
-            F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-        )
-    else:
-        e = edges.select(
-            F.col(src_col).cast("long").alias("src"),
-            F.col(dst_col).cast("long").alias("dst"),
-        ).where(F.col("src").isNotNull() & F.col("dst").isNotNull()).distinct()
-        e = e.localCheckpoint(eager=False)
+    e = _directed_edges(edges, src_col, dst_col, prepared)
     dists = (
         seeds.select(F.col(seed_col).cast("long").alias("node"))
         .where(F.col("node").isNotNull())
@@ -764,21 +773,13 @@ def k_core(
         raise ValueError("k_core k must be >= 0")
     if rounds is not None and rounds < 0:
         raise ValueError("k_core rounds must be >= 0 (or None for to-convergence)")
-    if prepared:
-        # the triangle_count/label_propagation contract (r19): the
-        # caller holds a distinct, non-null, long-typed u < v edge
-        # list, already checkpointed — graph_suite shares ONE
-        # canonicalized co-occurrence relation across its triangle
-        # and k-core facets (guide §2.3)
-        und = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    else:
-        a, b = F.col(src_col).cast("long"), F.col(dst_col).cast("long")
-        und = (
-            edges.select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-            .where(F.col("u").isNotNull() & (F.col("u") != F.col("v")))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+    # prepared: the triangle_count contract (r19) — the caller holds a
+    # distinct, non-null, long-typed u < v edge list, already
+    # checkpointed; graph_suite shares ONE canonicalized co-occurrence
+    # relation across its triangle and k-core facets (guide §2.3)
+    und = _undirected_edges(edges, src_col, dst_col, prepared)
+    if not prepared:
+        und = und.localCheckpoint(eager=False)
     if rounds is not None:
         for _ in range(rounds):
             und = _kcore_round(und, k).localCheckpoint(eager=False)

@@ -31,6 +31,7 @@ splits, and exactly reproducible by a SQL oracle.
 from __future__ import annotations
 
 import math
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -46,6 +47,16 @@ def sample_key(id_col, salt: str = "") -> F.Column:
 
 #: 16^15 == 2^60: the key prefix below normalizes to [0, 2^60)
 _KEY_SPACE = 1 << 60
+
+
+def _prefix_threshold(cushion: F.Column) -> F.Column:
+    """The :func:`_key_long` threshold that keeps about ``cushion``
+    rows of a stratum of ``__m`` rows; a stratum no larger than the
+    cushion is kept whole."""
+    return (
+        F.when(F.col("__m").cast("double") <= cushion, F.lit(_KEY_SPACE))
+        .otherwise(F.ceil(cushion / F.col("__m") * F.lit(float(_KEY_SPACE))))
+    )
 
 
 def _key_long(id_col, salt: str) -> F.Column:
@@ -86,11 +97,7 @@ def stratified_sample(
 
     counts = df.groupBy(strat.alias("__s")).agg(F.count(F.lit(1)).alias("__m"))
     thr = counts.select(
-        "__s",
-        "__m",
-        F.when(F.col("__m") <= F.lit(cushion), F.lit(_KEY_SPACE))
-        .otherwise(F.ceil(F.lit(cushion) / F.col("__m") * F.lit(float(_KEY_SPACE))))
-        .alias("__t"),
+        "__s", "__m", _prefix_threshold(F.lit(cushion)).alias("__t")
     ).localCheckpoint(eager=False)  # O(strata) rows; one corpus scan, reused below
 
     def survivors(threshold_table: DataFrame) -> DataFrame:
@@ -102,23 +109,9 @@ def stratified_sample(
             .where((klong <= F.col("__t")) | klong.isNull())
         )
 
-    # certify: ≥ min(N, |stratum|) survivors per stratum, else the
-    # true top-N might cross the threshold — re-admit those strata
-    # whole (one tiny driver-side list; probabilistically empty)
-    got = survivors(thr).groupBy("__s", "__m", "__t").agg(
-        F.count(F.lit(1)).alias("__got")
+    thr = _reopen_deficient(
+        survivors, thr, "__s", F.least(F.lit(n), F.col("__m")), F.lit(_KEY_SPACE)
     )
-    deficient = [
-        r["__s"]
-        for r in got.where(F.col("__got") < F.least(F.lit(n), F.col("__m"))).collect()
-    ]
-    if deficient:
-        hit = F.col("__s").isin([d for d in deficient if d is not None])
-        if any(d is None for d in deficient):
-            hit = hit | F.col("__s").isNull()
-        thr = thr.withColumn(
-            "__t", F.when(hit, F.lit(_KEY_SPACE)).otherwise(F.col("__t"))
-        )
 
     w = Window.partitionBy(stratum_col).orderBy(key, F.col(id_col))
     return (
@@ -127,6 +120,34 @@ def stratified_sample(
         .withColumn("sample_rank", F.row_number().over(w))
         .where(F.col("sample_rank") <= F.lit(n))
     )
+
+
+def _reopen_deficient(
+    survivors: Callable[[DataFrame], DataFrame],
+    thr: DataFrame,
+    key: str,
+    need: F.Column,
+    reopen: F.Column,
+) -> DataFrame:
+    """The survivor-count certificate of the two-phase samplers.
+
+    ``thr`` holds one row per stratum: its key column ``key``, the
+    threshold ``__t`` and the columns ``need`` reads. A stratum whose
+    ``survivors(thr)`` count falls below ``need`` might have its true
+    top rows cut by the threshold, so its ``__t`` becomes ``reopen``
+    (admit the stratum whole). Survivors form an order prefix, so a
+    stratum with enough of them holds its exact top rows. The list of
+    deficient strata is tiny and usually empty: one driver-side
+    collect.
+    """
+    got = survivors(thr).groupBy(*thr.columns).agg(F.count(F.lit(1)).alias("__got"))
+    deficient = [r[key] for r in got.where(F.col("__got") < need).collect()]
+    if not deficient:
+        return thr
+    hit = F.col(key).isin([d for d in deficient if d is not None])
+    if any(d is None for d in deficient):
+        hit = hit | F.col(key).isNull()
+    return thr.withColumn("__t", F.when(hit, reopen).otherwise(F.col("__t")))
 
 
 def uniform_sample(df: DataFrame, id_col: str, k: int, salt: str = "") -> DataFrame:
@@ -218,16 +239,7 @@ def mixture_sample(
     )
     thr = (
         counts.join(tgt, "__s")
-        .select(
-            "__s",
-            "__m",
-            "__n",
-            F.when(F.col("__m").cast("double") <= cushion, F.lit(_KEY_SPACE))
-            .otherwise(
-                F.ceil(cushion / F.col("__m") * F.lit(float(_KEY_SPACE)))
-            )
-            .alias("__t"),
-        )
+        .select("__s", "__m", "__n", _prefix_threshold(cushion).alias("__t"))
         .localCheckpoint(eager=False)  # O(strata) rows; one corpus scan
     )
 
@@ -236,22 +248,13 @@ def mixture_sample(
             (klong <= F.col("__t")) | klong.isNull()
         )
 
-    got = survivors(thr).groupBy("__s", "__m", "__n", "__t").agg(
-        F.count(F.lit(1)).alias("__got")
+    thr = _reopen_deficient(
+        survivors,
+        thr,
+        "__s",
+        F.least(F.col("__n"), F.col("__m")),
+        F.lit(_KEY_SPACE),
     )
-    deficient = [
-        r["__s"]
-        for r in got.where(
-            F.col("__got") < F.least(F.col("__n"), F.col("__m"))
-        ).collect()
-    ]
-    if deficient:
-        thr = thr.withColumn(
-            "__t",
-            F.when(F.col("__s").isin(deficient), F.lit(_KEY_SPACE)).otherwise(
-                F.col("__t")
-            ),
-        )
 
     w = Window.partitionBy(stratum_col).orderBy(key, F.col(id_col))
     return (
@@ -328,20 +331,13 @@ def per_group_top_n(
             (k2 >= F.col("__t")) | k2.isNull()
         )
 
-    got = survivors(thr_tab).groupBy("__g", "__m", "__t").agg(
-        F.count(F.lit(1)).alias("__got")
+    thr_tab = _reopen_deficient(
+        survivors,
+        thr_tab,
+        "__g",
+        F.least(F.lit(n), F.col("__m")),
+        F.lit(float("-inf")),
     )
-    deficient = [
-        r["__g"]
-        for r in got.where(F.col("__got") < F.least(F.lit(n), F.col("__m"))).collect()
-    ]
-    if deficient:
-        hit = F.col("__g").isin([d for d in deficient if d is not None])
-        if any(d is None for d in deficient):
-            hit = hit | F.col("__g").isNull()
-        thr_tab = thr_tab.withColumn(
-            "__t", F.when(hit, F.lit(float("-inf"))).otherwise(F.col("__t"))
-        )
 
     w = Window.partitionBy(group_col).orderBy(
         k2.desc_nulls_last(), F.col(id_col)

@@ -9,8 +9,6 @@ join key becomes (key, salt) — hot keys spread over R reducers.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

@@ -35,11 +35,7 @@ from data_frame_spark.operators.colnames import quoted as _qc
 
 from data_frame_spark.exact import dsum
 from data_frame_spark.session import local_frame
-from data_frame_spark.operators.distributed import (
-    with_global_rank,
-    with_lag,
-    with_running_sum,
-)
+from data_frame_spark.operators.distributed import with_global_rank, with_lag
 
 
 def weighted_stats(

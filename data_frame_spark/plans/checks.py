@@ -312,7 +312,7 @@ DECLARED_BROADCAST_OK: dict[str, list[tuple[str, str]]] = {
     # same contract, graded containment form: the broadcast side is
     # the fixed eval suite's distinct 13-gram hashes (the %50 split
     # stands in for it in the fixture) — corpus-proportional splits
-    # must pass broadcast=False (pinned in test_plans.py)
+    # go through ngram_contamination(broadcast=False) instead
     "containment_decontamination_docs": [
         (r"bench_id#\d+", "benchmark eval suite is fixed-size by contract"),
     ],
@@ -366,13 +366,13 @@ DECLARED_BROADCAST_OK: dict[str, list[tuple[str, str]]] = {
     # individually.
     # ------------------------------------------------------------------
     # bpe_encode's word→symbols lookup: broadcast only when the
-    # runtime size gate passes (auto = count on the checkpointed
-    # vocab ≤ 2M words; above the gate or with vocab_broadcast=False
-    # it is a pinned SHUFFLE_HASH join — both branches plan-tested)
+    # runtime size gate passes (count on the checkpointed vocab ≤ 2M
+    # words; above the gate it is a pinned SHUFFLE_HASH join — both
+    # branches plan-tested)
     "bpe_family": [
         (
             r"Scan ExistingRDD\[word#\d+,syms#\d+",
-            "vocab broadcast is runtime-size-gated (≤ broadcast_max_words)",
+            "vocab broadcast is runtime-size-gated (≤ BROADCAST_MAX_WORDS)",
         ),
     ],
     # the unigram LM table is TakeOrdered(vocab_size) checkpointed —

@@ -53,7 +53,7 @@ from data_frame_spark.operators import core as OpCore
 from data_frame_spark.sources import csv as CSVSrc
 from data_frame_spark.operators import lookup as OpLookup
 from data_frame_spark.operators import window as OpWindow
-from data_frame_spark.session import build_parallel, local_frame
+from data_frame_spark.session import build_parallel, load_table as t, local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -81,22 +81,6 @@ def _hexn(col: str, start: int, n: int) -> str:
         f"* CAST({16 ** (n - 1 - i)} AS BIGINT)"
         for i in range(n)
     )
-
-
-def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver table (columnar parquet scan; filters and
-    projections applied by callers push down into this scan).
-
-    ``events.ts`` (shipped either as TIMESTAMP(NANOS) or
-    timestamp[us]; see :func:`session.load_table`) is normalized to
-    ``ts_ns`` (exact nanos), ``ts_us`` (exact micros), and ``ts``
-    (micro-precision TimestampType for streaming/window use). Oracle
-    SQL uses the exact integer forms (``epoch_ns(ts)//1000``) so both
-    engines do identical integer arithmetic.
-    """
-    from data_frame_spark.session import load_table
-
-    return load_table(spark, sf_dir, name)
 
 
 # ---------------------------------------------------------------------------
@@ -4354,8 +4338,7 @@ def roundtrip_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     <time> resolution — so both round-trips are exact by
     construction. GPX/TCX are single-activity formats: the writers
     are deliberate driver-side sinks (the distributed bulk paths are
-    gpx.py/tcx.py parse_many, driven by the *_corpus_read_docs
-    rows)."""
+    gpx.py/tcx.py parse_many, driven by xml_corpus_family)."""
     from data_frame_spark.sources import gpx as GPXSrc
     from data_frame_spark.sources import tcx as TCXSrc
 
@@ -4474,9 +4457,7 @@ def haversine_track_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle twin of the GPX corpus leg — registered standalone in
-# rounds 10-12 (driver-green in CORRECTNESS_r12 after the HUGEINT
-# adjudication), merged into xml_corpus_family in round 13.
+# Oracle twins of the two xml_corpus_family legs.
 _GPX_CORPUS_ORACLE = f"""
     SELECT user_id,
            COUNT(*) AS n_points,
@@ -4494,120 +4475,6 @@ _GPX_CORPUS_ORACLE = f"""
     """
 
 
-def gpx_corpus_read_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DISTRIBUTED GPX bulk-ingest path end-to-end (df-read/gpx
-    over many files, gpx.rkt:393-446; Spark side: sources/gpx.py
-    parse_many — mapInPandas over (id, xml) rows, one parser instance
-    per Arrow batch). One synthetic GPX document per user is built
-    WITHOUT leaving the cluster: a JVM-side
-    ``array_sort(collect_list(struct(...)))`` aggregate assembles each
-    user's time-sorted track, and one batched mapInPandas pass
-    serializes it through the same track_xml writer the
-    single-activity sink uses (repr doubles + whole-second ISO-8601
-    timestamps = exact by construction), then the whole corpus flows
-    back through parse_many and aggregates per user — point count,
-    micro-quantized lat/lon/ele sums (order-independent integer
-    sums), and the time span. (Until round 18 the serializer was a
-    per-user applyInPandas group; Spark frames each group as its own
-    Arrow batch + pandas frame, and that per-group machinery alone
-    cost 2.46 s at sf0.1 with a TRIVIAL body vs 0.57 s for this
-    batched shape — the aggregate output is bit-identical because the
-    downstream sums are order-independent over the same point
-    multiset, proven by the unchanged oracle hash. array_sort ties on
-    equal timestamps break by the remaining struct fields instead of
-    pandas' stable input order; only the intermediate XML byte order
-    can differ, never the parsed multiset.) The oracle computes
-    identical aggregates straight from the events table, so any loss
-    anywhere in serialize -> parse -> explode (attribute formatting,
-    <ele> NULL handling, timestamp parsing, source_id threading)
-    breaks the hash. At 100 TB both stages are one narrow pass each:
-    documents arrive pre-partitioned, nothing but the final
-    users-sized aggregate shuffles; the collect_list is bounded by
-    the per-user track, the same bound the group carried."""
-    from data_frame_spark.sources import gpx as GPXSrc
-    import pandas as pd
-
-    ev = t(spark, sf_dir, "events").where(F.col("event_id") % 3 == 0)
-    _lat, _lon = _track_lat_lon()
-    pts = ev.select(
-        "user_id",
-        F.expr("ts_us div 1000000").cast("double").alias("timestamp"),
-        _lat.alias("lat"),
-        _lon.alias("lon"),
-        F.col("value").alias("alt"),
-    )
-
-    grouped = (
-        pts.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("timestamp", "lat", "lon", "alt"))
-            ).alias("p")
-        )
-        .select(
-            "user_id",
-            F.col("p.timestamp").alias("ts"),
-            F.col("p.lat").alias("la"),
-            F.col("p.lon").alias("lo"),
-            F.col("p.alt").alias("al"),
-        )
-    )
-
-    def build(batches):
-        for pdf in batches:
-            uids, xmls = [], []
-            for uid, ts, la, lo, al in zip(
-                pdf["user_id"], pdf["ts"], pdf["la"], pdf["lo"], pdf["al"]
-            ):
-                uid = int(uid)
-                # plain-float coercion on ALL four fields: Arrow hands
-                # back numpy scalars (NULL alt as NaN), and numpy>=2
-                # repr()s them as 'np.float64(x)' which track_xml's
-                # repr serialization (and the parser's float()) would
-                # choke on — exact no-op under numpy 1.x
-                points = [
-                    (float(a), float(b), None if pd.isna(c) else float(c), float(d))
-                    for a, b, c, d in zip(la, lo, al, ts)
-                ]
-                uids.append(uid)
-                xmls.append(GPXSrc.track_xml(points, f"user-{uid}"))
-            yield pd.DataFrame(
-                {"user_id": pd.Series(uids, dtype="int64"), "xml": xmls}
-            )
-
-    docs = grouped.mapInPandas(build, schema="user_id long, xml string")
-    track = GPXSrc.parse_many(docs.select("user_id", "xml"), "xml")
-    m = F.lit(1000000.0)
-    return (
-        track.select(
-            F.col("source_id").alias("user_id"), "timestamp", "lat", "lon", "alt"
-        )
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_points"),
-            F.sum(F.floor(F.col("lat") * m + F.lit(0.5))).alias("lat_micro_sum"),
-            F.sum(F.floor(F.col("lon") * m + F.lit(0.5))).alias("lon_micro_sum"),
-            F.count("alt").alias("n_ele"),
-            F.sum(F.floor(F.col("alt") * m + F.lit(0.5))).alias("ele_micro_sum"),
-            # BIGINT whole seconds (timestamps are whole-second by
-            # construction): removes every DOUBLE from the hashed output
-            # so a double-canonicalization difference can't flip the hash.
-            F.min("timestamp").cast("long").alias("t_min"),
-            F.max("timestamp").cast("long").alias("t_max"),
-        )
-    )
-
-
-# (The gpx_corpus_direct_docs CONTROL row — identical aggregates
-# with no XML round trip — lived here rounds 12 only. The round-12
-# gate adjudicated all three corpus rows green with the HUGEINT
-# root cause fixed, so the control was retired in round 13 per the
-# r12 verdict order #2.)
-
-
-# Oracle twin of the TCX corpus leg — registered standalone in
-# rounds 11-12 (driver-green in CORRECTNESS_r12), merged into
-# xml_corpus_family in round 13.
 _TCX_CORPUS_ORACLE = f"""
     SELECT user_id,
            COUNT(*) AS n_points,
@@ -4629,31 +4496,62 @@ _TCX_CORPUS_ORACLE = f"""
     """
 
 
-def tcx_corpus_read_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DISTRIBUTED TCX bulk-ingest path end-to-end (the
-    df-read/tcx/multiple surface, tcx.rkt:249-281; Spark side:
-    sources/tcx.py parse_many — mapInPandas over (id, xml) rows, one
-    parser per Arrow batch). Mirrors gpx_corpus_read_docs on a
-    disjoint event slice: one synthetic TCX activity per user is
-    built WITHOUT leaving the cluster (a JVM-side
-    ``array_sort(collect_list(struct(...)))`` aggregate assembles the
-    sorted track and one batched mapInPandas pass serializes it
-    through the shared tcx_xml writer — repr(float) doubles +
-    whole-second ISO-8601 times = exact by construction; the
-    per-user applyInPandas group it replaces paid Spark's per-group
-    Arrow-batch machinery, see gpx_corpus_read_docs), then the
-    corpus flows back through parse_many and
-    aggregates per user over EVERY parsed channel (lat/lon via
-    Position, alt, HeartRateBpm/Value, DistanceMeters, Time) as
-    order-independent micro-quantized integer sums. The oracle
-    computes identical aggregates straight from the events table, so
-    any loss in serialize -> parse -> explode breaks the hash. At
-    100 TB both stages are one narrow pass each; only the final
-    users-sized aggregate shuffles."""
+def _xml_corpus_leg(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
+    """One DISTRIBUTED XML bulk-ingest path end-to-end, ``fmt``
+    'gpx' (df-read/gpx over many files, gpx.rkt:393-446) or 'tcx'
+    (df-read/tcx/multiple, tcx.rkt:249-281); Spark side: the
+    format's ``parse_many`` — mapInPandas over (id, xml) rows, one
+    parser instance per Arrow batch. The GPX leg reads the event
+    slice %3==0, the TCX leg the disjoint %3==1 slice with the extra
+    HeartRateBpm/Value and DistanceMeters channels.
+
+    One synthetic document per user is built WITHOUT leaving the
+    cluster: a JVM-side ``array_sort(collect_list(struct(...)))``
+    aggregate assembles each user's time-sorted track, and one
+    batched mapInPandas pass serializes it through the same writer
+    the single-activity sink uses (``track_xml`` / ``tcx_xml``: repr
+    doubles + whole-second ISO-8601 timestamps = exact by
+    construction), then the whole corpus flows back through
+    ``parse_many`` and aggregates per user — point count,
+    micro-quantized sums of every parsed channel (order-independent
+    integer sums), and the time span. (A per-user applyInPandas
+    group would frame each group as its own Arrow batch + pandas
+    frame: that machinery alone cost 2.46 s at sf0.1 with a TRIVIAL
+    body vs 0.57 s for this batched shape. array_sort ties on equal
+    timestamps break by the remaining struct fields; only the
+    intermediate XML byte order can depend on that, never the parsed
+    multiset.) The oracle computes identical aggregates straight from
+    the events table, so any loss anywhere in serialize -> parse ->
+    explode (attribute formatting, NULL-altitude handling, timestamp
+    parsing, source_id threading) breaks the hash. At 100 TB both
+    stages are one narrow pass each: documents arrive
+    pre-partitioned, nothing but the final users-sized aggregate
+    shuffles; the collect_list is bounded by the per-user track."""
+    from data_frame_spark.sources import gpx as GPXSrc
     from data_frame_spark.sources import tcx as TCXSrc
     import pandas as pd
 
-    ev = t(spark, sf_dir, "events").where(F.col("event_id") % 3 == 1)
+    if fmt == "gpx":
+        event_slice, extra, alt = 0, {}, "ele"
+        parse_many = GPXSrc.parse_many
+
+        def serialize(uid, points):
+            return GPXSrc.track_xml(
+                [(la, lo, al, ts) for ts, la, lo, al in points], f"user-{uid}"
+            )
+    else:
+        event_slice, alt = 1, "alt"
+        extra = {
+            "hr": (F.col("user_id") % 150 + 40).cast("double"),
+            "dst": F.col("event_id").cast("double"),
+        }
+        parse_many = TCXSrc.parse_many
+
+        def serialize(uid, points):
+            return TCXSrc.tcx_xml(points, sport="Other", act_id=f"user-{uid}")
+
+    channels = ("timestamp", "lat", "lon", "alt", *extra)
+    ev = t(spark, sf_dir, "events").where(F.col("event_id") % 3 == event_slice)
     _lat, _lon = _track_lat_lon()
     pts = ev.select(
         "user_id",
@@ -4661,79 +4559,68 @@ def tcx_corpus_read_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lat.alias("lat"),
         _lon.alias("lon"),
         F.col("value").alias("alt"),
-        (F.col("user_id") % 150 + 40).cast("double").alias("hr"),
-        F.col("event_id").cast("double").alias("dst"),
+        *[c.alias(name) for name, c in extra.items()],
     )
 
     grouped = (
         pts.groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct("timestamp", "lat", "lon", "alt", "hr", "dst")
-                )
-            ).alias("p")
-        )
-        .select(
-            "user_id",
-            F.col("p.timestamp").alias("ts"),
-            F.col("p.lat").alias("la"),
-            F.col("p.lon").alias("lo"),
-            F.col("p.alt").alias("al"),
-            F.col("p.hr").alias("h"),
-            F.col("p.dst").alias("d"),
-        )
+        .agg(F.array_sort(F.collect_list(F.struct(*channels))).alias("p"))
+        .select("user_id", *[F.col(f"p.{c}").alias(c) for c in channels])
     )
 
     def build(batches):
         for pdf in batches:
             uids, xmls = [], []
-            for uid, ts, la, lo, al, h, d in zip(
-                pdf["user_id"], pdf["ts"], pdf["la"], pdf["lo"],
-                pdf["al"], pdf["h"], pdf["d"],
-            ):
+            for uid, *track in zip(pdf["user_id"], *[pdf[c] for c in channels]):
                 uid = int(uid)
+                # plain-float coercion on every field: Arrow hands
+                # back numpy scalars (NULL alt as NaN), and numpy>=2
+                # repr()s them as 'np.float64(x)' which the writers'
+                # repr serialization (and the parser's float()) would
+                # choke on — exact no-op under numpy 1.x
                 points = [
                     (
-                        float(t_),
-                        float(a),
-                        float(b),
-                        None if pd.isna(c) else float(c),
-                        float(hh),
-                        float(dd),
+                        float(ts),
+                        float(la),
+                        float(lo),
+                        None if pd.isna(al) else float(al),
+                        *[float(v) for v in more],
                     )
-                    for t_, a, b, c, hh, dd in zip(ts, la, lo, al, h, d)
+                    for ts, la, lo, al, *more in zip(*track)
                 ]
                 uids.append(uid)
-                xmls.append(
-                    TCXSrc.tcx_xml(points, sport="Other", act_id=f"user-{uid}")
-                )
+                xmls.append(serialize(uid, points))
             yield pd.DataFrame(
                 {"user_id": pd.Series(uids, dtype="int64"), "xml": xmls}
             )
 
     docs = grouped.mapInPandas(build, schema="user_id long, xml string")
-    track = TCXSrc.parse_many(docs.select("user_id", "xml"), "xml")
+    track = parse_many(docs.select("user_id", "xml"), "xml")
     m = F.lit(1000000.0)
-    return (
-        track.select(
-            F.col("source_id").alias("user_id"),
-            "timestamp", "lat", "lon", "alt", "hr", "dst",
+
+    def micro_sum(c: str, name: str | None = None) -> F.Column:
+        return F.sum(F.floor(F.col(c) * m + F.lit(0.5))).alias(
+            f"{name or c}_micro_sum"
         )
+
+    out = (
+        track.select(F.col("source_id").alias("user_id"), *channels)
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
-            F.sum(F.floor(F.col("lat") * m + F.lit(0.5))).alias("lat_micro_sum"),
-            F.sum(F.floor(F.col("lon") * m + F.lit(0.5))).alias("lon_micro_sum"),
-            F.count("alt").alias("n_alt"),
-            F.sum(F.floor(F.col("alt") * m + F.lit(0.5))).alias("alt_micro_sum"),
-            F.sum(F.floor(F.col("hr") * m + F.lit(0.5))).alias("hr_micro_sum"),
-            F.sum(F.floor(F.col("dst") * m + F.lit(0.5))).alias("dst_micro_sum"),
-            # BIGINT whole seconds — see gpx_corpus_read_docs.
+            micro_sum("lat"),
+            micro_sum("lon"),
+            F.count("alt").alias(f"n_{alt}"),
+            micro_sum("alt", alt),
+            *[micro_sum(c) for c in extra],
+            # BIGINT whole seconds (timestamps are whole-second by
+            # construction): removes every DOUBLE from the hashed output
+            # so a double-canonicalization difference can't flip the hash.
             F.min("timestamp").cast("long").alias("t_min"),
             F.max("timestamp").cast("long").alias("t_max"),
         )
     )
+    return out.select(F.lit(fmt).alias("facet"), *out.columns)
 
 
 _XML_CORPUS_FAMILY_ORACLE = f"""
@@ -4759,10 +4646,8 @@ _XML_CORPUS_FAMILY_ORACLE = f"""
 
 @query("xml_corpus_family", oracle=_XML_CORPUS_FAMILY_ORACLE)
 def xml_corpus_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both DISTRIBUTED XML bulk-ingest paths end-to-end on one row —
-    facets 'gpx' and 'tcx' (round-13 merge of gpx_corpus_read_docs +
-    tcx_corpus_read_docs, both driver-green in CORRECTNESS_r12 after
-    the round-12 HUGEINT adjudication):
+    """Both DISTRIBUTED XML bulk-ingest paths end-to-end on one row,
+    facets 'gpx' and 'tcx' (see :func:`_xml_corpus_leg`):
 
     - 'gpx': one synthetic GPX per user (event slice %3==0)
       serialized in-cluster through track_xml, read back through
@@ -4775,17 +4660,9 @@ def xml_corpus_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     together). At 100 TB each leg is serialize + parse as two narrow
     passes; only the final users-sized aggregates shuffle, and the
     union is plan-level (no extra exchange)."""
-    g = gpx_corpus_read_docs(spark, sf_dir).select(
-        F.lit("gpx").alias("facet"), "user_id", "n_points",
-        "lat_micro_sum", "lon_micro_sum", "n_ele", "ele_micro_sum",
-        "t_min", "t_max",
+    u = _xml_corpus_leg(spark, sf_dir, "gpx").unionByName(
+        _xml_corpus_leg(spark, sf_dir, "tcx"), allowMissingColumns=True
     )
-    x = tcx_corpus_read_docs(spark, sf_dir).select(
-        F.lit("tcx").alias("facet"), "user_id", "n_points",
-        "lat_micro_sum", "lon_micro_sum", "n_alt", "alt_micro_sum",
-        "hr_micro_sum", "dst_micro_sum", "t_min", "t_max",
-    )
-    u = g.unionByName(x, allowMissingColumns=True)
     # t_min/t_max last, as in the oracle
     last = ("t_min", "t_max")
     return u.select(*[c for c in u.columns if c not in last], *last)

@@ -29,13 +29,11 @@ def read_binary_dir(
     spark: SparkSession,
     path: str,
     glob: str | None = None,
-    recursive: bool = True,
 ) -> DataFrame:
-    """Read a directory of files as (path, modificationTime, length,
-    content) rows via the built-in ``binaryFile`` source."""
-    reader = spark.read.format("binaryFile")
+    """Read a directory tree of files (subdirectories included) as
+    (path, modificationTime, length, content) rows via the built-in
+    ``binaryFile`` source."""
+    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
     if glob is not None:
         reader = reader.option("pathGlobFilter", glob)
-    if recursive:
-        reader = reader.option("recursiveFileLookup", "true")
     return reader.load(path)

@@ -18,9 +18,9 @@ from __future__ import annotations
 
 import xml.etree.ElementTree as ET
 from datetime import datetime, timezone
-from typing import Iterator
+from typing import Callable, Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -167,29 +167,37 @@ def parse_gpx_rows(xml_text: str) -> tuple[list[dict], dict]:
     return rows, props
 
 
-def read_gpx(spark: SparkSession, path_or_text: str) -> Frame:
-    """``df-read/gpx``: GPX -> Frame ordered by timestamp, with the
-    ``dst`` series derived when absent."""
+def _document(path_or_text: str) -> str:
+    """``path_or_text`` itself when it is XML text, else the contents
+    of the file it names."""
     if path_or_text.lstrip().startswith("<"):
-        text = path_or_text
-    else:
-        with open(path_or_text) as fh:
-            text = fh.read()
-    rows, props = parse_gpx_rows(text)
+        return path_or_text
+    with open(path_or_text) as fh:
+        return fh.read()
+
+
+def _track_frame(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """Parsed track rows as a ``GPX_SCHEMA`` DataFrame without the
+    series no row carries (the reference only adds series it saw).
+    ONE aggregate job counts every column, not a count job per column
+    (round-9 perf fix: the per-column probes dominated the whole read
+    at ~10 scheduler round-trips for a driver-side single-activity
+    file)."""
     df = spark.createDataFrame(
         [tuple(r[f.name] for f in GPX_SCHEMA.fields) for r in rows], GPX_SCHEMA
     )
-    # drop never-present optional series (mirrors the reference,
-    # which only adds series it saw) — ONE aggregate job for all
-    # columns, not a count job per column (round-9 perf fix: the
-    # per-column probes dominated the whole read at ~10 scheduler
-    # round-trips for a driver-side single-activity file)
     counts = df.agg(
         *[F.count(F.col(c)).alias(c) for c in df.columns]
     ).collect()[0]
-    present = {c for c in df.columns if counts[c] > 0}
-    df = df.select(*[c for c in df.columns if c in present])
-    if "dst" not in df.columns and {"lat", "lon", "timestamp"} <= present:
+    return df.select(*[c for c in df.columns if counts[c] > 0])
+
+
+def read_gpx(spark: SparkSession, path_or_text: str) -> Frame:
+    """``df-read/gpx``: GPX -> Frame ordered by timestamp, with the
+    ``dst`` series derived when absent."""
+    rows, props = parse_gpx_rows(_document(path_or_text))
+    df = _track_frame(spark, rows)
+    if "dst" not in df.columns and {"lat", "lon", "timestamp"} <= set(df.columns):
         df = df.withColumn(
             "dst", cumulative_distance("lat", "lon", order_by=["timestamp"])
         )
@@ -254,6 +262,19 @@ def parse_many(df, xml_col: str, id_col: str | None = None):
     defaults to the FIRST column (the historical contract — but a
     caller passing extra or reordered columns would silently thread
     wrong source_ids, round-11 advisory, so name it)."""
+    return _bulk_parse(df, xml_col, id_col, lambda text: parse_gpx_rows(text)[0])
+
+
+def _bulk_parse(
+    df: DataFrame,
+    xml_col: str,
+    id_col: str | None,
+    doc_rows: Callable[[str], list[dict]],
+) -> DataFrame:
+    """The bulk-ingest loop shared by the GPX and TCX ``parse_many``:
+    ``doc_rows`` turns one document into its ``GPX_SCHEMA`` row
+    dicts, and every row of a document carries that document's id as
+    ``source_id``."""
     import pandas as pd
 
     if id_col is None:
@@ -270,7 +291,7 @@ def parse_many(df, xml_col: str, id_col: str | None = None):
         for pdf in batches:
             out, sids = [], []
             for sid, xml_text in zip(pdf[id_col], pdf[xml_col]):
-                rows, _ = parse_gpx_rows(xml_text)
+                rows = doc_rows(xml_text)
                 sids.extend([int(sid)] * len(rows))
                 out.extend(rows)
             # columnar construction — one list comprehension per

@@ -42,16 +42,15 @@ def read_jsonl(
     spark: SparkSession,
     path: str,
     schema: T.StructType | None = None,
-    keep_corrupt: bool = True,
 ) -> DataFrame:
-    """Read a JSONL corpus. With ``keep_corrupt`` the returned frame
+    """Read a JSONL corpus. With a ``schema`` the returned frame
     carries ``_corrupt_record`` (NULL for clean rows; the raw line
     for malformed ones) — filter/quarantine downstream. Passing
     ``schema=None`` infers (exploration only; extra full pass)."""
     if schema is None:
         return spark.read.json(path)
     full = schema
-    if keep_corrupt and CORRUPT_COL not in [f.name for f in schema.fields]:
+    if CORRUPT_COL not in [f.name for f in schema.fields]:
         full = T.StructType(
             list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
         )
@@ -63,7 +62,8 @@ def read_jsonl(
     )
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write as JSONL; null fields serialized explicitly so writes
-    round-trip (see module docstring)."""
-    df.write.mode(mode).option("ignoreNullFields", "false").json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Write as JSONL, replacing any output at ``path``; null fields
+    serialized explicitly so writes round-trip (see module
+    docstring)."""
+    df.write.mode("overwrite").option("ignoreNullFields", "false").json(path)

@@ -8,9 +8,8 @@ stripe/row-group level, hive partition pruning — through Spark's
 built-in ``orc`` data source (no extra packages).
 
 Scale notes: repartition by the hive partition columns before the
-write (avoids the tasks × partitions small-files explosion), split
-giant partitions with ``maxRecordsPerFile``, and read back with
-directory-pruning filters.
+write (avoids the tasks × partitions small-files explosion), and
+read back with directory-pruning filters.
 """
 
 from __future__ import annotations
@@ -23,10 +22,9 @@ def write_orc(
     df: DataFrame,
     path: str,
     partition_cols: list[str] | None = None,
-    mode: str = "overwrite",
-    max_records_per_file: int | None = None,
 ) -> None:
-    """Write an (optionally hive-partitioned) ORC table.
+    """Write an (optionally hive-partitioned) ORC table, replacing
+    any table at ``path``.
 
     With ``partition_cols``, rows are repartitioned on the partition
     key first so each hive partition is produced by as few write
@@ -35,11 +33,9 @@ def write_orc(
     """
     if partition_cols:
         out = df.repartition(*[F.col(c) for c in partition_cols])
-        writer = out.write.mode(mode).partitionBy(*partition_cols)
+        writer = out.write.mode("overwrite").partitionBy(*partition_cols)
     else:
-        writer = df.write.mode(mode)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
+        writer = df.write.mode("overwrite")
     writer.orc(path)
 
 

@@ -11,10 +11,16 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
 
 from data_frame_spark.frame import Frame
-from data_frame_spark.sources.gpx import iso_to_seconds, GPX_SCHEMA
+from data_frame_spark.sources.gpx import (
+    GPX_SCHEMA,
+    _bulk_parse,
+    _document,
+    _float,
+    _track_frame,
+    iso_to_seconds,
+)
 
 _NS = {"t": "http://www.garmin.com/xmlschemas/TrainingCenterDatabase/v2"}
 
@@ -31,13 +37,6 @@ _Q_ACTIVITY = (
     "{http://www.garmin.com/xmlschemas/TrainingCenterDatabase/v2}Activity"
 )
 _Q_LAP = "{http://www.garmin.com/xmlschemas/TrainingCenterDatabase/v2}Lap"
-
-
-def _float(el):
-    try:
-        return float(el.text) if el is not None and el.text else None
-    except ValueError:
-        return None
 
 
 def _parse_trackpoint(tp) -> dict:
@@ -111,12 +110,7 @@ def _parse_activity(act) -> tuple[list[dict], dict]:
 def read_tcx_multiple(spark: SparkSession, path_or_text: str) -> list[Frame]:
     """``df-read/tcx/multiple`` (tcx.rkt:249-281): one Frame per
     activity."""
-    if path_or_text.lstrip().startswith("<"):
-        text = path_or_text
-    else:
-        with open(path_or_text) as fh:
-            text = fh.read()
-    root = ET.fromstring(text)
+    root = ET.fromstring(_document(path_or_text))
     frames = []
     # root skip: iter() also yields a matching root — restore
     # findall's descendant-only contract for Activity fragments
@@ -125,18 +119,9 @@ def read_tcx_multiple(spark: SparkSession, path_or_text: str) -> list[Frame]:
         if act is root:
             continue
         rows, props = _parse_activity(act)
-        df = spark.createDataFrame(
-            [tuple(r[f.name] for f in GPX_SCHEMA.fields) for r in rows], GPX_SCHEMA
+        frames.append(
+            Frame(_track_frame(spark, rows), properties=props, order_by=["timestamp"])
         )
-        from pyspark.sql import functions as F
-
-        # one aggregate job for all columns, not a count job per
-        # column (same round-9 perf fix as sources/gpx.py read_gpx)
-        counts = df.agg(
-            *[F.count(F.col(c)).alias(c) for c in df.columns]
-        ).collect()[0]
-        df = df.select(*[c for c in df.columns if counts[c] > 0])
-        frames.append(Frame(df, properties=props, order_by=["timestamp"]))
     return frames
 
 
@@ -195,10 +180,8 @@ def tcx_xml(points, sport: str = "Other", act_id: str = "activity") -> str:
 
 def parse_tcx_rows(xml_text: str):
     """All track rows of every Activity in one TCX document,
-    concatenated in document order — the exact per-document loop
-    :func:`parse_many` runs per batch, exposed so a caller fusing
-    serialize+parse into one Python task (xml_corpus_family, r18
-    optimization) parses with the identical code path."""
+    concatenated in document order — the per-document row function
+    :func:`parse_many` runs on each document of a batch."""
     root = ET.fromstring(xml_text)
     out = []
     # root skip: iter() also yields a matching root — restore
@@ -223,32 +206,4 @@ def parse_many(df, xml_col: str, id_col: str | None = None):
     column (historical contract — a caller passing extra or
     reordered columns would silently thread wrong source_ids,
     round-11 advisory, so name it)."""
-    import pandas as pd
-
-    if id_col is None:
-        id_col = df.columns[0]
-    df = df.select(id_col, xml_col)
-
-    schema = T.StructType(
-        [T.StructField("source_id", T.LongType())] + list(GPX_SCHEMA.fields)
-    )
-
-    field_names = [f.name for f in GPX_SCHEMA.fields]
-
-    def parse(batches):
-        for pdf in batches:
-            out, sids = [], []
-            for sid, xml_text in zip(pdf[id_col], pdf[xml_col]):
-                rows = parse_tcx_rows(xml_text)
-                sids.extend([int(sid)] * len(rows))
-                out.extend(rows)
-            # columnar construction — one list comprehension per
-            # field instead of two fresh dicts per row + pandas'
-            # list-of-dicts column extraction (r18 optimization,
-            # same shape as sources/gpx.py parse_many)
-            data = {"source_id": sids}
-            for name in field_names:
-                data[name] = [r[name] for r in out]
-            yield pd.DataFrame(data, columns=[f.name for f in schema.fields])
-
-    return df.mapInPandas(parse, schema=schema)
+    return _bulk_parse(df, xml_col, id_col, parse_tcx_rows)

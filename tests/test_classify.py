@@ -77,12 +77,3 @@ def test_classifier_rejects_empty_weights(spark):
     with pytest.raises(ValueError):
         linear_text_classifier(df, "text", "doc_id", [])
 
-
-def test_bpe_encode_rejects_unknown_gate_string(spark):
-    # any string other than exactly "auto" is truthy and would
-    # silently FORCE the vocabulary broadcast (round-12 review finding)
-    from data_frame_spark.operators.bpe import bpe_encode
-
-    df = spark.createDataFrame([(1, "the the")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        bpe_encode(df, [("t", "h")], vocab_broadcast="Auto")

@@ -93,6 +93,20 @@ def test_exp_fit_runs(spark, lsq_frames):
     assert fit.coefficients[1] > 0  # growth direction
 
 
+def test_exp_fit_annealing_never_worsens_residual(spark, lsq_frames):
+    # the annealing search starts at the closed-form fit and keeps its
+    # best state, so its residual can only match or beat the closed form
+    closed = Fit.least_squares_fit(
+        lsq_frames, "base", "exp", mode="exp", residual=True
+    )
+    annealed = Fit.least_squares_fit(
+        lsq_frames, "base", "exp", mode="exp", annealing=True, iterations=10,
+        residual=True,
+    )
+    assert annealed.type == "exponential"
+    assert annealed.residual <= closed.residual
+
+
 def test_linear_fit_df_matches_scalar(spark, lsq_frames):
     row = Fit.linear_fit_df(lsq_frames, "base", "linear").collect()[0]
     fit = Fit.least_squares_fit(lsq_frames, "base", "linear", mode="linear")

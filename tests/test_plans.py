@@ -751,7 +751,9 @@ def test_classifier_rejects_vocab_window(spark, sf_dir):
     assert C.data_sized_partitionless_windows(ranked) != []
 
 
-def test_bpe_encode_broadcasts_vocab_no_corpus_shuffle_for_join(spark, sf_dir):
+def test_bpe_encode_broadcasts_vocab_no_corpus_shuffle_for_join(
+    spark, sf_dir, monkeypatch
+):
     # encode's join of the posexploded corpus against the word->syms
     # map must be a broadcast (the map is vocabulary-bounded), with
     # the only corpus-sized exchanges being the id-keyed reassembly
@@ -759,6 +761,7 @@ def test_bpe_encode_broadcasts_vocab_no_corpus_shuffle_for_join(spark, sf_dir):
     # the word stream for the lookup itself
     import os
 
+    from data_frame_spark.operators import bpe
     from data_frame_spark.operators.bpe import bpe_encode
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
@@ -771,15 +774,12 @@ def test_bpe_encode_broadcasts_vocab_no_corpus_shuffle_for_join(spark, sf_dir):
     # past broadcast practicality must fall back to a pinned
     # SHUFFLE_HASH equi-join on the word — never a broadcast of a
     # 10^8-row distinct-token table, never a sort-merge surprise
-    enc2 = bpe_encode(docs, [("t", "h")], vocab_broadcast=False)
+    monkeypatch.setattr(bpe, "BROADCAST_MAX_WORDS", 1)
+    enc2 = bpe_encode(docs, [("t", "h")])
     plan2 = C.simple_plan(enc2)
     assert "ShuffledHashJoin" in plan2
     assert C.count_shuffles(enc2) <= 6
     assert not C.data_sized_partitionless_windows(enc2)
-    # the auto gate trips to the same shuffle plan when the count
-    # exceeds the cap
-    enc3 = bpe_encode(docs, [("t", "h")], broadcast_max_words=1)
-    assert "ShuffledHashJoin" in C.simple_plan(enc3)
 
 
 def test_duplicate_spans_prechk_shuffle_semi_no_broadcast(spark, sf_dir):
@@ -823,12 +823,10 @@ def test_linear_classifier_is_single_shuffle_map_side(spark, sf_dir):
 
 
 def test_containment_broadcast_contract_and_partitioned_window(spark, sf_dir):
-    # same tri-state join contract as ngram_contamination: True
-    # broadcasts the fixed eval suite's hash set (corpus n-grams drop
-    # map-side), False pins a SHUFFLE_HASH equi-join for
-    # corpus-proportional "benchmarks"; the per-doc n-gram total is a
-    # doc-PARTITIONED window on the distinct relation (never
-    # partitionless, never a second corpus scan)
+    # the fixed eval suite's hash set is broadcast (corpus n-grams
+    # drop map-side); the per-doc n-gram total is a doc-PARTITIONED
+    # window on the distinct relation (never partitionless, never a
+    # second corpus scan)
     import os
 
     from data_frame_spark.operators.dedup import contamination_containment
@@ -839,12 +837,6 @@ def test_containment_broadcast_contract_and_partitioned_window(spark, sf_dir):
     out = contamination_containment(docs, bench, "text", "doc_id", n=13)
     assert "BroadcastHashJoin" in C.simple_plan(out)
     assert not C.data_sized_partitionless_windows(out)
-    out2 = contamination_containment(
-        docs, bench, "text", "doc_id", n=13, broadcast=False
-    )
-    plan2 = C.simple_plan(out2)
-    assert "ShuffledHashJoin" in plan2
-    assert not C.data_sized_partitionless_windows(out2)
 
 
 def test_triangle_count_plan_is_oriented_and_broadcast_free(spark, sf_dir):

@@ -3,11 +3,17 @@
 A top-level ``def`` or ``class`` in ``data_frame_spark/`` must be
 referenced from another package module, from its own module outside
 its own body, or from ``bench.py``, ``__spark_entry__.py``, ``tools/``
-or ``perfbench/``. A reference is a name, an attribute, an import
-alias or a string literal equal to the name; docstrings do not count.
-A def decorated with ``@query`` is a registry row, reached through
-``QUERIES``. Tests are not roots: code that only tests call is dead
-weight unless ``KEPT`` names it with a reason.
+or ``perfbench/``. Inside its own module a reference is a name, an
+attribute, an import alias or a string literal equal to the def's
+name; from anywhere else only the last three count, because a bare
+name there is a local binding (a parameter, a variable) that merely
+shares the spelling. Docstrings do not count. A def decorated with
+``@query`` is a registry row, reached through ``QUERIES``. Tests are
+not roots: code that only tests call is dead weight unless ``KEPT``
+names it with a reason.
+
+Every module-level import in a package module (``__init__.py``
+aside, which re-exports) must bind a name its module uses.
 
 Pure ``ast``: no Spark session, runs in about a second.
 """
@@ -70,15 +76,18 @@ def _docstrings(tree: ast.AST) -> set[int]:
     return out
 
 
-def _refs(nodes: list[ast.AST], docstrings: set[int]) -> set[str]:
-    """Names, attributes, import aliases and non-docstring string
-    literals anywhere under ``nodes``."""
+def _refs(
+    nodes: list[ast.AST], docstrings: set[int], names: bool = True
+) -> set[str]:
+    """Attributes, import aliases, non-docstring string literals and,
+    with ``names``, bare names anywhere under ``nodes``."""
     out: set[str] = set()
     stack = list(nodes)
     while stack:
         node = stack.pop()
         if isinstance(node, ast.Name):
-            out.add(node.id)
+            if names:
+                out.add(node.id)
         elif isinstance(node, ast.Attribute):
             out.add(node.attr)
         elif isinstance(node, ast.alias):
@@ -103,14 +112,14 @@ def unreachable() -> dict[str, int]:
     """``module:name`` -> line, for every top-level package def that
     nothing outside its own body references."""
     trees = {p: ast.parse(p.read_text()) for p in sorted(PKG.rglob("*.py"))}
-    refs_of = {p: _refs([t], _docstrings(t)) for p, t in trees.items()}
+    refs_of = {p: _refs([t], _docstrings(t), names=False) for p, t in trees.items()}
     outside = [ROOT / "bench.py", ROOT / "__spark_entry__.py",
                *sorted((ROOT / "tools").rglob("*.py")),
                *sorted((ROOT / "perfbench").rglob("*.py"))]
     external: set[str] = set()
     for p in outside:
         t = ast.parse(p.read_text())
-        external |= _refs([t], _docstrings(t))
+        external |= _refs([t], _docstrings(t), names=False)
     out = {}
     for p, tree in trees.items():
         others = external.union(*(r for q, r in refs_of.items() if q != p))
@@ -139,3 +148,34 @@ def test_kept_entries_are_current(unreachable):
         "KEPT entries that are now reachable or no longer exist "
         f"(drop them from KEPT): {stale}"
     )
+
+
+def _module_imports(tree: ast.Module):
+    """(bound name, line) for every import statement at module level,
+    including those under a module-level ``if`` or ``try``."""
+    stack = list(tree.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for a in node.names:
+                yield a.asname or a.name.split(".")[0], node.lineno
+        elif isinstance(node, (ast.If, ast.Try)):
+            for field in ("body", "orelse", "finalbody", "handlers"):
+                stack.extend(getattr(node, field, []))
+        elif isinstance(node, ast.ExceptHandler):
+            stack.extend(node.body)
+
+
+def test_every_module_import_is_used():
+    unused = []
+    for p in sorted(PKG.rglob("*.py")):
+        if p.name == "__init__.py":
+            continue
+        tree = ast.parse(p.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        mod = ".".join(p.relative_to(PKG).with_suffix("").parts)
+        unused += [f"{mod}:{name} (line {line})"
+                   for name, line in _module_imports(tree) if name not in used]
+    assert not unused, f"module-level imports their module never uses: {sorted(unused)}"

@@ -250,7 +250,7 @@ def test_ngram_contamination(spark):
 
 def test_ngram_contamination_join_strategies_agree(spark):
     # the broadcast knob must change ONLY the physical join, never the
-    # result: True / False / 'auto' all produce the same pairs
+    # result: True / False produce the same pairs
     span = " ".join(f"w{i}" for i in range(13))
     corpus = spark.createDataFrame(
         [(1, f"a b c {span} d e"), (2, "no overlap here at all " * 4)],
@@ -260,7 +260,6 @@ def test_ngram_contamination_join_strategies_agree(spark):
     key = lambda df: sorted(map(tuple, df.collect()))
     expected = key(D.ngram_contamination(corpus, bench, n=13, broadcast=True))
     assert key(D.ngram_contamination(corpus, bench, n=13, broadcast=False)) == expected
-    assert key(D.ngram_contamination(corpus, bench, n=13, broadcast="auto")) == expected
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="broadcast"):
