@@ -158,6 +158,20 @@ def _bucketed(
     return b, w
 
 
+def _bucket_offsets(b: DataFrame, agg: Column) -> Column:
+    """Exclusive prefix of the per-bucket aggregate ``agg`` over
+    ``b``'s ``__bucket`` column, collected driver-side (|buckets|
+    values; an empty or NULL bucket adds 0) and inlined as a literal
+    lookup keyed by ``__bucket``."""
+    per = {r[0]: r[1] for r in b.groupBy("__bucket").agg(agg).collect()}
+    offs, acc = [], 0
+    for i in range(max(per, default=-1) + 1):
+        offs.append(acc)
+        acc += per.get(i) or 0
+    offs = offs or [0]
+    return F.element_at(F.array(*[F.lit(o) for o in offs]), F.col("__bucket") + 1)
+
+
 def with_global_rank(
     df: DataFrame,
     order_by: Sequence[str | Column],
@@ -171,17 +185,7 @@ def with_global_rank(
     whose |buckets|-long result is inlined as a literal lookup — the
     main job is then a single scan+window with no second branch."""
     b, w = _bucketed(df, order_by, n_buckets, boundaries)
-    counts = {
-        r["__bucket"]: r["__n"]
-        for r in b.groupBy("__bucket").agg(F.count(F.lit(1)).alias("__n")).collect()
-    }
-    nmax = max(counts, default=-1)
-    offs, acc = [], 0
-    for i in range(nmax + 1):
-        offs.append(acc)
-        acc += counts.get(i, 0)
-    offs = offs or [0]
-    off = F.element_at(F.array(*[F.lit(o) for o in offs]), F.col("__bucket") + 1)
+    off = _bucket_offsets(b, F.count(F.lit(1)).alias("__n"))
     return (
         b.withColumn(out, off + F.row_number().over(w))
         .drop("__bucket")
@@ -203,17 +207,7 @@ def with_running_sum(
     v = _qc(value_col) if isinstance(value_col, str) else value_col
     b, w = _bucketed(df, order_by, n_buckets)
     b = b.withColumn("__rsv", v)
-    totals = {
-        r["__bucket"]: r["__t"]
-        for r in b.groupBy("__bucket").agg(F.sum("__rsv").alias("__t")).collect()
-    }
-    nmax = max(totals, default=-1)
-    offs, acc = [], 0
-    for i in range(nmax + 1):
-        offs.append(acc)
-        acc += totals.get(i) or 0
-    offs = offs or [0]
-    off = F.element_at(F.array(*[F.lit(o) for o in offs]), F.col("__bucket") + 1)
+    off = _bucket_offsets(b, F.sum("__rsv").alias("__t"))
     run = F.sum("__rsv").over(w.rowsBetween(Window.unboundedPreceding, 0))
     return b.withColumn(out, off + run).drop("__bucket", "__rsv")
 

@@ -680,7 +680,7 @@ def hop_distances(
     the previous round read ONE reused exchange under AQE — see the
     module constant for the measured task/shuffle evidence; the
     per-round plan shape is pinned pre-checkpoint on
-    :func:`_bfs_round` in test_plans.py). The
+    :func:`_relax_round` in test_plans.py). The
     frontier is implicit (the whole dist table relaxes each round —
     at a bounded hop count the simplicity beats frontier bookkeeping;
     a diameter-scale traversal would want delta-stepping instead).
@@ -701,31 +701,28 @@ def hop_distances(
     )
     dists = dists.localCheckpoint(eager=False)
     for i in range(max_hops):
-        dists = _bfs_round(e, dists)
+        dists = _relax_round(e, dists, "hops", F.lit(1))
         if (i + 1) % _TRUNCATE_EVERY_BRANCHING == 0 and (i + 1) < max_hops:
             dists = dists.localCheckpoint(eager=False)
     return dists
 
 
-def _bfs_round(e: DataFrame, dists: DataFrame) -> DataFrame:
-    """One min-plus relaxation, PRE-checkpoint: reached in-neighbor
-    distances propagate one hop and min-merge with the running table
-    in ONE map-combinable MIN aggregate over the union (no window,
-    no driver). r19 fused shape (guide §2.1): min(min(relaxed),
-    dists) == min(relaxed ∪ dists), so the old inner per-destination
-    MIN exchange + outer merge exchange collapse into one — partial
-    MIN aggregation still combines map-side above BOTH union
-    branches, so the shuffled bytes only shrink (A/B at sf0.1,
-    bit-identical hops: 2.14 -> 1.67 s min-of-3 on the suite
-    fixture)."""
+def _relax_round(e: DataFrame, dists: DataFrame, col: str, step) -> DataFrame:
+    """One min-plus relaxation, PRE-checkpoint: each reached source's
+    ``col`` plus ``step`` (a Column over the edge row: ``F.lit(1)`` for
+    hops, ``F.col("w")`` for weights) propagates to its destination and
+    min-merges with the running table in ONE map-combinable MIN
+    aggregate over the union (no window, no driver). min(min(relaxed),
+    dists) == min(relaxed ∪ dists), so partial MIN aggregation combines
+    map-side above both union branches: one exchange per round."""
     relaxed = (
         e.join(dists, e["src"] == dists["node"])
-        .select(F.col("dst").alias("node"), (F.col("hops") + F.lit(1)).alias("hops"))
+        .select(F.col("dst").alias("node"), (F.col(col) + step).alias(col))
     )
     return (
         dists.unionByName(relaxed)
         .groupBy("node")
-        .agg(F.min("hops").alias("hops"))
+        .agg(F.min(col).alias(col))
     )
 
 
@@ -869,7 +866,7 @@ def shortest_paths(
     negative-weight raise_error fires inside the constructor's try
     block);
     the per-round plan is pinned pre-checkpoint on
-    :func:`_sssp_round` in test_plans.py. ``prepared=True``-style
+    :func:`_relax_round` in test_plans.py. ``prepared=True``-style
     canonicalization is NOT skipped here: weights arrive from
     arbitrary aggregates, so the cast/null-drop is load-bearing.
     """
@@ -913,26 +910,7 @@ def shortest_paths(
         .localCheckpoint(eager=False)
     )
     for i in range(max_rounds):
-        dists = _sssp_round(e, dists)
+        dists = _relax_round(e, dists, "dist", F.col("w"))
         if (i + 1) % _TRUNCATE_EVERY_BRANCHING == 0 and (i + 1) < max_rounds:
             dists = dists.localCheckpoint(eager=False)
     return dists
-
-
-def _sssp_round(e: DataFrame, dists: DataFrame) -> DataFrame:
-    """One weighted min-plus relaxation, PRE-checkpoint — the
-    :func:`_bfs_round` r19 FUSED shape with the weight riding the
-    edge row: relaxed costs and the running table min-merge in ONE
-    map-combinable MIN aggregate over the union (min of mins ==
-    min over the union), one exchange per round instead of two."""
-    relaxed = (
-        e.join(dists, e["src"] == dists["node"])
-        .select(
-            F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-    )
-    return (
-        dists.unionByName(relaxed)
-        .groupBy("node")
-        .agg(F.min("dist").alias("dist"))
-    )

@@ -62,6 +62,23 @@ def _safe_id(i) -> int | None:
         return None
 
 
+def _map_payloads(df: DataFrame, bin_col: str, id_col: str, row_fn, schema) -> DataFrame:
+    """One narrow Arrow-batched ``mapInPandas`` pass: ``row_fn(id,
+    payload)`` turns each row into a dict of ``schema``'s columns."""
+    cols = [f.name for f in schema.fields]
+
+    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [row_fn(i, p) for i, p in zip(pdf[id_col], pdf[bin_col])],
+                columns=cols,
+            )
+
+    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
+        extract, schema=schema
+    )
+
+
 def attach_metadata(df: DataFrame, bin_col: str, out_col: str = "meta") -> DataFrame:
     """Typed metadata struct: size, md5, sniffed format."""
     b = F.col(bin_col)
@@ -140,14 +157,9 @@ WAVEFORM_SCHEMA = T.StructType(
 
 
 def waveform_row(i, payload) -> dict:
-    """Decode ONE 16-bit PCM mono WAV payload into the
-    WAVEFORM_SCHEMA stat dict (quarantine ok=False on anything
-    else) — the per-payload body of :func:`audio_waveform_features`,
-    factored out during the r18 pack+decode fusion experiment. The
-    fusion itself was MEASURED WORSE and rejected (two pipelined
-    Python stages beat one fused — OPTIMIZATION_r18.md §3), so no
-    external fused caller exists; the helper stays as the shared,
-    separately-testable decode body."""
+    """Decode one 16-bit PCM mono WAV payload into a WAVEFORM_SCHEMA
+    dict: sample count, signed sum, absolute sum, peak |sample| and
+    strict zero crossings. Anything else comes back ``ok=False``."""
     row = {
         "doc_id": _safe_id(i), "n_samples": None, "sample_sum": None,
         "abs_sum": None, "peak_abs": None,
@@ -192,19 +204,7 @@ def audio_waveform_features(
 
     Scale shape: one narrow Arrow-batched ``mapInPandas`` pass —
     payload bytes never shuffle; a few longs per row come out."""
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                waveform_row(i, payload)
-                for i, payload in zip(pdf[id_col], pdf[bin_col])
-            ]
-            yield pd.DataFrame(
-                out, columns=[f.name for f in WAVEFORM_SCHEMA.fields]
-            )
-
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
-        extract, schema=WAVEFORM_SCHEMA
-    )
+    return _map_payloads(df, bin_col, id_col, waveform_row, WAVEFORM_SCHEMA)
 
 
 VIDEO_SCHEMA = T.StructType(
@@ -244,11 +244,9 @@ def _iter_boxes(data: bytes, start: int, end: int):
 
 
 def video_row(i, payload) -> dict:
-    """Walk ONE ISO BMFF payload into the VIDEO_SCHEMA metadata dict
-    (quarantine ok=False on non-BMFF/malformed) — the per-payload
-    body of :func:`video_metadata`, factored out like
-    :func:`waveform_row` (the r18 pack+decode fusion was measured
-    worse and rejected; no fused caller exists)."""
+    """Walk one ISO BMFF payload into a VIDEO_SCHEMA dict: major brand,
+    movie timescale and duration, and track count. Non-BMFF or
+    malformed payloads come back ``ok=False``."""
     row = {
         "doc_id": _safe_id(i), "format": None, "major_brand": None,
         "timescale": None, "duration_units": None,
@@ -305,18 +303,7 @@ def video_metadata(df: DataFrame, bin_col: str, id_col: str = "doc_id") -> DataF
 
     Scale shape: one narrow Arrow-batched ``mapInPandas`` pass —
     payload bytes never shuffle; a few longs per row come out."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                video_row(i, payload)
-                for i, payload in zip(pdf[id_col], pdf[bin_col])
-            ]
-            yield pd.DataFrame(out, columns=[f.name for f in VIDEO_SCHEMA.fields])
-
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
-        extract, schema=VIDEO_SCHEMA
-    )
+    return _map_payloads(df, bin_col, id_col, video_row, VIDEO_SCHEMA)
 
 
 IMAGE_META_SCHEMA = T.StructType(
@@ -398,6 +385,31 @@ def _parse_jpeg(data: bytes):
     return None
 
 
+def image_row(i, payload) -> dict:
+    """Parse one PNG or JPEG header into an IMAGE_META_SCHEMA dict:
+    format, width, height, bit depth and channel count. Other or
+    malformed payloads come back ``ok=False``."""
+    row = {
+        "doc_id": _safe_id(i), "format": None, "width": None,
+        "height": None, "bit_depth": None, "n_channels": None,
+        "ok": False,
+    }
+    try:
+        data = bytes(payload) if payload is not None else b""
+        parsed, fmt = _parse_png(data), "png"
+        if parsed is None:
+            parsed, fmt = _parse_jpeg(data), "jpeg"
+        if parsed is not None:
+            w, h, depth, ch = parsed
+            row.update(
+                format=fmt, width=w, height=h, bit_depth=depth,
+                n_channels=ch, ok=True,
+            )
+    except Exception:
+        pass  # quarantine row stays ok=False
+    return row
+
+
 def image_metadata(df: DataFrame, bin_col: str, id_col: str = "doc_id") -> DataFrame:
     """Image metadata over an opaque binary column — REAL (no codec
     library) for PNG (IHDR chunk: width/height/bit depth/channels
@@ -408,32 +420,4 @@ def image_metadata(df: DataFrame, bin_col: str, id_col: str = "doc_id") -> DataF
 
     Scale shape: one narrow Arrow-batched ``mapInPandas`` pass —
     payload bytes never shuffle; a few longs per row come out."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for i, payload in zip(pdf[id_col], pdf[bin_col]):
-                row = {
-                    "doc_id": _safe_id(i), "format": None, "width": None,
-                    "height": None, "bit_depth": None, "n_channels": None,
-                    "ok": False,
-                }
-                try:
-                    data = bytes(payload) if payload is not None else b""
-                    parsed, fmt = _parse_png(data), "png"
-                    if parsed is None:
-                        parsed, fmt = _parse_jpeg(data), "jpeg"
-                    if parsed is not None:
-                        w, h, depth, ch = parsed
-                        row.update(
-                            format=fmt, width=w, height=h, bit_depth=depth,
-                            n_channels=ch, ok=True,
-                        )
-                except Exception:
-                    pass  # quarantine row already in place
-                out.append(row)
-            yield pd.DataFrame(out, columns=[f.name for f in IMAGE_META_SCHEMA])
-
-    return df.select(F.col(id_col), F.col(bin_col)).mapInPandas(
-        extract, schema=IMAGE_META_SCHEMA
-    )
+    return _map_payloads(df, bin_col, id_col, image_row, IMAGE_META_SCHEMA)

@@ -89,6 +89,25 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm2(a) * norm2(b))
 
 
+def _top_k(
+    scored: DataFrame, query_id_col: str, id_col: str, score_col: str, k: int,
+    ascending: bool,
+) -> DataFrame:
+    """The ``k`` best rows per query, ranked by ``score_col`` with
+    ``id_col`` ascending as the tie-break: a per-query ``row_number``
+    that WindowGroupLimit prunes map-side. Output columns: query id,
+    id, score, ``rank`` (1-based)."""
+    score = F.col(score_col)
+    w = Window.partitionBy(query_id_col).orderBy(
+        score.asc() if ascending else score.desc(), F.col(id_col).asc()
+    )
+    return (
+        scored.withColumn("__rk", F.row_number().over(w))
+        .where(F.col("__rk") <= k)
+        .select(query_id_col, id_col, score_col, F.col("__rk").alias("rank"))
+    )
+
+
 def cosine_topk(
     base: DataFrame,
     queries: DataFrame,
@@ -117,14 +136,7 @@ def cosine_topk(
         id_col,
         (dot(F.col("__bv"), F.col("__qv")) / (F.col("__bn") * F.col("__qn"))).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("__rk").alias("rank"))
-    )
+    return _top_k(scored, query_id_col, id_col, "cosine", k, ascending=False)
 
 
 def _hyperplane(dim: int, h: int) -> list[float]:
@@ -260,14 +272,7 @@ def lsh_ann_topk(
         id_col,
         (dot(F.col("__bv"), F.col("__qv")) / (F.col("__bn") * F.col("__qn"))).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("__rk").alias("rank"))
-    )
+    return _top_k(scored, query_id_col, id_col, "cosine", k, ascending=False)
 
 
 def _centroid_matrix(centroids: list[list[float]]) -> Column:
@@ -636,19 +641,12 @@ def ivf_topk(
         F.explode(probes).alias("__cell"),
     )
     joined = b.join(F.broadcast(q), "__cell")
-    out = joined.select(
+    scored = joined.select(
         query_id_col,
         id_col,
         (dot(F.col("__bv"), F.col("__qv")) / (F.col("__bn") * F.col("__qn"))).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        out.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select(query_id_col, id_col, "cosine", F.col("__rk").alias("rank"))
-    )
+    return _top_k(scored, query_id_col, id_col, "cosine", k, ascending=False)
 
 
 def embedding_near_dup(
@@ -1080,14 +1078,7 @@ def pq_adc_topk(
     scored = joined.select(
         query_id_col, id_col, _adc_dist(codebooks, "__qv").alias("adc_dist_micro2")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_dist_micro2").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select(query_id_col, id_col, "adc_dist_micro2", F.col("__rk").alias("rank"))
-    )
+    return _top_k(scored, query_id_col, id_col, "adc_dist_micro2", k, ascending=True)
 
 
 def ivf_pq_topk(
@@ -1149,11 +1140,4 @@ def ivf_pq_topk(
     scored = joined.select(
         query_id_col, id_col, _adc_dist(codebooks, "__qv").alias("adc_dist_micro2")
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_dist_micro2").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select(query_id_col, id_col, "adc_dist_micro2", F.col("__rk").alias("rank"))
-    )
+    return _top_k(scored, query_id_col, id_col, "adc_dist_micro2", k, ascending=True)

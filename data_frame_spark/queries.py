@@ -1159,15 +1159,16 @@ _BAND_UNION = " UNION ALL ".join(
 )
 def ngram_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shingle-Jaccard verification of the LSH candidates —
-    the verify stage of near-dedup (runs only on candidate pairs)."""
+    the verify stage of near-dedup (runs only on candidate pairs):
+    shingle table -> minhash -> LSH pairs -> (id_a, id_b, jaccard).
+    :func:`near_dup_clusters_docs` clusters its output."""
     from data_frame_spark.operators.text import shingle_rows
 
     docs = t(spark, sf_dir, "documents")
-    # ONE tokenize+md5 pass over the corpus (r19, guide §2.3 — the
-    # near_dup_clusters_docs shape): the checkpointed distinct shingle
-    # table feeds both the minhash signatures and the exact Jaccard
-    # verify; MIN over the distinct set equals MIN over the multiset,
-    # so signatures are unchanged
+    # ONE tokenize+md5 pass over the corpus: the checkpointed
+    # distinct shingle table feeds both the minhash signatures and
+    # the exact Jaccard verify; MIN over the distinct set equals MIN
+    # over the multiset, so signatures are unchanged
     sh = shingle_rows(docs, "text", "doc_id").distinct().localCheckpoint(eager=False)
     sigs = OpDedup.minhash_signatures(
         docs, "text", "doc_id", num_hashes=_NHASH, shingles=sh
@@ -1176,9 +1177,9 @@ def ngram_jaccard_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the candidate-pair table feeds two plan branches (the intersect
     # join and the final pair join) and itself carries the whole
     # minhash+banding pipeline — materialize it once, like the
-    # shingle table (lazy since r18: the first consumer's job
-    # materializes it; localCheckpoint blocks are
-    # ContextCleaner-reclaimed, so no session-lifetime cache leak)
+    # shingle table (lazy: the first consumer's job materializes it;
+    # localCheckpoint blocks are ContextCleaner-reclaimed, so no
+    # session-lifetime cache leak)
     pairs = pairs.localCheckpoint(eager=False)
     return OpDedup.ngram_jaccard(docs, pairs, "text", "doc_id", shingles=sh)
 
@@ -1231,23 +1232,7 @@ def near_dup_clusters_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster_size); a dedup keeps rows where doc_id == cluster_id.
     The DuckDB twin closes the same edge set with a recursive
     min-reachability CTE."""
-    from data_frame_spark.operators.text import shingle_rows
-
-    docs = t(spark, sf_dir, "documents")
-    # ONE tokenize+md5 pass over the corpus: the checkpointed
-    # distinct shingle table feeds both the minhash signatures and
-    # the exact Jaccard verify (round-6 latency fix — previously each
-    # stage re-ran the shingle pipeline; MIN over the distinct set
-    # equals MIN over the multiset, so signatures are unchanged)
-    sh = shingle_rows(docs, "text", "doc_id").distinct().localCheckpoint(eager=False)
-    sigs = OpDedup.minhash_signatures(
-        docs, "text", "doc_id", num_hashes=_NHASH, shingles=sh
-    )
-    pairs = OpDedup.lsh_candidate_pairs(sigs, "doc_id", _NHASH, _BANDS)
-    pairs = pairs.localCheckpoint(eager=False)
-    verified = OpDedup.ngram_jaccard(
-        docs, pairs, "text", "doc_id", shingles=sh
-    ).where(F.col("jaccard") >= F.lit(0.8))
+    verified = ngram_jaccard_verified(spark, sf_dir).where(F.col("jaccard") >= F.lit(0.8))
     return OpGraph.cluster_documents(verified).withColumnRenamed("id", "doc_id")
 
 
@@ -3011,20 +2996,13 @@ from data_frame_spark.streaming import windows as OpWin
     """,
 )
 def stream_windows_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time window family (streaming-capable — identical code
-    runs under readStream + watermark, tests/test_streaming.py):
-    tumbling 1h windows per event_type plus sliding 1h/15min global
-    counts (each event lands in 4 windows), union-tagged by kind."""
+    """Event-time window family: ``streaming/windows``'
+    ``tumbling_counts`` (1h windows per event_type) and
+    ``sliding_counts`` (1h/15min global counts; each event lands in 4
+    windows), union-tagged by kind. tests/test_streaming.py runs the
+    same two functions under readStream + watermark."""
     ev = t(spark, sf_dir, "events")
-    tum = (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("value_sum"))
-        .select(
-            F.lit("tumbling").alias("kind"),
-            F.col("w.start").cast("long").alias("window_start"),
-            "event_type", "n", "value_sum",
-        )
-    )
+    tum = OpWin.tumbling_counts(ev).select(F.lit("tumbling").alias("kind"), "*")
     sld = OpWin.sliding_counts(ev).select(
         F.lit("sliding").alias("kind"), "window_start", "n"
     )
@@ -3037,10 +3015,10 @@ def stream_windows_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH o AS (SELECT user_id, value, epoch_ns(ts)//1000 AS tus, ts, event_id
                FROM events),
          g AS (SELECT user_id, value, tus,
-                      -- >= : Spark's session_window is half-open [start, start+gap),
-                      -- so an event at exactly prev_ts+gap starts a NEW session
+                      -- > : Spark's session windows [ts, ts+gap] merge when they
+                      -- touch, so an event at exactly prev_ts+gap stays in the session
                       CASE WHEN tus - LAG(tus) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                                >= 1800000000 OR
+                                > 1800000000 OR
                                 LAG(tus) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
                            THEN 1 ELSE 0 END AS new_s
                FROM o),
@@ -3054,20 +3032,12 @@ def stream_windows_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def session_windows_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (30min gap) per user — Spark session_window;
-    the oracle reproduces gap-based sessionization with a cumulative
-    new-session flag."""
+    """Session windows (30min gap) per user: ``streaming/windows``'
+    ``session_counts``, which tests/test_streaming.py also runs under
+    readStream + watermark. The oracle reproduces gap-based
+    sessionization with a cumulative new-session flag."""
     ev = t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("value_sum"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("long").alias("session_start"),
-            "n",
-            "value_sum",
-        )
-    )
+    return OpWin.session_counts(ev).select("user_id", "session_start", "n", "value_sum")
 
 
 # ---------------------------------------------------------------------------
@@ -5572,7 +5542,7 @@ def graph_suite_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoints (its 3-reference round measured worse chained) — no
     windows, no data-sized
     broadcasts (pinned pre-checkpoint on
-    _oriented_edges/_lpa_round/_bfs_round/_kcore_round in
+    _oriented_edges/_lpa_round/_relax_round/_kcore_round in
     tests/test_plans.py)."""
     from data_frame_spark.operators.graph import (
         hop_distances,

@@ -164,43 +164,48 @@ def _read_parquet(spark: SparkSession, path: str):
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Load one driver table.
+def _normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Normalize ``events.ts`` to three columns: ``ts_ns`` (exact
+    nanos, BIGINT), ``ts_us`` (exact micros, BIGINT) and ``ts``
+    (micro-precision TimestampType).
 
-    ``events.ts`` has shipped as either parquet TIMESTAMP(NANOS)
-    (scanned as a raw long via ``nanosAsLong``) or plain
-    ``timestamp[us]``; both are normalized to the same three columns:
-    ``ts_ns`` (exact nanos, BIGINT), ``ts_us`` (exact micros, BIGINT)
-    and ``ts`` (micro-precision TimestampType). Oracle SQL uses
-    DuckDB ``epoch_ns(ts)``, which equals ``ts_ns`` either way.
+    ``ts`` has shipped as either parquet TIMESTAMP(NANOS) (scanned as
+    a raw long via ``nanosAsLong``) or plain ``timestamp[us]``. Oracle
+    SQL uses DuckDB ``epoch_ns(ts)``, which equals ``ts_ns`` either
+    way. Works on a batch or a streaming relation.
+    """
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    if isinstance(df.schema["ts"].dataType, LongType):
+        return (
+            df.withColumnRenamed("ts", "ts_ns")
+            .withColumn("ts_us", F.expr("ts_ns div 1000"))
+            .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+        )
+    return (
+        df.withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
+        .withColumn("ts_ns", F.col("ts_us") * F.lit(1000))
+        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+    )
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str):
+    """Load one driver table; ``events`` gets its timestamp
+    normalized (:func:`_normalize_events_ts`).
 
     The parquet schema is inferred (a Spark job) on the first load of
     each file version and cached by path, mtime and size; later loads
     pass it to the reader and start no job. Every call still returns a
     new relation, so two loads of one table can be self-joined.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
-    # epoch extraction below must not depend on the caller's session
+    # epoch extraction must not depend on the caller's session
     # timezone (TIMESTAMP_NTZ -> epoch goes through a wall-clock
     # interpretation; the stored values are UTC); nanosAsLong is
     # pinned before the schema is inferred
     pin_session(spark)
     df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        if isinstance(df.schema["ts"].dataType, LongType):
-            return (
-                df.withColumnRenamed("ts", "ts_ns")
-                .withColumn("ts_us", F.expr("ts_ns div 1000"))
-                .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-            )
-        return (
-            df.withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
-            .withColumn("ts_ns", F.col("ts_us") * F.lit(1000))
-            .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-        )
-    return df
+    return _normalize_events_ts(df) if name == "events" else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, register: bool = True):

@@ -1,11 +1,16 @@
-"""Structured Streaming windowed aggregations over the events table.
+"""Event-time window aggregations over the events table, for batch
+and Structured Streaming alike.
 
 North-star extension (SURVEY §7 Phase 6 — the reference has no
 streaming). Each aggregation is defined ONCE as a DataFrame
 transformation that works identically on a batch DataFrame and a
-streaming DataFrame (Spark's unified model); ``stream_events``
-builds the streaming source and ``run_to_memory`` drives any of
-them with an availableNow trigger for tests/demos.
+streaming DataFrame (Spark's unified model). The registry rows
+``stream_windows_hourly`` and ``session_windows_30m`` run these
+functions on the batch events table; ``stream_events`` builds the
+streaming source and ``run_to_memory`` drives any of them with an
+availableNow trigger, so tests/test_streaming.py checks stream ==
+batch on the same code. Sums go through ``exact.dsum``, like every
+float aggregate the oracle checks.
 
 Watermarking: event-time watermark bounds state for late data —
 ``with_watermark`` is applied on the streaming path only (a batch
@@ -15,25 +20,24 @@ batch sees all data).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from data_frame_spark.session import pin_session
+from data_frame_spark.exact import dsum
+from data_frame_spark.session import _normalize_events_ts, _read_parquet, pin_session
 
 
 def stream_events(spark: SparkSession, sf_dir: str, watermark: str = "1 hour") -> DataFrame:
     """Streaming source over the events parquet (file stream; in
-    production the same code points at Kafka/queue sources).
-    Normalizes the timestamp like the batch loader (both the
-    TIMESTAMP(NANOS)-as-long and timestamp[us] forms) and applies the
-    event-time watermark."""
+    production the same code points at Kafka/queue sources), with the
+    batch loader's timestamp normalization and the event-time
+    watermark."""
     pin_session(spark)
-    # a file stream needs an explicit schema: take it from the batch
-    # footer so the same code handles either shipped ts encoding
-    schema = (
-        spark.read.option("pathGlobFilter", "events.parquet").parquet(sf_dir).schema
-    )
+    # a file stream needs an explicit schema: take the batch loader's
+    # (cached) one, so the same code handles either shipped ts encoding
+    schema = _read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     # the file stream source wants a directory; glob-filter to the
     # events file (in production this is the landing directory)
     raw = (
@@ -42,21 +46,7 @@ def stream_events(spark: SparkSession, sf_dir: str, watermark: str = "1 hour") -
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        raw = (
-            raw.withColumnRenamed("ts", "ts_ns")
-            .withColumn("ts_us", F.expr("ts_ns div 1000"))
-        )
-    else:
-        raw = (
-            raw.withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
-            .drop("ts")
-            .withColumn("ts_ns", F.col("ts_us") * F.lit(1000))
-        )
-    return (
-        raw.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-        .withWatermark("ts", watermark)
-    )
+    return _normalize_events_ts(raw).withWatermark("ts", watermark)
 
 
 # -- window aggregations (batch/stream agnostic) ------------------------
@@ -67,7 +57,7 @@ def tumbling_counts(events: DataFrame, width: str = "1 hour") -> DataFrame:
     event_type."""
     return (
         events.groupBy(F.window("ts", width).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("value_sum"))
+        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("value_sum"))
         .select(
             F.col("w.start").cast("long").alias("window_start"),
             "event_type",
@@ -91,7 +81,7 @@ def session_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     within ``gap`` of the previous one."""
     return (
         events.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("value_sum"))
+        .agg(F.count(F.lit(1)).alias("n"), dsum("value").alias("value_sum"))
         .select(
             F.col("w.start").cast("long").alias("session_start"),
             "user_id",

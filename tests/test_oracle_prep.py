@@ -568,3 +568,45 @@ def test_psi_drift_oracle_matches_spark(spark, sf_dir, con):
     assert all(0 < r[-1] < 500_000 for r in got)
     assert got == want
 
+
+def test_session_windows_oracle_matches_spark_at_the_gap_edge(spark, tmp_path):
+    # Spark's session windows merge when they touch: u1's events at
+    # 0 s and exactly 1,800 s (the 30-minute gap) form ONE session,
+    # u2's at 0 s and 1,801 s form two. The shipped tables have no
+    # gap of exactly 1,800 s, so this edge needs its own table.
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    epoch = dt.datetime(2024, 1, 1)
+    rows = [(1, "u1", 0), (2, "u1", 1800), (3, "u2", 0), (4, "u2", 1801)]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([r[0] for r in rows], pa.int64()),
+                "ts": pa.array(
+                    [epoch + dt.timedelta(seconds=r[2]) for r in rows],
+                    pa.timestamp("us"),
+                ),
+                "user_id": [r[1] for r in rows],
+                "value": pa.array([1.0] * len(rows), pa.float64()),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    out = Q.QUERIES["session_windows_30m"](spark, str(tmp_path))
+    got = sorted(tuple(r) for r in out.collect())
+    c = duckdb.connect()
+    try:
+        c.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path / 'events.parquet'}'")
+        want = sorted(c.execute(Q.ORACLE["session_windows_30m"]).fetchall())
+    finally:
+        c.close()
+    start = int(epoch.replace(tzinfo=dt.timezone.utc).timestamp())
+    assert got == [
+        ("u1", start, 2, 2.0),
+        ("u2", start, 1, 1.0),
+        ("u2", start + 1801, 1, 1.0),
+    ]
+    assert got == want

@@ -311,7 +311,7 @@ def test_unigram_lm_broadcasts_model_two_data_shuffles(spark, sf_dir):
     assert not C.data_sized_partitionless_windows(df)
     # one corpus shuffle (per-doc sum) + two single-row sums over the
     # checkpointed, vocab-sized count table — never a corpus re-scan
-    data, tiny = C.shuffle_census(df)
+    data, tiny, _guard = C.shuffle_census(df)
     assert data <= 3, (data, tiny)
     assert plan.count("FileScan") == 1
 
@@ -364,7 +364,7 @@ def test_incremental_dedup_store_never_shuffles(spark, sf_dir):
     assert plan.count("BroadcastHashJoin") >= 2  # semi probe + anti join
     # the only data shuffles are batch-keyed (canonical agg + the
     # probe-set dedup); the store side streams into the semi probe
-    data, _tiny = C.shuffle_census(df)
+    data, _tiny, _guard = C.shuffle_census(df)
     assert data <= 2, data
     assert not C.data_sized_partitionless_windows(df)
 
@@ -597,10 +597,10 @@ def test_guard_census_is_structural(spark, sf_dir):
     from data_frame_spark.operators.distributed import ensure_parallelism
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    data, _tiny, guard = C.shuffle_census3(ensure_parallelism(docs.coalesce(1)))
+    data, _tiny, guard = C.shuffle_census(ensure_parallelism(docs.coalesce(1)))
     assert (data, guard) == (0, 1)
     agg = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).repartition(8)
-    data, _tiny, guard = C.shuffle_census3(agg)
+    data, _tiny, guard = C.shuffle_census(agg)
     assert guard == 0 and data == 2  # groupBy exchange + the repartition
 
 
@@ -661,7 +661,7 @@ def test_concat_pack_uses_bucketed_running_sum(spark, sf_dir):
     # stream, and only the bucket-keyed data shuffle moves rows
     df = QUERIES["pack_chunks_256"](spark, sf_dir)
     assert not C.data_sized_partitionless_windows(df)
-    data, tiny = C.shuffle_census(df)
+    data, tiny, _guard = C.shuffle_census(df)
     assert data <= 2, f"data shuffles {data}"
 
 
@@ -691,7 +691,7 @@ def test_grid_quantiles_sketch_plan(spark, sf_dir):
     df = QUERIES["grid_quantiles_price"](spark, sf_dir)
     assert C.uses_broadcast_join(df)
     assert C.data_sized_partitionless_windows(df) == []
-    data, tiny = C.shuffle_census(df)
+    data, tiny, _guard = C.shuffle_census(df)
     # 2 data shuffles (range agg, bin-count agg) + 1 exchange of the
     # aggregate-sized bin table itself (≤ groups x bins rows — bounded
     # by construction, though the census's tiny-rule only recognizes
@@ -721,7 +721,7 @@ def test_robust_outliers_scoring_is_broadcast(spark, sf_dir):
     df = QUERIES["robust_outliers_value"](spark, sf_dir)
     assert C.uses_broadcast_join(df)
     assert C.data_sized_partitionless_windows(df) == []
-    data, tiny = C.shuffle_census(df)
+    data, tiny, _guard = C.shuffle_census(df)
     assert data <= 2, (data, tiny)
 
 
@@ -927,7 +927,7 @@ def test_bfs_round_is_vertex_keyed_min_merge(spark, sf_dir):
     # the union of relaxed + running distances (r19: min of mins ==
     # min over the union, one exchange per round) — no window, no
     # forced broadcast
-    from data_frame_spark.operators.graph import _bfs_round
+    from data_frame_spark.operators.graph import _relax_round
     from pyspark.sql import functions as F
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -945,7 +945,7 @@ def test_bfs_round_is_vertex_keyed_min_merge(spark, sf_dir):
         .select("node", F.lit(0).cast("long").alias("hops"))
     )
     with C.scale_planner(spark):
-        rnd = _bfs_round(e, dists)
+        rnd = _relax_round(e, dists, "hops", F.lit(1))
         assert C.broadcasts_for_query("__bfs_round__", rnd) == []
         plan = C.simple_plan(rnd)
     assert "Window" not in plan
@@ -998,10 +998,10 @@ def test_rollup_family_is_expand_plus_one_aggregate_per_facet(spark, sf_dir):
 
 def test_sssp_round_is_vertex_keyed_min_merge(spark, sf_dir):
     # one weighted min-plus relaxation (pinned PRE-checkpoint, the
-    # _bfs_round shape with the weight riding the edge row): a
+    # hop-count shape with the weight riding the edge row): a
     # dists⋈edges equi-join, a map-combinable MIN on the destination,
     # and the union min-merge — no window, no forced broadcast
-    from data_frame_spark.operators.graph import _sssp_round
+    from data_frame_spark.operators.graph import _relax_round
     from pyspark.sql import functions as F
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -1019,7 +1019,7 @@ def test_sssp_round_is_vertex_keyed_min_merge(spark, sf_dir):
         .select("node", F.lit(0).cast("long").alias("dist"))
     )
     with C.scale_planner(spark):
-        rnd = _sssp_round(e, dists)
+        rnd = _relax_round(e, dists, "dist", F.col("w"))
         assert C.broadcasts_for_query("__sssp_round__", rnd) == []
         plan = C.simple_plan(rnd)
     assert "Window" not in plan

@@ -52,11 +52,8 @@ KEPT = {
     "plans.checks:data_sized_broadcasts": "plan-inspection helper",
     "plans.checks:has_pushed_filter": "plan-inspection helper",
     "plans.checks:read_schema_columns": "plan-inspection helper",
-    "plans.checks:shuffle_census": "plan-inspection helper",
-    # Streaming twins behind the streaming-capable window rows.
+    # Streaming source and driver for the stream==batch tests.
     "streaming.windows:stream_events": "streaming source for the stream==batch parity tests",
-    "streaming.windows:tumbling_counts": "streaming twin of stream_windows_hourly's tumbling leg",
-    "streaming.windows:session_counts": "streaming twin of session_windows_30m",
     "streaming.windows:run_to_memory": "drives a streaming query to a batch result",
     # Pipeline stage.
     "operators.dedup:exact_dedup_keys": "the exact-dedup stage of tests/test_pipeline.py",

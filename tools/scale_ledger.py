@@ -126,7 +126,7 @@ def main() -> None:
     for name, fn in QUERIES.items():
         try:
             df = fn(spark, SF_DIR)
-            sh, tiny, guard = C.shuffle_census3(df)
+            sh, tiny, guard = C.shuffle_census(df)
             pw = len(C.partitionless_for_query(name, df))
             bc = "yes" if C.uses_broadcast_join(df) else ""
             # re-plan under the 100 TB planner simulation: only
