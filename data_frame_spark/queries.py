@@ -42,6 +42,7 @@ in one ``select`` of names.
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -4175,32 +4176,40 @@ def pq_adc_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return OpSim.pq_adc_topk(codes, probe, books, k=5)
 
 
-_PREP_TMP_REGISTERED: set[str] = set()
+_TMP_LOCK = threading.Lock()
+_TMP_ROOT: str | None = None
+
+
+def _tmp_root() -> str:
+    """This process's temp root: one fresh directory under
+    ``tempfile.gettempdir()``, made on first use and removed with
+    everything in it by a single atexit handler."""
+    global _TMP_ROOT
+    with _TMP_LOCK:
+        if _TMP_ROOT is None:
+            import atexit
+            import shutil
+            import tempfile
+
+            _TMP_ROOT = tempfile.mkdtemp(prefix="dfs_")
+            atexit.register(shutil.rmtree, _TMP_ROOT, ignore_errors=True)
+        return _TMP_ROOT
 
 
 def _prep_tmp_dir(name: str, sf_dir: str, clean: bool = False) -> str:
-    """Per-process temp path for the round-trip rows: a fixed name
-    would race a concurrent run on the same fixture (overwrite deletes
-    part files under the other session's lazy scan); within one
-    process the path is stable so returned DataFrames stay readable
-    after the call; atexit removes it at interpreter exit so repeated
-    driver rounds don't accumulate directories. ``clean=True``
-    pre-clears the directory so stale files from an earlier fixture
-    shape can't leak into glob-based readers."""
-    import atexit
-    import shutil
-    import tempfile
-
+    """Temp path for a write-then-read row, under :func:`_tmp_root`.
+    The root is per process, so a concurrent run on the same fixture
+    never overwrites part files under this session's lazy scan; within
+    one process the path is stable, so returned DataFrames stay
+    readable after the call. ``clean=True`` pre-clears the directory
+    so stale files from an earlier fixture shape can't leak into
+    glob-based readers."""
     tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir)
-    path = os.path.join(tempfile.gettempdir(), f"dfs_{name}{tag}_{os.getpid()}")
+    path = os.path.join(_tmp_root(), f"{name}{tag}")
     if clean:
+        import shutil
+
         shutil.rmtree(path, ignore_errors=True)
-    # register the rmtree ONCE per path: tests call this many times in
-    # one process, and stacking a duplicate handler per call grows the
-    # atexit table for the life of the interpreter
-    if path not in _PREP_TMP_REGISTERED:
-        _PREP_TMP_REGISTERED.add(path)
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
 
 
@@ -5612,8 +5621,8 @@ def orc_roundtrip_spark(spark, sf_dir):
     reconstructed from directory names), and return the typed
     columns. ORC is binary-exact — unlike the CSV round trip there is
     no text-formatting leg — so the row pins partition-column
-    round-tripping and scan correctness. Temp path per process with
-    atexit cleanup (:func:`_prep_tmp_dir`)."""
+    round-tripping and scan correctness. Temp path under the
+    process's temp root (:func:`_prep_tmp_dir`)."""
     from data_frame_spark.sources.orc import read_orc, write_orc
 
     path = _prep_tmp_dir("orc_roundtrip", sf_dir)
@@ -5654,8 +5663,8 @@ def jsonl_roundtrip_spark(spark, sf_dir):
     through the distributed JSONL writer
     (ignoreNullFields=false so None survives) and back through the
     schema-first PERMISSIVE reader (sources/jsonl.py), corrupt column
-    asserted empty by construction. Temp path per process with atexit
-    cleanup (:func:`_prep_tmp_dir`)."""
+    asserted empty by construction. Temp path under the process's
+    temp root (:func:`_prep_tmp_dir`)."""
     from data_frame_spark.sources import jsonl as J
 
     path = _prep_tmp_dir("jsonl_roundtrip", sf_dir)
@@ -7599,9 +7608,9 @@ def binary_file_ingest(
 
     100 TB shape: the corpus write and the ingest are both narrow
     Arrow-batched passes; the per-user stats are one map-combinable
-    aggregate. The default corpus path is per-process temp (shared
-    only under local[N]) — a real cluster passes ``path`` on shared
-    storage."""
+    aggregate. The default corpus path is under the process's temp
+    root (shared only under local[N]) — a real cluster passes ``path``
+    on shared storage."""
     import tempfile
 
     import pandas as pd
@@ -7610,12 +7619,13 @@ def binary_file_ingest(
     from data_frame_spark.sources.binaryfiles import read_binary_dir
 
     # clean=True: a stale corpus from an earlier fixture shape (same
-    # PID) would otherwise survive into the *.wav glob as extra rows.
-    # An EXPLICIT path gets no rmtree and no atexit (this code must
-    # not delete storage it doesn't own) — so the caller's contract
-    # is a directory that starts empty/nonexistent and is cleaned by
-    # the caller; stale user_*.wav files there would survive into the
-    # glob exactly like the local stale-corpus case.
+    # process) would otherwise survive into the *.wav glob as extra
+    # rows. An EXPLICIT path is not under the temp root and gets no
+    # rmtree (this code must not delete storage it doesn't own) — so
+    # the caller's contract is a directory that starts
+    # empty/nonexistent and is cleaned by the caller; stale user_*.wav
+    # files there would survive into the glob exactly like the local
+    # stale-corpus case.
     if path is None:
         path = _prep_tmp_dir("binary_ingest", sf_dir, clean=True)
 

@@ -6,6 +6,18 @@ session timezone (oracle comparability), Arrow enabled for the
 Pandas-UDF paths. ``spark.sql.shuffle.partitions`` defaults to the
 local core count; on a real cluster it should be ~2-3x total cores
 (AQE coalesces the excess, so erring high is safe).
+
+PySpark's per-Column call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off: with it on,
+every ``pyspark.sql.functions`` call and ``Column`` method records its
+Python call site on the JVM for error messages, about 10 extra py4j
+round trips per call (``F.col("x")`` 13 instead of 3, ``c * c`` 11
+instead of 1). Only the Python call-site text in Spark error messages
+goes; the JVM-side query context stays. Pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+to :func:`get_spark` to turn it back on. PySpark reads the conf once
+per process, on the first wrapped call, so it must be set before the
+session's first Column is built, not later with ``spark.conf.set``.
 """
 
 from __future__ import annotations
@@ -59,6 +71,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # per-Column Python call-site capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -177,16 +191,18 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
+    # one select per encoding (each chained withColumn analyzes a new
+    # plan); column order as withColumnRenamed/withColumn would leave it
     if isinstance(df.schema["ts"].dataType, LongType):
-        return (
-            df.withColumnRenamed("ts", "ts_ns")
-            .withColumn("ts_us", F.expr("ts_ns div 1000"))
-            .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-        )
-    return (
-        df.withColumn("ts_us", F.unix_micros(F.col("ts").cast("timestamp")))
-        .withColumn("ts_ns", F.col("ts_us") * F.lit(1000))
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+        ts_us = F.expr("ts div 1000")
+        in_place = F.col("ts").alias("ts_ns")
+        added = [ts_us.alias("ts_us"), F.timestamp_micros(ts_us).alias("ts")]
+    else:
+        ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+        in_place = F.timestamp_micros(ts_us).alias("ts")
+        added = [ts_us.alias("ts_us"), (ts_us * F.lit(1000)).alias("ts_ns")]
+    return df.select(
+        *[in_place if c == "ts" else F.col(c) for c in df.columns], *added
     )
 
 

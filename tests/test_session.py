@@ -126,6 +126,7 @@ def test_nanos_events_cached_equals_uncached(spark, tmp_path):
 
     cols = ["event_id", "ts_ns", "ts_us", "ts"]
     first = S.load_table(spark, str(tmp_path), "events")
+    assert first.columns == ["event_id", "ts_ns", "user_id", "value", "ts_us", "ts"]
     cached, cached_jobs = _jobs(
         spark, lambda: S.load_table(spark, str(tmp_path), "events")
     )
@@ -136,6 +137,45 @@ def test_nanos_events_cached_equals_uncached(spark, tmp_path):
     assert got == first.select(cols).orderBy("event_id").collect()
     assert [r["ts_ns"] for r in got] == ns
     assert [r["ts_us"] for r in got] == [v // 1000 for v in ns]
+
+    # the plain timestamp[us] encoding keeps ``ts`` in place
+    us_dir = tmp_path / "us"
+    us_dir.mkdir()
+    pq.write_table(
+        table.set_column(1, "ts", table["ts"].cast(pa.timestamp("us"), safe=False)),
+        us_dir / "events.parquet",
+    )
+    us = S.load_table(spark, str(us_dir), "events")
+    assert us.columns == ["event_id", "ts", "user_id", "value", "ts_us", "ts_ns"]
+    assert us.schema == T.StructType([cached.schema[c] for c in us.columns])
+    assert [tuple(r) for r in us.select(cols).orderBy("event_id").collect()] == [
+        (r["event_id"], r["ts_us"] * 1000, r["ts_us"], r["ts"]) for r in got
+    ]
+
+
+def test_call_site_capture_is_off(spark, monkeypatch):
+    # PySpark's per-Column call-site capture sends ~10 extra py4j
+    # commands per Column call (session lookup, conf read, set and
+    # clear of the JVM-side origin); get_spark turns it off
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.errors import utils as pyspark_errors_utils
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert pyspark_errors_utils.is_debugging_enabled() is False
+
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting_send(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting_send)
+    (F.col("a") * F.lit(2)).alias("b")
+    assert sent  # the Column was built on the JVM through this path
+    assert not [
+        c for c in sent if "PySparkCurrentOrigin" in c or "getActiveSession" in c
+    ]
 
 
 ROWS = [

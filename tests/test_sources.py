@@ -66,19 +66,32 @@ def test_csv_round_trip(spark, tmp_path):
     assert rows[1]["b"] == 'quote"d'
 
 
-def test_csv_roundtrip_row_registers_one_cleanup(spark, sf_dir, monkeypatch):
-    # building the registered row repeatedly in one process must not
-    # stack an atexit rmtree handler per call for its temp directory
+def test_csv_roundtrip_row_registers_one_cleanup(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    # every write-then-read row makes its directory under one temp root
+    # per process, removed by a single atexit handler however often
+    # the rows are built; the root here is a fresh one under tmp_path,
+    # so the fake register cannot leave the real root without cleanup
     import atexit
+    import tempfile
 
-    from data_frame_spark.queries import csv_roundtrip_lineitem
+    from data_frame_spark import queries as Q
 
     calls = []
+    monkeypatch.setattr(Q, "_TMP_ROOT", None)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     monkeypatch.setattr(atexit, "register", lambda *a, **k: calls.append(a))
     for _ in range(2):
-        csv_roundtrip_lineitem(spark, sf_dir)
-    mine = [a for a in calls if "dfs_csv_roundtrip" in str(a[1:2])]
-    assert len(mine) <= 1
+        Q.csv_roundtrip_lineitem(spark, sf_dir)
+        Q.orc_roundtrip_spark(spark, sf_dir)
+    root = Q._TMP_ROOT
+    assert os.path.dirname(root) == str(tmp_path)
+    assert [a[1] for a in calls] == [root]
+    assert sorted(os.listdir(root)) == sorted(
+        os.path.basename(Q._prep_tmp_dir(n, sf_dir))
+        for n in ("csv_roundtrip", "orc_roundtrip")
+    )
 
 
 GPX_SAMPLE = """<?xml version="1.0" encoding="UTF-8"?>

@@ -8,6 +8,10 @@ For each named query (default: all), one session like bench.py's:
 - t_exec: wall time of the bench's full_row_hash materialization,
 - n_jobs: Spark jobs the (build + materialize) pair scheduled,
   counted via a per-query job group,
+- py4j: py4j commands the driver sent on any thread during the
+  (build + materialize) pair, object-release (``m``) commands left
+  out: those follow Python's garbage collection, so the count repeats
+  from run to run without them,
 - optionally (--plans DIR) the ``explain("formatted")`` text written
   to DIR/<name>_<tag>.txt.
 
@@ -20,7 +24,11 @@ from __future__ import annotations
 import json
 import os
 import sys
+import threading
 import time
+
+from py4j.clientserver import ClientServerConnection
+from py4j.protocol import MEMORY_COMMAND_NAME
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -35,6 +43,24 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: (r18 VERDICT #10: make the profiler refuse, so a session can't
 #: accidentally chase host noise)
 CALIB_MAX = 1.5
+
+
+class Py4jCounter:
+    """Counts the py4j commands sent on every thread, object releases
+    aside, by wrapping ``ClientServerConnection.send_command``."""
+
+    def __init__(self) -> None:
+        self.n = 0
+        self._lock = threading.Lock()
+        send = ClientServerConnection.send_command
+
+        def counting_send(conn, command, *args, **kwargs):
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                with self._lock:
+                    self.n += 1
+            return send(conn, command, *args, **kwargs)
+
+        ClientServerConnection.send_command = counting_send
 
 
 def main(argv: list[str]) -> None:
@@ -64,16 +90,19 @@ def main(argv: list[str]) -> None:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     calib_pre = cpu_calib()
+    py4j = Py4jCounter()
     out = {}
     for name in names:
         fn = Q.QUERIES[name]
         sc.setJobGroup(name, name)
         sc.setJobDescription(name)
+        c0 = py4j.n
         t0 = time.time()
         df = fn(spark, SF_DIR)
         t1 = time.time()
         n = materialize(df)
         t2 = time.time()
+        cmds = py4j.n - c0
         jobs = tracker.getJobIdsForGroup(name)
         sc.setJobGroup("", "")
         rec = {
@@ -81,11 +110,12 @@ def main(argv: list[str]) -> None:
             "exec": round(t2 - t1, 3),
             "total": round(t2 - t0, 3),
             "jobs": len(jobs),
+            "py4j": cmds,
             "rows": n,
         }
         out[name] = rec
         print(f"# {name}: total={rec['total']:.2f} build={rec['build']:.2f} "
-              f"exec={rec['exec']:.2f} jobs={rec['jobs']} rows={n}",
+              f"exec={rec['exec']:.2f} jobs={rec['jobs']} py4j={cmds} rows={n}",
               file=sys.stderr, flush=True)
         if plans_dir:
             txt = df._jdf.queryExecution().explainString(
