@@ -2,12 +2,13 @@
 (reference private/rdp-simplify.rkt:70-116).
 
 RDP is inherently recursive over a whole trajectory, so it cannot be
-a pure Column expression. The Spark-idiomatic formulation is
-``applyInPandas`` per trajectory group: each group (one activity,
-one device, one track) is simplified independently by a vectorized
-numpy kernel — the standard big-data trajectory-simplification
-pattern. Groups are distributed; only one trajectory must fit in a
-worker's memory at a time.
+a pure Column expression. Trajectories (one activity, one device,
+one track) are hash-distributed by group and simplified
+independently inside ``mapInPandas``; :func:`rdp_keep` simplifies
+all the trajectories of an Arrow batch in one vectorized call, a
+few numpy calls per recursion level rather than several per
+segment. Only the trajectories of one batch must fit in a worker's
+memory at a time.
 
 Semantics preserved from the reference:
 * perpendicular point-to-segment-line distance (rdp-simplify.rkt:28-38)
@@ -30,35 +31,67 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def rdp_mask(x: np.ndarray, y: np.ndarray, epsilon: float) -> np.ndarray:
-    """Boolean keep-mask for one polyline — iterative RDP (explicit
-    stack; vectorized distance per segment)."""
-    n = len(x)
-    keep = np.zeros(n, dtype=bool)
-    if n == 0:
-        return keep
-    keep[0] = keep[-1] = True
-    stack = [(0, n - 1)]
-    while stack:
-        start, stop = stack.pop()
-        if stop - start <= 1:
-            continue
-        x1, y1, x2, y2 = x[start], y[start], x[stop], y[stop]
+def rdp_keep(
+    x: np.ndarray,
+    y: np.ndarray,
+    starts: np.ndarray,
+    stops: np.ndarray,
+    epsilon: float,
+) -> np.ndarray:
+    """Keep-mask over many polylines at once, polyline ``i`` being
+    ``x[starts[i] : stops[i] + 1]`` (same for ``y``).
+
+    Both ends of every polyline are kept. Each level of the recursion
+    splits every open segment of every polyline in one vectorized
+    step, so a batch of short trajectories costs a few numpy calls per
+    level instead of several per segment. Where a segment splits
+    depends only on its own points, so the mask equals a per-segment
+    explicit-stack walk's: the same distance expression, the split
+    point is the first index at the maximum (``np.argmax``'s tie rule)
+    and a NaN distance never splits."""
+    keep = np.zeros(len(x), dtype=bool)
+    lo = np.asarray(starts, dtype=np.int64)
+    hi = np.asarray(stops, dtype=np.int64)
+    keep[lo] = True
+    keep[hi] = True
+    while True:
+        opened = hi - lo > 1
+        lo, hi = lo[opened], hi[opened]
+        if not len(lo):
+            return keep
+        inner = hi - lo - 1
+        first = np.cumsum(inner) - inner
+        seg = np.repeat(np.arange(len(lo)), inner)
+        idx = np.arange(int(inner.sum())) - first[seg] + lo[seg] + 1
+        x1, y1, x2, y2 = x[lo], y[lo], x[hi], y[hi]
         dx, dy = x2 - x1, y2 - y1
         denom = np.hypot(dx, dy)
-        xs = x[start + 1 : stop]
-        ys = y[start + 1 : stop]
-        if denom == 0.0:
-            dists = np.hypot(xs - x1, ys - y1)
-        else:
-            alpha = x2 * y1 - y2 * x1
-            dists = np.abs(dy * xs - dx * ys + alpha) / denom
-        mindex = int(np.argmax(dists)) + start + 1
-        if dists[mindex - start - 1] > epsilon:
-            keep[mindex] = True
-            stack.append((start, mindex))
-            stack.append((mindex, stop))
-    return keep
+        alpha = x2 * y1 - y2 * x1
+        xs, ys = x[idx], y[idx]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            dists = np.abs(dy[seg] * xs - dx[seg] * ys + alpha[seg]) / denom[seg]
+        point = denom[seg] == 0.0
+        if point.any():
+            dists[point] = np.hypot(
+                xs[point] - x1[seg][point], ys[point] - y1[seg][point]
+            )
+        best = np.maximum.reduceat(dists, first)
+        split = best > epsilon
+        at_best = np.flatnonzero(split[seg] & (dists == best[seg]))
+        owner = seg[at_best]
+        head = np.ones(len(at_best), dtype=bool)
+        head[1:] = owner[1:] != owner[:-1]
+        mid = idx[at_best[head]]
+        keep[mid] = True
+        lo = np.concatenate([lo[split], mid])
+        hi = np.concatenate([mid, hi[split]])
+
+
+def rdp_mask(x: np.ndarray, y: np.ndarray, epsilon: float) -> np.ndarray:
+    """Boolean keep-mask for one polyline."""
+    if len(x) == 0:
+        return np.zeros(0, dtype=bool)
+    return rdp_keep(x, y, [0], [len(x) - 1], epsilon)
 
 
 def rdp_simplify_arrays(
@@ -86,6 +119,10 @@ def rdp_simplify_arrays(
     return keep
 
 
+#: trajectory number column, added and dropped inside the Python worker
+_RUN = "__rdp_run"
+
+
 def rdp_simplify(
     df: DataFrame,
     x_col: str,
@@ -102,11 +139,20 @@ def rdp_simplify(
     gcols = list(group_by)
     schema = df.schema
 
-    def simplify(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_by, kind="mergesort")
-        mask = rdp_mask(
+    def simplify(pdf: pd.DataFrame, by: list[str]) -> pd.DataFrame:
+        # every run of equal ``by`` values (the whole frame when ``by``
+        # is empty) is one polyline, ordered by ``order_by``; one
+        # kernel call simplifies them all
+        pdf = pdf.sort_values([*by, *order_by], kind="mergesort")
+        if pdf.empty:
+            return pdf
+        keys = pdf[by].to_numpy()
+        ends = np.flatnonzero((keys[1:] != keys[:-1]).any(axis=1))
+        mask = rdp_keep(
             pdf[x_col].to_numpy(dtype=float),
             pdf[y_col].to_numpy(dtype=float),
+            np.concatenate([[0], ends + 1]),
+            np.concatenate([ends, [len(pdf) - 1]]),
             epsilon,
         )
         return pdf[mask]
@@ -118,15 +164,17 @@ def rdp_simplify(
         # trajectories); here each Arrow batch carries many whole
         # trajectories and a cross-batch carry keeps the one
         # trajectory a batch boundary splits intact. Same shuffle
-        # (hash by group), same per-trajectory kernel.
+        # (hash by group), same kernel.
         def gen(it):
             pend: pd.DataFrame | None = None
 
             def flush(pdf: pd.DataFrame) -> pd.DataFrame:
-                outs = [
-                    simplify(g) for _, g in pdf.groupby(gcols, sort=False)
-                ]
-                return pd.concat(outs) if outs else pdf.iloc[0:0]
+                # trajectories numbered in order of first appearance;
+                # a null key gets no number and its rows are dropped,
+                # as groupby drops them
+                run = pdf.groupby(gcols, sort=False).ngroup()
+                out = simplify(pdf.assign(**{_RUN: run})[run.notna()], [_RUN])
+                return out.drop(columns=_RUN)
 
             for pdf in it:
                 if pend is not None:
@@ -150,5 +198,5 @@ def rdp_simplify(
         )
     # single trajectory: still runs through the same kernel, one task
     return df.withColumn("__g", F.lit(1)).groupBy("__g").applyInPandas(
-        lambda pdf: simplify(pdf.drop(columns="__g")), schema=schema
+        lambda pdf: simplify(pdf.drop(columns="__g"), []), schema=schema
     )

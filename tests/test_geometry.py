@@ -111,6 +111,66 @@ def test_fit_spline_from_df(spark):
     assert sp(2.0) == pytest.approx(4.0, abs=1e-9)
 
 
+def _rdp_mask_stack(x, y, epsilon):
+    # reference: an explicit-stack walk, one segment at a time
+    n = len(x)
+    keep = np.zeros(n, dtype=bool)
+    if n == 0:
+        return keep
+    keep[0] = keep[-1] = True
+    stack = [(0, n - 1)]
+    while stack:
+        start, stop = stack.pop()
+        if stop - start <= 1:
+            continue
+        x1, y1, x2, y2 = x[start], y[start], x[stop], y[stop]
+        dx, dy = x2 - x1, y2 - y1
+        denom = np.hypot(dx, dy)
+        xs, ys = x[start + 1 : stop], y[start + 1 : stop]
+        if denom == 0.0:
+            dists = np.hypot(xs - x1, ys - y1)
+        else:
+            dists = np.abs(dy * xs - dx * ys + (x2 * y1 - y2 * x1)) / denom
+        m = int(np.argmax(dists)) + start + 1
+        if dists[m - start - 1] > epsilon:
+            keep[m] = True
+            stack += [(start, m), (m, stop)]
+    return keep
+
+
+def test_rdp_keep_matches_per_segment_walk():
+    # the level-by-level kernel keeps exactly the points the
+    # one-segment-at-a-time walk keeps: grid points (distance ties go
+    # to the first index), repeated points (zero-length chords) and
+    # NaNs (never split), one polyline at a time and many at once
+    rng = np.random.default_rng(7)
+    polylines = []
+    for i in range(400):
+        n = int(rng.integers(1, 40))
+        x = rng.integers(0, 6, n).astype(float)
+        y = rng.integers(0, 6, n).astype(float)
+        if i % 4 == 1:
+            x = np.sort(rng.normal(size=n)) * 100
+            y = rng.normal(size=n) * 10
+        elif i % 4 == 2:
+            y[rng.integers(0, n)] = np.nan
+        polylines.append((x, y))
+    with np.errstate(invalid="ignore"):
+        want = [_rdp_mask_stack(x, y, 1.0) for x, y in polylines]
+    for (x, y), w in zip(polylines, want):
+        assert R.rdp_mask(x, y, 1.0).tolist() == w.tolist()
+    sizes = np.array([len(x) for x, _ in polylines])
+    stops = np.cumsum(sizes) - 1
+    got = R.rdp_keep(
+        np.concatenate([x for x, _ in polylines]),
+        np.concatenate([y for _, y in polylines]),
+        stops - sizes + 1,
+        stops,
+        1.0,
+    )
+    assert got.tolist() == np.concatenate(want).tolist()
+
+
 def test_rdp_degenerate_sizes():
     # df-test.rkt:1429-1446: 0/1/2-point inputs pass through unchanged
     import numpy as np
